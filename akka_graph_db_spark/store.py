@@ -418,7 +418,8 @@ def _merge_side(
     core_schema: str,
     core_cols: tuple[str, ...],
 ) -> DataFrame:
-    """base ∪ upserts ∪ tombstones → winner-per-id by highest version.
+    """base ∪ upserts ∪ tombstones → winner-per-id by highest (version,
+    tombstone), so a delete beats an upsert of the same version.
 
     ONE shuffle (the per-id aggregation, with map-side partial ``max_by``)
     over base+deltas, independent of how many deltas are stacked — the
@@ -447,8 +448,12 @@ def _merge_side(
         ]
         parts.append(_tag(dels.select("id", *null_payload), v, True))
     merged = reduce(DataFrame.unionByName, parts)
+    # order on (_v, _del): an id both upserted and deleted in one delta
+    # (save_delta(validate=False) allows it) resolves to the delete, as
+    # in _version_diff_fused
+    order = F.struct("_v", "_del")
     winner = merged.groupBy("id").agg(
-        F.max_by(F.struct("_del", *payload), "_v").alias("_w")
+        F.max_by(F.struct("_del", *payload), order).alias("_w")
     )
     return winner.where(~F.col("_w._del")).select(
         "id", *[F.col(f"_w.{c}").alias(c) for c in payload]
@@ -1003,13 +1008,13 @@ def _version_diff_fused(
 ) -> DataFrame:
     """One-aggregation :func:`version_diff` for same-base version pairs:
     per side, union-tag [base, upserts, tombstones] once, then ONE
-    groupBy(id) computes the v_old winner (``max_by`` over versions
-    ≤ v_old — null ordering keys are ignored, so later deltas simply
-    don't participate) and the v_new winner, and the change row falls
-    out of comparing the two structs null-safely. An id is "present" at
-    a version when its winner exists and is not a tombstone — exactly
-    :func:`_merge_side`'s winner-per-id rule, so the manifest matches
-    the joined path row for row (pinned by tests)."""
+    groupBy(id) computes the v_old winner (``max_by`` on (version,
+    tombstone) over versions ≤ v_old — null ordering keys are ignored,
+    so later deltas simply don't participate) and the v_new winner, and
+    the change row falls out of comparing the two structs null-safely.
+    An id is "present" at a version when its winner exists and is not a
+    tombstone — exactly :func:`_merge_side`'s winner-per-id rule, so the
+    manifest matches the joined path row for row (pinned by tests)."""
     from functools import reduce
 
     from akka_graph_db_spark.model import EDGE_CORE_COLS, NODE_CORE_COLS
@@ -1076,11 +1081,14 @@ def _version_diff_fused(
                 )
             )
         merged = reduce(DataFrame.unionByName, parts)
+        # same (_v, _del) order as _merge_side: a same-version tie
+        # between an upsert and a delete resolves to the delete
+        order = F.struct(F.col("_v"), F.col("_s._del"))
         w = merged.groupBy("id").agg(
             F.max_by(
-                "_s", F.when(F.col("_v") <= v_old, F.col("_v"))
+                "_s", F.when(F.col("_v") <= v_old, order)
             ).alias("_o"),
-            F.max_by("_s", "_v").alias("_n"),
+            F.max_by("_s", order).alias("_n"),
         )
         p_old = F.col("_o").isNotNull() & ~F.col("_o._del")
         p_new = F.col("_n").isNotNull() & ~F.col("_n._del")

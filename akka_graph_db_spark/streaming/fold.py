@@ -26,9 +26,14 @@ sub-batches, so add→update→remove of one id inside one micro-batch lands
 correctly.
 
 At scale: each fold step is the same anti-join/union/merge plan as batch
-CRUD; snapshots should be persisted every K batches via ``store.py`` so
-lineage doesn't grow unboundedly across micro-batches (the streaming
-equivalent of the Pregel checkpoint cadence).
+CRUD. A durable fold (``store_root``) runs it on only the pre-image slice
+its batch touches. To cut that slice, a batch reads the store's latest
+version through merge-on-read (base plus stacked deltas, one shuffle per
+side) and semi-joins it with batch-sized id sets; the CRUD plan, the diff
+and the write then cover O(changes) rows. Each persist moves the fold onto
+the store's file-backed latest version, which bounds lineage the way a
+Pregel checkpoint cadence does. An in-memory fold runs on the whole
+snapshot and truncates its lineage every ``checkpoint_every`` batches.
 """
 
 from __future__ import annotations
@@ -147,25 +152,35 @@ class StreamingGraphFold:
     """Holds the evolving snapshot across micro-batches; attach `step` to
     ``writeStream.foreachBatch``.
 
-    Every step materializes the BATCH (localCheckpoint) before the
-    callback returns — a foreachBatch DataFrame is only valid inside its
-    callback, so deferring evaluation would re-read expired micro-batches
-    (fine for file sources, wrong or crashing for Kafka/rate). The
-    snapshot itself stays a lazy plan over (previous state, checkpointed
-    batch): materializing the whole graph per micro-batch is O(graph)
-    work for an O(changes) event, and was the fold's dominant cost.
-    ``checkpoint_every`` truncates the stacked CRUD lineage on a cadence;
-    base-snapshot persists and compactions additionally swap the state
-    onto the just-written parquet (same rows, file-backed scans).
+    Every step first materializes the BATCH (localCheckpoint): a
+    foreachBatch DataFrame is only valid inside its callback, so deferring
+    evaluation would re-read expired micro-batches (fine for file
+    sources, wrong or crashing for Kafka/rate).
+
+    In memory (``store_root=None``) each batch folds into the whole
+    snapshot, which stays a lazy CRUD plan over (previous state,
+    checkpointed batch); ``checkpoint_every`` truncates that stacked
+    lineage on a cadence.
 
     ``store_root`` makes the fold DURABLE: every ``store_every`` batches
-    the fold persists to the base+delta snapshot store — the first persist
-    writes a base, later ones diff against the last persisted state
-    (``store.delta_from_graphs``) and write an O(changes) delta; after
-    ``compact_every`` stacked deltas the chain is re-based. A restarted
-    fold resumes from ``store.load_snapshot(root)`` plus the streaming
-    checkpoint, and write amplification stays proportional to the mutation
-    rate instead of the graph size — the property a 100 TB graph needs.
+    it persists to the base+delta snapshot store, and after
+    ``compact_every`` stacked deltas the chain is re-based. Once the store
+    holds a version, a batch no longer folds into the whole graph but into
+    its PRE-IMAGE SLICE: the rows of the store's latest file-backed view
+    for its own node and edge ids, its added edges' endpoints, and the
+    edges incident to its removed nodes. The step checkpoints that slice
+    as ``pre`` and folds the batch into it as ``post``. The persist writes
+    ``delta_from_graphs(pre, post)`` — an O(changes) diff and write —
+    and moves the fold onto the store's new latest version. Within a
+    ``store_every`` window both slices grow: ids first touched later come
+    from the persisted view into both, and ``graph`` is that view minus
+    the ids of ``pre``, plus ``post``.
+
+    The first persist to an empty store writes the whole graph as the
+    base. A fold resumed on ``store.load_snapshot(root)`` (same plan as
+    the store's latest version) slices from its first batch; one started
+    on any other graph folds its first window into the whole graph and
+    diffs it against the store once, so that gap lands in the first delta.
     """
 
     graph: PropertyGraph
@@ -173,161 +188,138 @@ class StreamingGraphFold:
     store_root: str | None = None
     store_every: int = 1
     compact_every: int | None = None
-    # Full-snapshot localCheckpoint cadence (see step()); 0/None disables
-    # it. NOTE: plain delta persists do NOT truncate the snapshot's
-    # lineage (only the first base save and compactions swap the plan
-    # onto parquet), so keep a cadence enabled for unbounded streams —
-    # disabled, the CRUD plan stacks one layer per micro-batch until the
-    # next base/compaction and planning time grows without bound.
+    # Whole-snapshot localCheckpoint cadence for IN-MEMORY folds; 0/None
+    # disables it (the CRUD plan then stacks one layer per batch). Durable
+    # folds ignore it: each persist moves them onto file-backed scans.
     checkpoint_every: int | None = 4
+    # the store's latest version; None until the fold can slice from it
     _persisted: PropertyGraph | None = field(default=None, repr=False)
     _deltas_since_base: int = field(default=0, repr=False)
-    # Touched-id frames accumulated since the last persist (None = no
-    # commands tracked yet). The fold KNOWS which ids its mutation
-    # batches touched, so the persisted delta never needs the full-graph
-    # diff: restricting both diff sides to the touched ids makes the
-    # delta computation O(touched) joins over semi-join-pruned scans —
-    # at 100 TB the full-outer join of two whole snapshots per persist
-    # is the cost that matters, and it is avoidable by construction.
-    _touched_nodes: DataFrame | None = field(default=None, repr=False)
-    _touched_edges: DataFrame | None = field(default=None, repr=False)
+    # the window's pre-image slice and that slice after its batches
+    _pre: PropertyGraph | None = field(default=None, repr=False)
+    _post: PropertyGraph | None = field(default=None, repr=False)
+
+    def __post_init__(self) -> None:
+        from akka_graph_db_spark import store
+
+        if self.store_root is None:
+            return
+        spark = self.graph.nodes.sparkSession
+        if store.list_versions(self.store_root, spark):
+            latest = store.load_snapshot(spark, self.store_root)
+            # plan equality, no Spark job: resumed on the store's latest
+            if latest.nodes.sameSemantics(
+                self.graph.nodes
+            ) and latest.edges.sameSemantics(self.graph.edges):
+                self._persisted = latest
 
     def step(self, batch: DataFrame, batch_id: int) -> None:
-        # Materialize the BATCH, not the graph: a foreachBatch frame is
-        # only valid inside its callback, but its localCheckpoint copy
-        # survives — so the new snapshot can stay a LAZY plan over
-        # (previous state, checkpointed batch). Eagerly materializing
-        # the whole multi-million-row snapshot per micro-batch was the
-        # fold's dominant cost and is O(graph) where the batch is
-        # O(changes).
-        b = batch.orderBy("seq").localCheckpoint(eager=True)
-        if self.store_root is not None:
-            # must run BEFORE apply: node-removal cascade victims are
-            # read from the pre-apply edge frame
-            self._track_touched(b)
-        g = apply_mutation_batch(self.graph, b)
+        # no sort: run detection and the update pre-merge order by seq
+        b = batch.localCheckpoint(eager=True)
         self.batches_applied += 1
-        if (
-            self.checkpoint_every
-            and self.batches_applied % self.checkpoint_every == 0
-        ):
-            # cadence-controlled lineage truncation: without it the
-            # snapshot plan stacks one CRUD layer per micro-batch and
-            # planning time grows without bound
-            g = PropertyGraph(
-                g.nodes.localCheckpoint(eager=True),
-                g.edges.localCheckpoint(eager=True),
-            )
-        self.graph = g
+        if self._persisted is not None:
+            self._fold_slice(b)
+        else:
+            g = apply_mutation_batch(self.graph, b)
+            if (
+                self.store_root is None
+                and self.checkpoint_every
+                and self.batches_applied % self.checkpoint_every == 0
+            ):
+                g = PropertyGraph(
+                    g.nodes.localCheckpoint(eager=True),
+                    g.edges.localCheckpoint(eager=True),
+                )
+            self.graph = g
         if (
             self.store_root is not None
             and self.batches_applied % self.store_every == 0
         ):
             self._persist()
 
-    def _track_touched(self, batch: DataFrame) -> None:
-        """Accumulate the ids this batch can change: every command's own
-        id, plus — for node removals — the incident edge ids the CRUD
-        cascade will delete (two equi-semi-joins against the pre-apply
-        edge frame, never an OR-condition join; DataFrames are immutable
-        plans, so referencing ``self.graph.edges`` HERE pins the
-        pre-apply state even though evaluation happens later).
-
-        Accumulation is LAZY — plain unions, zero Spark jobs per batch;
-        _persist() distincts and materializes ONCE per persist window,
-        so touched-set maintenance is O(window), not O(window²). The
-        union/semijoin plans stay evaluable because their leaves are
-        checkpointed batches and cadence-checkpointed snapshots."""
-        b = batch.select("op", "kind", "id")
-        tn = b.where(F.col("kind") == "node").select("id")
-        te = b.where(F.col("kind") == "edge").select("id")
-        removed = b.where(
+    def _fold_slice(self, b: DataFrame) -> None:
+        """Fold batch ``b`` into the window's slices. Only equi-semi-joins
+        against the persisted view, never an OR-condition join: CRUD
+        reads command ids, added edges' endpoints and (for the removal
+        cascade) the removed nodes' incident edges, nothing else."""
+        view = self._persisted
+        cmd = b.select("op", "kind", "id", "src", "dst")
+        added = cmd.where((F.col("op") == "add") & (F.col("kind") == "edge"))
+        node_ids = cmd.where(F.col("kind") == "node").select("id")
+        edge_ids = cmd.where(F.col("kind") == "edge").select("id")
+        removed = cmd.where(
             (F.col("op") == "remove") & (F.col("kind") == "node")
         ).select(F.col("id").alias("_rid"))
         for end in ("src", "dst"):
-            te = te.unionByName(
-                self.graph.edges.join(
+            node_ids = node_ids.unionByName(
+                added.select(F.col(end).alias("id"))
+            )
+            edge_ids = edge_ids.unionByName(
+                view.edges.join(
                     removed, F.col(end) == F.col("_rid"), "left_semi"
                 ).select("id")
             )
 
-        def _acc(cur: DataFrame | None, add: DataFrame) -> DataFrame:
-            return add if cur is None else cur.unionByName(add)
+        def _pull(rows: DataFrame, ids: DataFrame, seen) -> DataFrame:
+            rows = rows.join(ids, "id", "left_semi")
+            if seen is not None:
+                # ids already in the window's pre-image are current in post
+                rows = rows.join(seen.select("id"), "id", "left_anti")
+            return rows.localCheckpoint(eager=True)
 
-        self._touched_nodes = _acc(self._touched_nodes, tn)
-        self._touched_edges = _acc(self._touched_edges, te)
+        seen = self._pre
+        pulled = PropertyGraph(
+            _pull(view.nodes, node_ids, seen and seen.nodes),
+            _pull(view.edges, edge_ids, seen and seen.edges),
+        )
+
+        def _grow(g: PropertyGraph | None) -> PropertyGraph:
+            if g is None:
+                return pulled
+            return PropertyGraph(
+                g.nodes.unionByName(pulled.nodes),
+                g.edges.unionByName(pulled.edges),
+            )
+
+        self._pre = _grow(self._pre)
+        self._post = apply_mutation_batch(_grow(self._post), b)
+        self.graph = PropertyGraph(
+            view.nodes.join(
+                self._pre.nodes.select("id"), "id", "left_anti"
+            ).unionByName(self._post.nodes),
+            view.edges.join(
+                self._pre.edges.select("id"), "id", "left_anti"
+            ).unionByName(self._post.edges),
+        )
 
     def _persist(self) -> None:
         from akka_graph_db_spark import store
 
         spark = self.graph.nodes.sparkSession
-        touched_covers_gap = True
-        if self._persisted is None:
-            if not store.list_versions(self.store_root, spark):
-                store.save_snapshot(self.graph, self.store_root)
-                # swap in the parquet-backed read of what was just
-                # written: same rows, but future evaluations scan files
-                # instead of replaying the CRUD lineage — lineage
-                # truncation for free, no extra materialization pass
-                self._persisted = store.load_snapshot(
-                    spark, self.store_root
-                )
-                self.graph = self._persisted
-                self._deltas_since_base = 0
-                self._touched_nodes = self._touched_edges = None
-                return
-            # resumed fold: diff against the store's current state — the
-            # gap between the store and this object's starting graph was
-            # never tracked, so the touched-id restriction is unsound
-            # for THIS persist only
-            self._persisted = store.load_snapshot(spark, self.store_root)
-            touched_covers_gap = False
-        if touched_covers_gap and self._touched_nodes is not None:
-            # one distinct + materialization per persist WINDOW (the
-            # accumulation in _track_touched is lazy unions only)
-            self._touched_nodes = (
-                self._touched_nodes.distinct().localCheckpoint(eager=True)
-            )
-            self._touched_edges = (
-                self._touched_edges.distinct().localCheckpoint(eager=True)
-            )
-            # O(touched) diff: ids outside the touched sets are
-            # unchanged by construction (CRUD only alters command ids +
-            # cascade victims), so both diff sides shrink to semi-joined
-            # slices and the full-outer join is over O(changes) rows.
-            # materialize the four O(changes) slices ONCE: save_delta
-            # runs one write action per delta frame, and without the
-            # barrier each action would re-scan the full snapshot plans
-            # behind the semi-joins (4 writes x 2 diff sides)
-            def _slice(frame: DataFrame, touched: DataFrame) -> DataFrame:
-                return frame.join(touched, "id", "left_semi").localCheckpoint(
-                    eager=True
-                )
-
-            old = PropertyGraph(
-                _slice(self._persisted.nodes, self._touched_nodes),
-                _slice(self._persisted.edges, self._touched_edges),
-            )
-            new = PropertyGraph(
-                _slice(self.graph.nodes, self._touched_nodes),
-                _slice(self.graph.edges, self._touched_edges),
-            )
-            delta = store.delta_from_graphs(old, new)
+        root = self.store_root
+        if self._persisted is not None:
+            old, new = self._pre, self._post
+        elif store.list_versions(root, spark):
+            # started on a graph that differs from the store: that gap
+            # was never folded, so this one delta diffs whole graphs
+            old, new = store.load_snapshot(spark, root), self.graph
         else:
-            delta = store.delta_from_graphs(self._persisted, self.graph)
-        store.save_delta(self.store_root, delta, validate=False)
-        self._persisted = self.graph
-        self._touched_nodes = self._touched_edges = None
-        self._deltas_since_base += 1
+            old = new = None
+            store.save_snapshot(self.graph, root)
+        if new is not None:
+            delta = store.delta_from_graphs(old, new)
+            store.save_delta(root, delta, validate=False)
+            self._deltas_since_base += 1
         if (
             self.compact_every is not None
             and self._deltas_since_base >= self.compact_every
         ):
-            store.compact(self.store_root, spark)
+            store.compact(root, spark)
             self._deltas_since_base = 0
-            # re-based: swap both views onto the fresh parquet base
-            self._persisted = store.load_snapshot(spark, self.store_root)
-            self.graph = self._persisted
+        # move onto the file-backed read of what was just written: same
+        # rows, and the CRUD lineage is gone
+        self._persisted = self.graph = store.load_snapshot(spark, root)
+        self._pre = self._post = None
 
     def run(self, mutation_stream: DataFrame, checkpoint_dir: str):
         """Consume an entire available stream (Trigger.AvailableNow) and

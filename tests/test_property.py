@@ -2,9 +2,15 @@
 by hypothesis; few examples because every example is a Spark job."""
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
+from pyspark.sql import DataFrame
 
-from akka_graph_db_spark.model import PropertyGraph, prop_str
+from akka_graph_db_spark.model import (
+    EDGE_CORE_COLS,
+    NODE_CORE_COLS,
+    PropertyGraph,
+    prop_str,
+)
 from akka_graph_db_spark.operators import crud, scan, traverse
 
 NODE_IDS = list(range(1, 7))
@@ -276,3 +282,253 @@ def test_containment_join_lossless(token_lists, t):
         if a != b and len(sets[a] & sets[b]) / len(sets[a]) >= t
     )
     assert got == want
+
+
+# -- durable streaming fold: slice path == whole-graph fold -------------------
+
+_FOLD_CMDS = (
+    "add_node", "add_edge", "update_node", "update_edge",
+    "remove_node", "remove_edge",
+    "add_then_remove",  # a fresh node added and removed in one batch
+    "remove_then_readd",  # an existing node removed, its id added back
+    "node_then_edge",  # an edge to a node added earlier in the batch
+)
+_BASE_EDGES = {50: (1, 2), 51: (2, 3), 52: (3, 1), 53: (4, 4), 54: (1, 5)}
+
+# a batch is a list of (command, pick, change, flag) draws; _mutation_log
+# turns the draws into commands on ids that exist at that point
+mutation_log_strategy = st.lists(
+    st.lists(
+        st.tuples(
+            st.sampled_from(_FOLD_CMDS),
+            st.integers(0, 99),
+            st.integers(0, 2),
+            st.booleans(),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+    min_size=2,
+    max_size=3,
+)
+
+
+def _mutation_log(draws):
+    """MUTATION_SCHEMA rows per batch for the abstract ``draws``."""
+    nodes = set(NODE_IDS)
+    edges = dict(_BASE_EDGES)
+    seq, fresh = iter(range(1, 10**6)), iter(range(100, 10**6))
+    batches = []
+    for batch in draws:
+        rows = []
+
+        def emit(op, kind, i, label=None, src=None, dst=None, props=None):
+            rows.append((next(seq), op, kind, i, label, src, dst, props))
+
+        def drop_node(n):
+            emit("remove", "node", n)
+            nodes.discard(n)
+            for e in [e for e, ends in edges.items() if n in ends]:
+                del edges[e]
+
+        def add_node(n, label="n"):
+            emit("add", "node", n, label, props={"k": f'"{n}"'})
+            nodes.add(n)
+
+        def add_edge(src, dst):
+            e = next(fresh)
+            emit("add", "edge", e, "e", src, dst, {"w": '"0"'})
+            edges[e] = (src, dst)
+
+        for cmd, pick, change, flag in batch:
+            ns, es = sorted(nodes), sorted(edges)
+            n = ns[pick % len(ns)] if ns else None
+            e = es[pick % len(es)] if es else None
+
+            def update(kind, i, key):
+                # set a key, delete it with a JSON null, or a no-op delete
+                props = ({key: f'"{pick}"'}, {key: "null"}, {"gone": "null"})
+                emit("update", kind, i, props=props[change])
+
+            if cmd == "add_node" or n is None:
+                add_node(next(fresh))
+            elif cmd == "add_edge":
+                add_edge(n, ns[(pick * 7 + change) % len(ns)])
+            elif cmd == "update_node":
+                update("node", n, "k")
+            elif cmd == "update_edge" and e is not None:
+                update("edge", e, "w")
+            elif cmd == "remove_node":
+                drop_node(n)
+            elif cmd == "remove_edge" and e is not None:
+                emit("remove", "edge", e)
+                del edges[e]
+            elif cmd == "add_then_remove":
+                fresh_id = next(fresh)
+                add_node(fresh_id)
+                drop_node(fresh_id)
+            elif cmd == "remove_then_readd":
+                drop_node(n)
+                add_node(n, label="r")
+            elif cmd == "node_then_edge":
+                fresh_id = next(fresh)
+                add_node(fresh_id)
+                if flag:
+                    add_edge(fresh_id, n)
+                else:
+                    add_edge(n, fresh_id)
+        batches.append(rows)
+    return batches
+
+
+def _rows(**frames):
+    """Sorted (frame name, row as JSON) pairs of all ``frames`` in one
+    Spark job; props compare as sorted entry arrays."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    tagged = [
+        df.select(
+            F.lit(name).alias("t"),
+            F.to_json(
+                F.struct(
+                    *[
+                        F.array_sort(F.map_entries(c)).alias(c)
+                        if c == "props"
+                        else c
+                        for c in df.columns
+                    ]
+                )
+            ).alias("j"),
+        )
+        for name, df in frames.items()
+    ]
+    return sorted(tuple(r) for r in reduce(DataFrame.union, tagged).collect())
+
+
+def _graph_rows(g):
+    return _rows(
+        nodes=g.nodes.select(*NODE_CORE_COLS),
+        edges=g.edges.select(*EDGE_CORE_COLS),
+    )
+
+
+def _delta_rows(d):
+    return _rows(
+        node_upserts=d.node_upserts.select(*NODE_CORE_COLS),
+        edge_upserts=d.edge_upserts.select(*EDGE_CORE_COLS),
+        node_deletes=d.node_deletes.select("id"),
+        edge_deletes=d.edge_deletes.select("id"),
+    )
+
+
+def _stored_delta_rows(spark, root, v):
+    """The rows of delta version ``v``, read back from its files."""
+    import os
+
+    from akka_graph_db_spark import store
+
+    def read(name, schema):
+        return spark.read.schema(schema).parquet(
+            os.path.join(root, f"v={v}", name)
+        )
+
+    return _delta_rows(
+        store.GraphDelta(
+            read("nodes_upserts", store.NODE_SCHEMA),
+            read("edges_upserts", store.EDGE_SCHEMA),
+            read("node_deletes", "id bigint"),
+            read("edge_deletes", "id bigint"),
+        )
+    )
+
+
+# every example folds its log four times (about a minute on 4 cores), so
+# three drawn examples plus the explicit one that covers every command
+@settings(max_examples=3, deadline=None)
+@given(draws=mutation_log_strategy)
+@example(
+    draws=[
+        [
+            ("node_then_edge", 1, 0, True),
+            ("update_node", 2, 1, False),
+            ("update_edge", 0, 2, True),
+            ("add_then_remove", 0, 0, False),
+        ],
+        [
+            ("remove_node", 0, 0, False),
+            ("remove_then_readd", 1, 0, False),
+            ("update_node", 3, 2, False),
+            ("add_edge", 2, 1, False),
+            ("remove_edge", 1, 0, False),
+        ],
+        [("update_edge", 3, 0, False), ("remove_node", 4, 0, False)],
+    ]
+)
+def test_durable_fold_matches_whole_graph_fold(draws):
+    """Every version a durable fold persists loads equal to the
+    whole-graph ``apply_mutation_batch`` fold at that point, and every
+    delta equals ``delta_from_graphs`` of the states around it, for
+    ``store_every`` in {1, 2} and ``compact_every`` in {None, 2}."""
+    import os
+    import tempfile
+
+    from akka_graph_db_spark import store
+    from akka_graph_db_spark.streaming.fold import (
+        MUTATION_SCHEMA,
+        StreamingGraphFold,
+        apply_mutation_batch,
+    )
+
+    spark = _SPARK["s"]
+    base = build(spark, [])
+    base = crud.add_edges(
+        base,
+        [(e, "e", s, d, {"w": 0}) for e, (s, d) in _BASE_EDGES.items()],
+    )
+    batches = [
+        spark.createDataFrame(rows, MUTATION_SCHEMA).localCheckpoint()
+        for rows in _mutation_log(draws)
+    ]
+    states = [base]  # the whole-graph fold after i batches
+    for b in batches:
+        g = apply_mutation_batch(states[-1], b)
+        states.append(
+            PropertyGraph(g.nodes.localCheckpoint(), g.edges.localCheckpoint())
+        )
+    want = [_graph_rows(g) for g in states]
+    diffs = {}
+
+    with tempfile.TemporaryDirectory() as tmp:
+        for store_every in (1, 2):
+            for compact_every in (None, 2):
+                root = os.path.join(tmp, f"s{store_every}c{compact_every}")
+                store.save_snapshot(base, root)
+                fold = StreamingGraphFold(
+                    store.load_snapshot(spark, root),
+                    store_root=root,
+                    store_every=store_every,
+                    compact_every=compact_every,
+                )
+                at = {0: 0}  # version -> batches folded into it
+                for i, b in enumerate(batches, 1):
+                    fold.step(b, i)
+                    for v in store.list_versions(root, spark):
+                        at.setdefault(v, i)
+                assert _graph_rows(fold.graph) == want[-1]
+                kinds = dict(store.list_version_kinds(root, spark))
+                for v, i in sorted(at.items()):
+                    got = store.load_snapshot(spark, root, version=v)
+                    assert _graph_rows(got) == want[i], (v, i)
+                    if kinds[v] == "delta":
+                        pair = (at[v - 1], i)
+                        if pair not in diffs:
+                            diffs[pair] = _delta_rows(
+                                store.delta_from_graphs(
+                                    states[pair[0]], states[i]
+                                )
+                            )
+                        assert (
+                            _stored_delta_rows(spark, root, v) == diffs[pair]
+                        ), (v, pair)

@@ -444,3 +444,39 @@ def test_version_diff_manifest(spark, tmp_path):
         ("node", 3, "removed"),
         ("node", 1, "updated"),
     ]
+
+
+def test_same_version_upsert_and_delete_resolve_to_delete(spark, tmp_path):
+    """A delta written with validate=False may hold one id in both its
+    upserts and its deletes; merge-on-read and both version_diff paths
+    must all resolve that tie the same way: the delete wins."""
+    from akka_graph_db_spark.model import PropertyGraph
+
+    nodes = spark.createDataFrame(
+        [(i, "a", {"x": '"0"'}) for i in range(1, 9)],
+        "id bigint, label string, props map<string,string>",
+    )
+    edges = spark.createDataFrame(
+        [], "id bigint, label string, src bigint, dst bigint,"
+        " props map<string,string>",
+    )
+    root = str(tmp_path / "tie")
+    store.save_snapshot(PropertyGraph(nodes, edges), root)
+    tied = list(range(1, 7))  # upserted AND deleted in v=1
+    ups = nodes.where(F.col("id").isin(tied + [7])).withColumn(
+        "props", F.create_map(F.lit("x"), F.lit('"1"'))
+    )
+    dels = spark.createDataFrame([(i,) for i in tied], "id bigint")
+    store.save_delta(
+        root,
+        store.GraphDelta(node_upserts=ups, node_deletes=dels),
+        validate=False,
+    )
+    assert ids(store.load_snapshot(spark, root).nodes) == [7, 8]
+    kinds = dict(store.list_version_kinds(root, spark))
+    rows = lambda df: [  # noqa: E731
+        (r["kind"], r["id"], r["change"]) for r in df.collect()
+    ]
+    want = [("node", i, "removed") for i in tied] + [("node", 7, "updated")]
+    assert rows(store._version_diff_fused(root, 0, 0, 1, kinds, spark)) == want
+    assert rows(store._version_diff_joined(root, 0, 1, spark)) == want

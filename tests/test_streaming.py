@@ -1,8 +1,8 @@
 """§2.6: streaming mutation fold == batch-applied CRUD."""
 
 import os
-import tempfile
 
+from akka_graph_db_spark import store
 from akka_graph_db_spark.operators import crud
 from akka_graph_db_spark.streaming.fold import (
     MUTATION_SCHEMA,
@@ -52,8 +52,8 @@ def test_same_id_updated_twice_in_one_batch(spark, micro):
     assert rows[0]["props"] == {"v": '"b"', "w": '"c"'}  # both updates land
 
 
-def test_streaming_fold_matches_batch(spark, micro):
-    tmp = tempfile.mkdtemp(prefix="fold_")
+def test_streaming_fold_matches_batch(spark, micro, tmp_path):
+    tmp = str(tmp_path)
     log_dir = os.path.join(tmp, "log")
     # 3 micro-batch files in seq order (one file per repartition slice
     # would interleave; availableNow processes files deterministically and
@@ -68,10 +68,8 @@ def test_streaming_fold_matches_batch(spark, micro):
     assert fold.batches_applied >= 1
 
 
-def test_streaming_fold_durable_deltas(spark, micro):
-    from akka_graph_db_spark import store
-
-    tmp = tempfile.mkdtemp(prefix="fold_")
+def test_streaming_fold_durable_deltas(spark, micro, tmp_path):
+    tmp = str(tmp_path)
     log_dir = os.path.join(tmp, "log")
     # one file per command => one micro-batch each (maxFilesPerTrigger=1)
     for row in LOG:
@@ -103,13 +101,51 @@ def test_streaming_fold_durable_deltas(spark, micro):
     assert any(k == "base" for _, k in kinds[1:])
 
 
-def test_durable_delta_is_o_changes(spark, micro):
-    """The persisted delta must contain ONLY the ids the mutation batches
-    touched (plus cascade victims) — never a rewrite of untouched rows.
-    Pins the touched-id-restricted diff in StreamingGraphFold._persist."""
-    from akka_graph_db_spark import store
+def _fold_batches(spark, fold, batches, tmp):
+    """Run each batch of command rows through ``fold`` as its own
+    availableNow stream."""
+    for i, rows in enumerate(batches):
+        log_dir = os.path.join(tmp, f"log{i}")
+        spark.createDataFrame(rows, MUTATION_SCHEMA).coalesce(1).write.json(
+            log_dir
+        )
+        fold.run(
+            spark.readStream.schema(MUTATION_SCHEMA).json(log_dir),
+            os.path.join(tmp, f"ckpt{i}"),
+        )
 
-    tmp = tempfile.mkdtemp(prefix="fold_oc_")
+
+def _delta_ids(spark, root, v):
+    vdir = os.path.join(root, f"v={v}")
+    return {
+        name: ids(
+            spark.read.schema("id bigint").parquet(os.path.join(vdir, name))
+        )
+        for name in (
+            "nodes_upserts", "node_deletes", "edges_upserts", "edge_deletes"
+        )
+    }
+
+
+def _incident(micro, node_id):
+    e = micro.edges
+    return sorted(
+        r["id"]
+        for r in e.where((e.src == node_id) | (e.dst == node_id)).collect()
+    )
+
+
+# update node 2 and remove node 1, cascading to its incident edges
+_UPDATE_AND_REMOVE = [
+    (2, "update", "node", 2, None, None, None, {"v": '"x"'}),
+    (3, "remove", "node", 1, None, None, None, None),
+]
+
+
+def test_durable_delta_is_o_changes(spark, micro, tmp_path):
+    """The persisted delta must contain ONLY the ids the mutation batches
+    touched (plus cascade victims) — never a rewrite of untouched rows."""
+    tmp = str(tmp_path)
     root = os.path.join(tmp, "store")
     # batch 0 -> base snapshot of micro + the added node
     b0 = [(1, "add", "node", 70, "t", None, None, {})]
@@ -119,50 +155,91 @@ def test_durable_delta_is_o_changes(spark, micro):
         (3, "remove", "node", 1, None, None, None, None),
     ]
     fold = StreamingGraphFold(micro, store_root=root, store_every=1)
-    for i, rows in enumerate((b0, b1)):
-        log_dir = os.path.join(tmp, f"log{i}")
-        spark.createDataFrame(rows, MUTATION_SCHEMA).coalesce(1).write.json(
-            log_dir
-        )
-        fold.run(
-            spark.readStream.schema(MUTATION_SCHEMA).json(log_dir),
-            os.path.join(tmp, f"ckpt{i}"),
-        )
+    _fold_batches(spark, fold, (b0, b1), tmp)
     kinds = store.list_version_kinds(root)
     assert kinds == [(0, "base"), (1, "delta")]
-    vdir = os.path.join(root, "v=1")
-    n_up = spark.read.parquet(os.path.join(vdir, "nodes_upserts"))
-    n_del = spark.read.parquet(os.path.join(vdir, "node_deletes"))
-    e_del = spark.read.parquet(os.path.join(vdir, "edge_deletes"))
-    assert ids(n_up) == [70]          # only the updated node rewrites
-    assert ids(n_del) == [1]          # only the removed node deletes
-    # micro's edges incident to node 1 cascade-delete, nothing else
-    incident = {
-        r["id"]
-        for r in micro.edges.where(
-            (micro.edges.src == 1) | (micro.edges.dst == 1)
-        ).collect()
+    incident = _incident(micro, 1)
+    assert incident
+    assert _delta_ids(spark, root, 1) == {
+        "nodes_upserts": [70],  # only the updated node rewrites
+        "node_deletes": [1],  # only the removed node deletes
+        "edges_upserts": [],
+        "edge_deletes": incident,  # the cascade, nothing else
     }
-    assert set(ids(e_del)) == incident and incident
     # and the merged read-back equals the in-memory fold state
     persisted = store.load_snapshot(spark, root)
     assert ids(persisted.nodes) == ids(fold.graph.nodes)
     assert ids(persisted.edges) == ids(fold.graph.edges)
 
 
-def test_streaming_cms_merge_equals_batch(spark):
+def test_fold_resumed_on_store_slices_first_batch(spark, micro, tmp_path):
+    """A fold started on ``store.load_snapshot(root)`` recognises the
+    store's latest version and folds its first batch into the slice that
+    batch touches: the first delta holds only the batch's ids."""
+    tmp = str(tmp_path)
+    root = os.path.join(tmp, "store")
+    store.save_snapshot(micro, root)
+    fold = StreamingGraphFold(
+        store.load_snapshot(spark, root), store_root=root
+    )
+    assert fold._persisted is not None  # slices from the first batch
+    _fold_batches(spark, fold, [_UPDATE_AND_REMOVE], tmp)
+    assert store.list_version_kinds(root) == [(0, "base"), (1, "delta")]
+    assert _delta_ids(spark, root, 1) == {
+        "nodes_upserts": [2],
+        "node_deletes": [1],
+        "edges_upserts": [],
+        "edge_deletes": _incident(micro, 1),
+    }
+    want = crud.remove_nodes_by_id(micro, [1])
+    assert ids(fold.graph.nodes) == ids(want.nodes)
+    assert ids(fold.graph.edges) == ids(want.edges)
+
+
+def test_fold_resumed_off_store_writes_gap_in_first_delta(
+    spark, micro, tmp_path
+):
+    """A fold started on a graph that differs from the store's latest
+    version writes that gap together with its first batch, so the store
+    equals ``fold.graph`` afterwards."""
+    tmp = str(tmp_path)
+    root = os.path.join(tmp, "store")
+    store.save_snapshot(micro, root)
+    # the gap: node 10 removed and node 3 updated outside the store
+    start = crud.update_nodes(
+        crud.remove_nodes_by_id(micro, [10]), {3: {"name": "CAROL"}}
+    )
+    fold = StreamingGraphFold(start, store_root=root)
+    assert fold._persisted is None  # must diff whole graphs once
+    _fold_batches(spark, fold, [_UPDATE_AND_REMOVE], tmp)
+    assert store.list_version_kinds(root) == [(0, "base"), (1, "delta")]
+    assert _delta_ids(spark, root, 1) == {
+        "nodes_upserts": [2, 3],
+        "node_deletes": [1, 10],
+        "edges_upserts": [],
+        "edge_deletes": _incident(micro, 1),
+    }
+    def rows(df):
+        return sorted(
+            (r["id"], r["label"], sorted(r["props"].items()))
+            for r in df.collect()
+        )
+
+    persisted = store.load_snapshot(spark, root)
+    assert rows(persisted.nodes) == rows(fold.graph.nodes)
+    assert rows(persisted.edges) == rows(fold.graph.edges)
+
+
+def test_streaming_cms_merge_equals_batch(spark, tmp_path):
     """CMS counters ADD: the sketch accumulated over N micro-batches is
     bit-identical to the batch sketch of the same rows, and estimates
     for in-corpus terms are >= exact counts."""
-    import os
-    import tempfile
-
     from akka_graph_db_spark.functions import search
     from akka_graph_db_spark.streaming.sketch import StreamingCMS
 
     rows = [(t,) for t in ["a"] * 5 + ["b"] * 3 + ["c"] * 2]
     df = spark.createDataFrame(rows, "term string")
-    tmp = tempfile.mkdtemp(prefix="scms_t_")
+    tmp = str(tmp_path)
     src = os.path.join(tmp, "src")
     df.repartition(3).write.parquet(src)
     stream = (
@@ -190,19 +267,16 @@ def test_streaming_cms_merge_equals_batch(spark):
     assert est["a"] >= 5 and est["b"] >= 3 and est["c"] >= 2
 
 
-def test_streaming_hll_merge_equals_batch(spark):
+def test_streaming_hll_merge_equals_batch(spark, tmp_path):
     """HLL registers merge by MAX: streamed registers == batch registers
     bit-for-bit, so the estimate is identical too."""
-    import os
-    import tempfile
-
     from akka_graph_db_spark.functions import search
     from akka_graph_db_spark.streaming.sketch import StreamingHLL
 
     from pyspark.sql import functions as F
 
     df = spark.range(0, 300).select(F.col("id").alias("v"))
-    tmp = tempfile.mkdtemp(prefix="shll_t_")
+    tmp = str(tmp_path)
     src = os.path.join(tmp, "src")
     df.repartition(3).write.parquet(src)
     stream = (
