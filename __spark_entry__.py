@@ -109,6 +109,18 @@ _DEC_SUM = "CAST(SUM(CAST({col} AS DECIMAL(30,2))) AS DOUBLE)"
 _GRAPH_CACHE: dict = {}
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp dir, removed when the process exits (query results
+    may read their staged files lazily until then)."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _g(spark: SparkSession, sf_dir: str):
     ensure_query_conf(spark)
     # applicationId is unique per context — id() can be reused after GC,
@@ -116,10 +128,7 @@ def _g(spark: SparkSession, sf_dir: str):
     key = (spark.sparkContext.applicationId, sf_dir)
     g = _GRAPH_CACHE.get(key)
     if g is None:
-        import atexit
         import os as _os
-        import shutil
-        import tempfile
 
         from akka_graph_db_spark import store
 
@@ -136,8 +145,7 @@ def _g(spark: SparkSession, sf_dir: str):
                     graph_from_tpch(spark, sf_dir), root, columns="all"
                 )
         else:
-            root = tempfile.mkdtemp(prefix="spark_graft_graph_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            root = _scratch_dir("spark_graft_graph_")
             store.save_snapshot(
                 graph_from_tpch(spark, sf_dir), root, columns="all"
             )
@@ -1827,10 +1835,6 @@ def q_store_delta_merge(spark, sf_dir):
     max_by merge. Verifies the merged view equals applying the mutations
     directly — the Delta-Lake-style answer to the reference's Neo4j store
     writes (Neo4jGraph.scala:150-154)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
 
     g = _g(spark, sf_dir).core()
@@ -1838,8 +1842,7 @@ def q_store_delta_merge(spark, sf_dir):
         g, {CUSTOMER_BASE + 1: {"mktsegment": "DELTA", "name": None}}
     )
     g2 = crud.remove_nodes_by_id(g2, [SUPPLIER_BASE + 1])
-    root = tempfile.mkdtemp(prefix="spark_graft_delta_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_delta_")
     store.save_snapshot(g, root)
     store.save_delta(
         root, store.delta_from_graphs(g, g2), validate=False
@@ -1869,10 +1872,6 @@ def q_store_time_travel(spark, sf_dir):
     1's mktsegment before/after. The reference mutates Neo4j in place
     (SET/DELETE, Neo4jGraph.scala:406-490) — historical states are
     gone; versioned snapshots make them first-class."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
 
     g = _g(spark, sf_dir).core()
@@ -1880,8 +1879,7 @@ def q_store_time_travel(spark, sf_dir):
         g, {CUSTOMER_BASE + 1: {"mktsegment": "TRAVELED"}}
     )
     g2 = crud.remove_nodes_by_id(g2, [SUPPLIER_BASE + 1])
-    root = tempfile.mkdtemp(prefix="spark_graft_tt_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_tt_")
     store.save_snapshot(g, root)
     store.save_delta(root, store.delta_from_graphs(g, g2), validate=False)
     v0 = store.load_snapshot(spark, root, version=0)
@@ -1906,10 +1904,6 @@ def q_store_version_summary(spark, sf_dir):
     cascade deletes its located_in and supplied_by edges). The oracle
     derives every count relationally from the fixture, so the row pins
     the writer's delta sizing end-to-end."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
 
     g = _g(spark, sf_dir).core()
@@ -1917,8 +1911,7 @@ def q_store_version_summary(spark, sf_dir):
         g, {CUSTOMER_BASE + 1: {"mktsegment": "TRAVELED"}}
     )
     g2 = crud.remove_nodes_by_id(g2, [SUPPLIER_BASE + 1])
-    root = tempfile.mkdtemp(prefix="spark_graft_vs_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_vs_")
     store.save_snapshot(g, root)
     store.save_delta(root, store.delta_from_graphs(g, g2), validate=False)
     return store.version_summary(root, spark)
@@ -3794,7 +3787,6 @@ def q_streaming_fold(spark, sf_dir):
     last-update ▷ removes, cascade included) — batch-vs-stream equivalence
     as SQL, per VERDICT r2 #3."""
     import os
-    import tempfile
 
     from akka_graph_db_spark.streaming.fold import (
         MUTATION_SCHEMA,
@@ -3821,7 +3813,7 @@ def q_streaming_fold(spark, sf_dir):
     ]
     import json as _json
 
-    tmp = tempfile.mkdtemp(prefix="fold_")
+    tmp = _scratch_dir("fold_")
     log_dir = os.path.join(tmp, "log")
     # driver-written JSON lines (the q_streaming_store_sink pattern):
     # six fixture rows need no Spark write job
@@ -3863,7 +3855,6 @@ def q_streaming_store_sink(spark, sf_dir):
     exercise the identical fold/persist path.)"""
     import json as _json
     import os
-    import tempfile
 
     from akka_graph_db_spark import store
     from akka_graph_db_spark.streaming.fold import (
@@ -3893,7 +3884,7 @@ def q_streaming_store_sink(spark, sf_dir):
         (7, "remove", "node", 97_000_003, None, None, None, None),
         (8, "add", "node", 97_000_004, "sink_probe", None, None, {"v": "4"}),
     ]
-    tmp = tempfile.mkdtemp(prefix="sink_")
+    tmp = _scratch_dir("sink_")
     root = os.path.join(tmp, "store")
     fold = StreamingGraphFold(
         g, store_root=root, store_every=1, compact_every=8
@@ -3939,51 +3930,35 @@ def q_streaming_interval_join(spark, sf_dir):
     above the file count for the same single-batch state-retention
     argument as q_streaming_dedup."""
     import os
-    import tempfile
     import uuid
-
-    from akka_graph_db_spark.streaming import windows as sw
 
     import pyarrow.compute as pc
 
-    tmp = tempfile.mkdtemp(prefix="sijoin_")
+    from akka_graph_db_spark.streaming import windows as sw
+
+    tmp = _scratch_dir("sijoin_")
     lsrc = os.path.join(tmp, "clicks")
     rsrc = os.path.join(tmp, "purchases")
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        ev_df = read_events(spark, sf_dir)
-        _stage_spark_files(
-            ev_df.where(F.col("event_type") == "click").select(
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("l_ts"),
-                "user_id",
-            ),
-            lsrc,
-            n_files=2,
-        )
-        _stage_spark_files(
-            ev_df.where(F.col("event_type") == "purchase").select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("r_ts"),
-                "user_id",
-                F.col("value").alias("purchase_value"),
-            ),
-            rsrc,
-            n_files=2,
-        )
-    else:
-        ev = _events_arrow(
-            sf_dir, ["event_id", "ts", "user_id", "event_type", "value"]
-        )
-        clicks_t = ev.filter(pc.equal(ev["event_type"], "click")).select(
-            ["event_id", "ts", "user_id"]
-        ).rename_columns(["click_id", "l_ts", "user_id"])
-        purch_t = ev.filter(pc.equal(ev["event_type"], "purchase")).select(
-            ["event_id", "ts", "user_id", "value"]
-        ).rename_columns(
-            ["purchase_id", "r_ts", "user_id", "purchase_value"]
-        )
-        _stage_arrow_files(clicks_t, lsrc, n_files=2)
-        _stage_arrow_files(purch_t, rsrc, n_files=2)
+    events = f"{sf_dir}/events.parquet"
+    _stage(
+        events,
+        lsrc,
+        2,
+        {"click_id": "event_id", "l_ts": "ts", "user_id": "user_id"},
+        where=pc.field("event_type") == "click",
+    )
+    _stage(
+        events,
+        rsrc,
+        2,
+        {
+            "purchase_id": "event_id",
+            "r_ts": "ts",
+            "user_id": "user_id",
+            "purchase_value": "value",
+        },
+        where=pc.field("event_type") == "purchase",
+    )
     clicks = (
         spark.readStream.schema(
             "click_id bigint, l_ts timestamp, user_id bigint"
@@ -4006,17 +3981,12 @@ def q_streaming_interval_join(spark, sf_dir):
         watermark="10 minutes",
         max_lag_seconds=1800,
     )
-    name = f"sijoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return sw.run_to_memory_sink(
+        joined,
+        f"sijoin_{uuid.uuid4().hex[:8]}",
+        os.path.join(tmp, "ckpt"),
+        output_mode="append",
+    ).select(
         "user_id",
         "click_id",
         "purchase_id",
@@ -4036,25 +4006,19 @@ def q_streaming_dedup(spark, sf_dir):
     temp dir are contract-harness plumbing, not the scale path — in
     production the same plan writes to a parquet/Kafka sink.)"""
     import os
-    import tempfile
     import uuid
 
     from akka_graph_db_spark.streaming import windows as sw
 
-    import pyarrow as pa
-
-    tmp = tempfile.mkdtemp(prefix="sdedup_")
+    tmp = _scratch_dir("sdedup_")
     src = os.path.join(tmp, "src")
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        ev_df = read_events(spark, sf_dir).select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        _stage_spark_files(ev_df.unionByName(ev_df), src, n_files=4)
-    else:
-        ev = _events_arrow(
-            sf_dir, ["event_id", "ts", "user_id", "event_type", "value"]
-        )
-        _stage_arrow_files(pa.concat_tables([ev, ev]), src, n_files=4)
+    _stage(
+        f"{sf_dir}/events.parquet",
+        src,
+        4,
+        ["event_id", "ts", "user_id", "event_type", "value"],
+        repeat=2,
+    )
     # Duplicates share identical event times, so the 10-minute watermark
     # only provably retains their state if all 4 source files land in ONE
     # micro-batch. Pin that assumption explicitly instead of relying on
@@ -4067,70 +4031,56 @@ def q_streaming_dedup(spark, sf_dir):
         .option("maxFilesPerTrigger", 1000)
         .parquet(src)
     )
-    name = f"sdedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        sw.dedup_stream(stream, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
-        "event_id", "user_id", "event_type", "value"
-    )
+    return sw.run_to_memory_sink(
+        sw.dedup_stream(stream, watermark="10 minutes"),
+        f"sdedup_{uuid.uuid4().hex[:8]}",
+        os.path.join(tmp, "ckpt"),
+        output_mode="append",
+    ).select("event_id", "user_id", "event_type", "value")
 
 
 def q_streaming_running_totals(spark, sf_dir):
     """§2.9 custom stateful operator (applyInPandasWithState),
     batch-equivalence oracle: per-user lifetime counters folded over an
     availableNow file stream must equal the batch GROUP BY. Hash-stable by
-    construction: value is quantized JVM-side to integer cents
-    (DECIMAL(30,2)·100 — the repo's standard order-independent money path),
+    construction: value is staged raw and quantized JVM-side, on the
+    streaming frame, to integer cents (DECIMAL(30,2)·100 — the repo's
+    standard order-independent money path),
     so the Python state sums are exact integers under any arrival order,
     and the final row per user is selected by max(lifetime_events), which
     is batching-invariant (update-mode sinks append one row per user per
     micro-batch)."""
     import os
-    import tempfile
     import uuid
 
     from pyspark.sql import Window
 
     from akka_graph_db_spark.streaming import windows as sw
 
-    ev_df = read_events(spark, sf_dir).select(
-        "event_id",
-        "ts",
-        "user_id",
-        "event_type",
-        (F.col("value").cast("decimal(30,2)") * 100)
-        .cast("long")
-        .alias("value"),
-    )
-    tmp = tempfile.mkdtemp(prefix="srun_")
+    tmp = _scratch_dir("srun_")
     src = os.path.join(tmp, "src")
-    ev_df.repartition(4).write.parquet(src)
+    _stage(
+        f"{sf_dir}/events.parquet",
+        src,
+        4,
+        ["event_id", "ts", "user_id", "event_type", "value"],
+    )
     stream = spark.readStream.schema(
         "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value bigint"
+        "event_type string, value double"
     ).parquet(src)
-    name = f"srun_{uuid.uuid4().hex[:8]}"
-    q = (
-        sw.running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    cents = stream.withColumn(
+        "value",
+        (F.col("value").cast("decimal(30,2)") * 100).cast("long"),
     )
-    q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy(F.desc("lifetime_events"))
     return (
-        spark.table(name)
+        sw.run_to_memory_sink(
+            sw.running_user_totals(cents),
+            f"srun_{uuid.uuid4().hex[:8]}",
+            os.path.join(tmp, "ckpt"),
+            output_mode="update",
+        )
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(
@@ -4151,26 +4101,13 @@ def q_streaming_cms(spark, sf_dir):
     draw and takes the same row-min. Fixed-memory streaming frequency:
     state is ≤ depth×width rows regardless of stream volume."""
     import os
-    import tempfile
 
     from akka_graph_db_spark.functions import search
     from akka_graph_db_spark.streaming.sketch import StreamingCMS
 
-    tmp = tempfile.mkdtemp(prefix="scms_")
+    tmp = _scratch_dir("scms_")
     src = os.path.join(tmp, "src")
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        _stage_spark_files(
-            read_events(spark, sf_dir).select(
-                F.col("event_type").alias("term")
-            ),
-            src,
-            n_files=4,
-        )
-    else:
-        ev_t = _events_arrow(sf_dir, ["event_type"]).rename_columns(
-            ["term"]
-        )
-        _stage_arrow_files(ev_t, src, n_files=4)
+    _stage(f"{sf_dir}/events.parquet", src, 4, {"term": "event_type"})
     stream = (
         spark.readStream.schema("term string")
         .option("maxFilesPerTrigger", 1)
@@ -4192,21 +4129,13 @@ def q_streaming_hll(spark, sf_dir):
     Fixed-memory streaming COUNT DISTINCT: 2**p rows of state whatever
     the stream volume."""
     import os
-    import tempfile
 
     from akka_graph_db_spark.functions import search
     from akka_graph_db_spark.streaming.sketch import StreamingHLL
 
-    tmp = tempfile.mkdtemp(prefix="shll_")
+    tmp = _scratch_dir("shll_")
     src = os.path.join(tmp, "src")
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        _stage_spark_files(
-            read_events(spark, sf_dir).select("event_id"), src, n_files=4
-        )
-    else:
-        _stage_arrow_files(
-            _events_arrow(sf_dir, ["event_id"]), src, n_files=4
-        )
+    _stage(f"{sf_dir}/events.parquet", src, 4, ["event_id"])
     stream = (
         spark.readStream.schema("event_id bigint")
         .option("maxFilesPerTrigger", 1)
@@ -4223,113 +4152,89 @@ def q_streaming_hll(spark, sf_dir):
     )
 
 
-def _events_arrow(sf_dir, columns):
-    """Events slice as a pyarrow table, honoring read_events' ts
-    contract (UTC micros: nanos-fixture longs truncated by integer
-    division, micros-fixture naive timestamps stamped UTC — both
-    value-identical to the Spark reader under the pinned-UTC session).
-
-    Streaming queries stage their file-stream sources from this instead
-    of Spark write jobs: the sources are fixed ~2 MB fixture slices plus
-    sentinel rows, and driver-side pyarrow writes replace 1-3 Spark
-    jobs of single-task encode + commit overhead per query (measured
-    11.0s of q_streaming_session's ~20s at sf0.1). Pure column
-    slices/filters only — anything arithmetic (rounding-mode-sensitive)
-    stays on the Spark writer.
-
-    This reads the WHOLE projected table into driver memory, so every
-    call site gates on :func:`_stage_needs_spark` and falls back to
-    :func:`_stage_spark_files` (distributed write jobs) past the
-    driver-size guard (VERDICT r12 #1).
-    """
+def _utc_micros(ts):
+    """read_events' ts contract on one pyarrow column: UTC micros, with
+    nanos-fixture longs truncated by integer division and micros-fixture
+    naive timestamps stamped UTC — both value-identical to the Spark
+    reader under the pinned-UTC session."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    tbl = pq.read_table(f"{sf_dir}/events.parquet", columns=columns)
-    if "ts" in tbl.column_names:
-        ts = tbl["ts"]
-        if pa.types.is_int64(ts.type):
-            ts = pc.cast(
-                pc.divide(ts, pa.scalar(1000, pa.int64())),
-                pa.timestamp("us", tz="UTC"),
-            )
-        else:
-            if ts.type.tz is None:
-                ts = pc.assume_timezone(ts, "UTC")
-            ts = pc.cast(ts, pa.timestamp("us", tz="UTC"))
-        idx = tbl.schema.get_field_index("ts")
-        tbl = tbl.set_column(
-            idx, pa.field("ts", pa.timestamp("us", tz="UTC")), ts
-        )
-    return tbl
+    utc = pa.timestamp("us", tz="UTC")
+    if pa.types.is_int64(ts.type):
+        return pc.cast(pc.divide(ts, pa.scalar(1000, pa.int64())), utc)
+    if ts.type.tz is None:
+        ts = pc.assume_timezone(ts, "UTC")
+    return pc.cast(ts, utc)
 
 
-def _stage_arrow_files(tbl, src, n_files=1, base_mtime=1_600_000_000):
-    """Write a pyarrow table as ``n_files`` contiguous row slices under
-    ``src`` with deterministic one-minute-apart mtimes (the file
-    source's modification-time ordering must never be clock-tick luck).
-    Consumers are slice-invariant by construction (their docstrings
-    argue micro-batch invariance); contiguous slices are MORE
-    deterministic than the hash repartition this replaces."""
+def _stage(path, src, n_files, columns, where=None, repeat=1):
+    """Stage parquet ``path`` as a file-stream source: ``n_files``
+    contiguous row slices under ``src`` with deterministic one-minute-
+    apart mtimes (the file source's modification-time ordering must
+    never be clock-tick luck). Returns the staged paths in that order.
+
+    ``columns`` lists the kept columns, or maps output name → source
+    column to rename; ``where`` is a pyarrow filter Expression; the
+    filtered rows are staged ``repeat`` times over. Projection and
+    filter are pushed into the scan, read_events' ts contract is applied
+    per record batch, and batches are streamed straight into the file
+    writers, so driver memory stays at the scanner's few in-flight
+    record batches whatever the source size. Slice size comes from
+    ``count_rows``; a source with fewer rows than ``n_files`` leaves
+    empty tail files. Consumers are slice-invariant by construction
+    (their docstrings argue micro-batch invariance). Writing on the
+    driver avoids a Spark write job's single-task encode + commit per
+    staged source (measured 11.0s of q_streaming_session's ~20s at
+    sf0.1 when it staged through Spark).
+    """
     import math
     import os
 
+    import pyarrow as pa
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
-    os.makedirs(src, exist_ok=True)
-    step = max(1, math.ceil(tbl.num_rows / n_files))
-    for i in range(n_files):
-        part = tbl.slice(i * step, step)
-        dest = os.path.join(src, f"part-{i:02d}.parquet")
-        pq.write_table(part, dest)
-        os.utime(dest, (base_mtime + 60 * i,) * 2)
+    if not isinstance(columns, dict):
+        columns = dict(zip(columns, columns))
+    data = ds.dataset(path)
 
-
-# Driver-size guard for the pyarrow staging fast path (VERDICT r12 #1):
-# _events_arrow/_stage_arrow_files read the WHOLE source into driver
-# memory — fine for the ~2 MB fixture slices they exist for, a driver
-# OOM at a real scale factor. Past this byte size every staging site
-# falls back to distributed Spark write jobs (the pre-r12 shape).
-_STAGE_DRIVER_MAX_BYTES = 256 << 20
-
-
-def _stage_needs_spark(path):
-    """True when ``path`` is too large for driver-side pyarrow staging
-    (> $SPARK_GRAFT_STAGE_DRIVER_MAX_BYTES, default 256 MiB) and the
-    staging site must use its Spark-writer fallback. The env override
-    exists so tests can pin the fallback without a huge fixture."""
-    import os
-
-    limit = int(
-        os.environ.get(
-            "SPARK_GRAFT_STAGE_DRIVER_MAX_BYTES", _STAGE_DRIVER_MAX_BYTES
+    def shape(batch):
+        return pa.RecordBatch.from_arrays(
+            [
+                _utc_micros(batch[c]) if c == "ts" else batch[c]
+                for c in columns.values()
+            ],
+            names=list(columns),
         )
+
+    schema = shape(pa.RecordBatch.from_pylist([], data.schema)).schema
+    n_rows = data.count_rows(filter=where) * repeat
+    step = max(1, math.ceil(n_rows / n_files))
+    scan = list(dict.fromkeys(columns.values()))
+    batches = (
+        shape(b)
+        for _ in range(repeat)
+        for b in data.to_batches(columns=scan, filter=where)
     )
-    return os.path.getsize(path) > limit
-
-
-def _stage_spark_files(df, src, n_files=1, base_mtime=1_600_000_000):
-    """Spark-writer staging fallback for sources past the driver-size
-    guard: write ``df`` as ``n_files`` parquet files under ``src`` with
-    the same deterministic mtime ladder as :func:`_stage_arrow_files`.
-    Row-to-file assignment is round-robin instead of contiguous slices —
-    every consumer is micro-batch/slice-invariant by its own docstring
-    argument, so the staged STREAM result is identical."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="stage_spark_")
-    df.repartition(n_files).write.mode("overwrite").parquet(out)
-    parts = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
     os.makedirs(src, exist_ok=True)
-    for i, p in enumerate(parts):
+    paths, left = [], None
+    for i in range(n_files):
         dest = os.path.join(src, f"part-{i:02d}.parquet")
-        shutil.move(p, dest)
-        os.utime(dest, (base_mtime + 60 * i,) * 2)
-    shutil.rmtree(out, ignore_errors=True)
+        need = step
+        with pq.ParquetWriter(dest, schema) as w:
+            while need:
+                if not left:  # None, or an exhausted/empty batch
+                    left = next(batches, None)
+                    if left is None:
+                        break
+                    continue
+                part, left = left.slice(0, need), left.slice(need)
+                w.write_batch(part)
+                need -= part.num_rows
+        os.utime(dest, (1_600_000_000 + 60 * i,) * 2)
+        paths.append(dest)
+    return paths
 
 
 def q_streaming_session(spark, sf_dir):
@@ -4345,88 +4250,61 @@ def q_streaming_session(spark, sf_dir):
     with explicit mtimes — batch 2 advances the watermark past every real
     session, batch 3 flushes them. Sentinels filter out of the result.
 
-    The staging files are written DRIVER-SIDE with pyarrow: the source
-    slice is a fixed ~2 MB fixture plus two 1-row sentinels, and the
-    three coalesce(1) Spark write jobs this replaces were pure overhead
-    (measured 11.0s of the query's ~20s at sf0.1 — single-task encode +
-    commit per job for driver-sized data). Value-exact: the fixture
-    stores ts as TIMESTAMP(MICROS) without the UTC flag; stamping the
-    UTC zone onto the naive micros is exactly read_events' NTZ→LTZ cast
-    under the pinned-UTC session, and max/+days sentinel arithmetic is
-    integer micros both ways. (The pre-nanos fixture branch mirrors
-    read_events' `ts div 1000` truncation.)"""
+    The real file is staged by :func:`_stage` (no Spark job); the two
+    1-row sentinels are pyarrow-written, placed past the real file's
+    max ts read from its parquet column statistics (no second read).
+    Value-exact: _stage applies read_events' ts contract, and the
+    max/+days sentinel arithmetic is integer micros both ways."""
     import os
-    import tempfile
     import uuid
 
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from akka_graph_db_spark.streaming import windows as sw
 
     ensure_query_conf(spark)
-    tmp = tempfile.mkdtemp(prefix="ssess_")
+    tmp = _scratch_dir("ssess_")
     src = os.path.join(tmp, "src")
-    os.makedirs(src)
-
-    lfz = pa.timestamp("us", tz="UTC")
-    sentinel_schema = pa.schema(
-        [("ts", lfz), ("user_id", pa.int64()), ("value", pa.float64())]
+    (real,) = _stage(
+        f"{sf_dir}/events.parquet", src, 1, ["ts", "user_id", "value"]
     )
-    base_mtime = 1_600_000_000
+    # max(ts) from the staged file's column statistics (raw int64 micros)
+    meta = pq.read_metadata(real)
+    col = meta.schema.names.index("ts")
+    max_us = max(
+        meta.row_group(g).column(col).statistics.max_raw
+        for g in range(meta.num_row_groups)
+    )
     day_us = 86_400_000_000
-
-    def _one_file(tbl, name, mtime):
-        dest = os.path.join(src, f"{name}.parquet")
-        pq.write_table(tbl, dest)
-        os.utime(dest, (mtime, mtime))
-
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        real_df = read_events(spark, sf_dir).select(
-            "ts", "user_id", "value"
-        )
-        max_us = real_df.agg(
-            F.unix_micros(F.max("ts")).alias("m")
-        ).collect()[0]["m"]
-        _stage_spark_files(real_df, src, n_files=1, base_mtime=base_mtime)
-    else:
-        real = _events_arrow(sf_dir, ["ts", "user_id", "value"])
-        max_us = pc.max(real["ts"]).cast(pa.int64()).as_py()
-        _one_file(real, "00_real", base_mtime)
-    # the 1-row far-future sentinels are driver-sized by definition and
-    # stay pyarrow-written on both paths
+    lfz = pa.timestamp("us", tz="UTC")
     for i, days in enumerate((1, 2), start=1):
-        sentinel = pa.table(
-            {
-                "ts": pa.array([max_us + days * day_us], pa.int64()).cast(
-                    lfz
-                ),
-                "user_id": pa.array([-1], pa.int64()),
-                "value": pa.array([0.0], pa.float64()),
-            },
-            schema=sentinel_schema,
+        dest = os.path.join(src, f"0{i}_sentinel.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array([max_us + days * day_us], lfz),
+                    "user_id": pa.array([-1], pa.int64()),
+                    "value": pa.array([0.0], pa.float64()),
+                }
+            ),
+            dest,
         )
-        _one_file(sentinel, f"0{i}_sentinel", base_mtime + 10 * i)
+        mtime = os.path.getmtime(real) + 10 * i
+        os.utime(dest, (mtime, mtime))
 
     stream = (
         spark.readStream.schema("ts timestamp, user_id bigint, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"ssess_{uuid.uuid4().hex[:8]}"
-    q = (
-        sw.session_counts_stream(stream, "10 minutes", "10 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        sw.run_to_memory_sink(
+            sw.session_counts_stream(stream, "10 minutes", "10 minutes"),
+            f"ssess_{uuid.uuid4().hex[:8]}",
+            os.path.join(tmp, "ckpt"),
+            output_mode="append",
+        )
         .where(F.col("user_id") >= 0)
         .select(
             "user_id",
@@ -5153,12 +5031,10 @@ def q_jsonl_roundtrip(spark, sf_dir):
     aggregate recomputes text lengths AFTER the round trip, so the
     oracle (the same aggregate on the original parquet) proves byte
     fidelity through the text format."""
-    import tempfile
-
     from akka_graph_db_spark.sources import files
 
     docs = read_documents(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="jsonl_rt_") + "/docs"
+    path = _scratch_dir("jsonl_rt_") + "/docs"
     files.write_jsonl(docs, path)
     back = files.read_jsonl(
         spark,
@@ -5182,15 +5058,10 @@ def q_store_incremental_counts(spark, sf_dir):
     of the base, never a recount, and must equal the oracle's
     literal-adjusted per-label counts exactly (new id +1, label move
     −old +new, delete −1)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
 
     g = _g(spark, sf_dir).core()
-    root = tempfile.mkdtemp(prefix="spark_graft_inc_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_inc_")
     store.save_snapshot(g, root)
     empty_map = F.create_map().cast("map<string,string>")
     ups = spark.createDataFrame(
@@ -5219,16 +5090,11 @@ def q_store_incremental_degrees(spark, sf_dir):
     The new per-node (out_degree, in_degree) table is derived from the
     delta files + an id probe of the base — never a recount — and must
     equal the oracle's literally-adjusted full recount exactly."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
     from akka_graph_db_spark.sources.tpch import LOCATED_IN_CUST_BASE
 
     g = _g(spark, sf_dir).core()
-    root = tempfile.mkdtemp(prefix="spark_graft_incdeg_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_incdeg_")
     store.save_snapshot(g, root)
     empty_map = F.create_map().cast("map<string,string>")
     ups = spark.createDataFrame(
@@ -5260,15 +5126,10 @@ def q_store_incremental_topk(spark, sf_dir):
     the delta doesn't mention carry over verbatim). Output restricted to
     the two acctbal-bearing labels; the oracle applies the same literal
     mutations relationally."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
 
     g = _g(spark, sf_dir).core()
-    root = tempfile.mkdtemp(prefix="spark_graft_inctopk_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_inctopk_")
     store.save_snapshot(g, root)
     ups = spark.createDataFrame(
         [
@@ -5346,12 +5207,10 @@ def q_orc_roundtrip(spark, sf_dir):
     live); the post-round-trip aggregate must equal the oracle computed
     on the original parquet — same fidelity contract as
     jsonl_roundtrip, through the second format."""
-    import tempfile
-
     from akka_graph_db_spark.sources import files
 
     docs = read_documents(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="orc_rt_") + "/docs"
+    path = _scratch_dir("orc_rt_") + "/docs"
     files.write_orc(docs, path)
     back = files.read_orc(spark, path)
     return back.groupBy("lang", "source").agg(
@@ -6526,34 +6385,23 @@ def q_streaming_static_join(spark, sf_dir):
     every output column is a copy of input data, so the result is
     micro-batch-invariant."""
     import os
-    import tempfile
     import uuid
 
     import pyarrow.compute as pc
 
+    from akka_graph_db_spark.streaming import windows as sw
+
     ensure_query_conf(spark)
     ev_df = read_events(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ssjoin_")
+    tmp = _scratch_dir("ssjoin_")
     src = os.path.join(tmp, "purchases")
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        _stage_spark_files(
-            ev_df.where(F.col("event_type") == "purchase").select(
-                "event_id", "user_id", "value"
-            ),
-            src,
-            n_files=2,
-        )
-    else:
-        ev = _events_arrow(
-            sf_dir, ["event_id", "user_id", "event_type", "value"]
-        )
-        _stage_arrow_files(
-            ev.filter(pc.equal(ev["event_type"], "purchase")).select(
-                ["event_id", "user_id", "value"]
-            ),
-            src,
-            n_files=2,
-        )
+    _stage(
+        f"{sf_dir}/events.parquet",
+        src,
+        2,
+        ["event_id", "user_id", "value"],
+        where=pc.field("event_type") == "purchase",
+    )
     user_clicks = (
         ev_df.where(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -6570,17 +6418,12 @@ def q_streaming_static_join(spark, sf_dir):
             "user_clicks"
         ),
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    return sw.run_to_memory_sink(
+        enriched,
+        f"ssjoin_{uuid.uuid4().hex[:8]}",
+        os.path.join(tmp, "ckpt"),
+        output_mode="append",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def q_event_transitions(spark, sf_dir):
@@ -7004,10 +6847,6 @@ def q_store_version_diff(spark, sf_dir):
     oracle derives the exact manifest relationally: the updated/removed
     node ids are the fixture's, the removed edge ids are every edges_v
     row incident to supplier 1."""
-    import atexit
-    import shutil
-    import tempfile
-
     from akka_graph_db_spark import store
 
     g = _g(spark, sf_dir).core()
@@ -7015,8 +6854,7 @@ def q_store_version_diff(spark, sf_dir):
         g, {CUSTOMER_BASE + 1: {"mktsegment": "TRAVELED"}}
     )
     g2 = crud.remove_nodes_by_id(g2, [SUPPLIER_BASE + 1])
-    root = tempfile.mkdtemp(prefix="spark_graft_vd_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _scratch_dir("spark_graft_vd_")
     store.save_snapshot(g, root)
     store.save_delta(root, store.delta_from_graphs(g, g2), validate=False)
     return store.version_diff(root, 0, 1, spark)
@@ -7525,32 +7363,26 @@ def q_streaming_dedup_ingest(spark, sf_dir):
     oracle is dedup_incremental's exact cross all-pairs SQL
     verbatim."""
     import os
-    import tempfile
+
+    import pyarrow.compute as pc
 
     from akka_graph_db_spark.streaming.ingest import StreamingCrossDedup
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     docs = read_documents(spark, sf_dir)
     new = docs.where(F.col("doc_id") % 10 >= 8)
     base = docs.where(F.col("doc_id") % 10 < 8)
-    tmp = tempfile.mkdtemp(prefix="sxdedup_")
+    tmp = _scratch_dir("sxdedup_")
     src = os.path.join(tmp, "src")
-    if _stage_needs_spark(f"{sf_dir}/documents.parquet"):
-        _stage_spark_files(new, src, n_files=4)
-    else:
-        dt = pq.read_table(f"{sf_dir}/documents.parquet")
-        ten = pa.scalar(10, pa.int64())
-        # doc_id % 10 (pyarrow.compute has no mod; ids are non-negative,
-        # so truncating integer divide matches Spark's % here)
-        rem = pc.subtract(
-            dt["doc_id"], pc.multiply(pc.divide(dt["doc_id"], ten), ten)
-        )
-        _stage_arrow_files(
-            dt.filter(pc.greater_equal(rem, 8)), src, n_files=4
-        )
+    # doc_id % 10 (pyarrow expressions have no mod; ids are non-negative,
+    # so truncating integer divide matches Spark's % here)
+    doc_id = pc.field("doc_id")
+    _stage(
+        f"{sf_dir}/documents.parquet",
+        src,
+        4,
+        new.columns,
+        where=(doc_id - doc_id / 10 * 10) >= 8,
+    )
     stream = (
         spark.readStream.schema(new.schema)
         .option("maxFilesPerTrigger", 1)
@@ -7759,20 +7591,12 @@ def q_streaming_histogram(spark, sf_dir):
     the IEEE binning division is exact cross-engine). State = one row
     per occupied bin, value-range-bounded, not volume-bounded."""
     import os
-    import tempfile
 
     from akka_graph_db_spark.streaming.sketch import StreamingHistogram
 
-    tmp = tempfile.mkdtemp(prefix="shist_")
+    tmp = _scratch_dir("shist_")
     src = os.path.join(tmp, "src")
-    if _stage_needs_spark(f"{sf_dir}/events.parquet"):
-        _stage_spark_files(
-            read_events(spark, sf_dir).select("value"), src, n_files=4
-        )
-    else:
-        _stage_arrow_files(
-            _events_arrow(sf_dir, ["value"]), src, n_files=4
-        )
+    _stage(f"{sf_dir}/events.parquet", src, 4, ["value"])
     stream = (
         spark.readStream.schema("value double")
         .option("maxFilesPerTrigger", 1)

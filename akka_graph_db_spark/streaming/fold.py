@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from akka_graph_db_spark.model import PropertyGraph
 from akka_graph_db_spark.operators import crud
+from akka_graph_db_spark.streaming import drain
 
 MUTATION_SCHEMA = (
     "seq bigint, op string, kind string, id bigint, label string, "
@@ -324,11 +325,8 @@ class StreamingGraphFold:
     def run(self, mutation_stream: DataFrame, checkpoint_dir: str):
         """Consume an entire available stream (Trigger.AvailableNow) and
         return the final snapshot — the batch-testable entry point."""
-        q = (
-            mutation_stream.writeStream.foreachBatch(self.step)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            mutation_stream.writeStream.foreachBatch(self.step),
+            checkpoint_dir,
         )
-        q.awaitTermination()
         return self.graph

@@ -24,6 +24,7 @@ from akka_graph_db_spark.functions.dedup import (
     _signatures,
     jaccard,
 )
+from akka_graph_db_spark.streaming import drain
 
 
 class StreamingCrossDedup:
@@ -136,13 +137,7 @@ class StreamingCrossDedup:
                 out_path
             )
 
-        q = (
-            stream.writeStream.foreachBatch(_each)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(_each), checkpoint)
         # A zero-duplicate stream is a normal outcome, not an error:
         # _each appends only when a batch has matches, so out_path may
         # not exist at all — return an empty typed frame instead of

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from akka_graph_db_spark.streaming import drain
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -139,19 +141,20 @@ def session_counts_stream(
 
 
 def run_to_memory_sink(
-    stream_df: DataFrame, query_name: str, checkpoint_dir: str
-):
-    """Drain an availableNow stream into an in-memory table (tests/demos)."""
-    q = (
+    stream_df: DataFrame,
+    query_name: str,
+    checkpoint_dir: str,
+    output_mode: str = "update",
+) -> DataFrame:
+    """Drain an availableNow stream into the in-memory table
+    ``query_name`` and return that table."""
+    drain(
         stream_df.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return q
+    return stream_df.sparkSession.table(query_name)
 
 
 def interval_join_stream(

@@ -6,9 +6,8 @@ Pins the invariants the r13 optimization pass relies on:
   size-ratio prefilter's ``_n`` is now counted in the SAME hash family
   the exact verify intersects — VERDICT r12 #2);
 - both signature paths' ``_n`` equals the verify frame's set size;
-- the streaming staging helpers fall back to Spark write jobs above the
-  driver-size guard (VERDICT r12 #1) and the fallback stages the same
-  rows;
+- the streaming staging helper writes exactly ``n_files`` contiguous
+  slices on the mtime ladder while streaming record batches;
 - link_prediction_jaccard's broadcast-adjacency intersection path is
   output-identical to the shuffle wedge path it gates over.
 """
@@ -84,41 +83,79 @@ def test_signature_n_equals_verify_set_size(spark, shingle_n, arrow):
     assert bad == 0
 
 
-def test_staging_guard_falls_back_to_spark(spark, monkeypatch):
-    """Above the driver-size guard the staging helpers must stage via
-    Spark write jobs (VERDICT r12 #1: the pyarrow fast path reads the
-    whole source into driver memory — a local-mode assumption), and the
-    fallback must stage the same rows."""
-    import tempfile
+def test_stage_writes_contiguous_slices(tmp_path):
+    """_stage streams record batches into exactly ``n_files`` files on
+    the one-minute mtime ladder, each the matching contiguous slice of
+    the whole (filtered, repeated, renamed) table — also when slices
+    cross the source's 7-row batches and when the source has fewer rows
+    than ``n_files`` (empty tail files)."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
     import __spark_entry__ as entry
 
-    assert not entry._stage_needs_spark(f"{SF_DIR}/events.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DRIVER_MAX_BYTES", "1")
-    assert entry._stage_needs_spark(f"{SF_DIR}/events.parquet")
+    def source(n):
+        path = str(tmp_path / f"events_{n}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(range(n), pa.int64()),
+                    "ts": pa.array(
+                        [1_700_000_000_000_000 + 997 * i for i in range(n)],
+                        pa.timestamp("us"),
+                    ),
+                    "event_type": [
+                        "click" if i % 3 else "view" for i in range(n)
+                    ],
+                }
+            ),
+            path,
+            row_group_size=7,
+        )
+        return path
 
-    # the guarded query must still run (Spark-writer staging) and agree
-    # with the pyarrow fast path's result
-    slow = entry.q_streaming_hll(spark, SF_DIR).collect()
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DRIVER_MAX_BYTES")
-    assert not entry._stage_needs_spark(f"{SF_DIR}/events.parquet")
-    fast = entry.q_streaming_hll(spark, SF_DIR).collect()
-    assert slow == fast
+    def check(path, n_files, columns, where=None, repeat=1):
+        whole = pq.read_table(path)
+        if where is not None:
+            whole = whole.filter(where)
+        whole = whole.set_column(
+            1, "ts", whole["ts"].cast(pa.timestamp("us", tz="UTC"))
+        )
+        whole = pa.concat_tables([whole] * repeat)
+        if not isinstance(columns, dict):
+            columns = dict(zip(columns, columns))
+        whole = pa.table(
+            [whole[c] for c in columns.values()], names=list(columns)
+        )
+        dest = str(tmp_path / f"staged_{len(os.listdir(tmp_path))}")
+        paths = entry._stage(path, dest, n_files, columns, where, repeat)
 
-    # _stage_spark_files writes n deterministic-mtime files whose union
-    # is the input frame
-    df = spark.range(100).select(
-        F.col("id").alias("event_id"), (F.col("id") % 7).alias("value")
-    )
-    dest = tempfile.mkdtemp(prefix="stage_fb_") + "/src"
-    entry._stage_spark_files(df, dest, n_files=3)
-    parts = sorted(os.listdir(dest))
-    assert parts == ["part-00.parquet", "part-01.parquet", "part-02.parquet"]
-    mtimes = [os.path.getmtime(os.path.join(dest, p)) for p in parts]
-    assert mtimes == sorted(mtimes) and mtimes[0] == 1_600_000_000
-    back = spark.read.parquet(dest)
-    assert back.count() == 100
-    assert back.agg(F.sum("event_id")).collect()[0][0] == 4950
+        names = [f"part-{i:02d}.parquet" for i in range(n_files)]
+        assert sorted(os.listdir(dest)) == names
+        assert paths == [os.path.join(dest, f) for f in names]
+        assert [os.path.getmtime(p) for p in paths] == [
+            1_600_000_000 + 60 * i for i in range(n_files)
+        ]
+        step = max(1, math.ceil(whole.num_rows / n_files))
+        for i, p in enumerate(paths):
+            got = pq.read_table(p)
+            assert got.equals(whole.slice(i * step, step)), (p, got)
+        return [pq.read_metadata(p).num_rows for p in paths]
+
+    big = source(100)
+    # the premise: scans yield many small batches, so slices cross them
+    assert len(list(ds.dataset(big).to_batches())) == 15
+    click = pc.field("event_type") == "click"
+    assert check(big, 4, ["event_id", "ts"]) == [25] * 4
+    assert check(big, 3, {"id": "event_id", "t": "ts"}, click) == [22] * 3
+    assert check(big, 4, ["ts", "event_type"], click, repeat=2) == [33] * 4
+    # fewer rows than files: the tail files exist, empty, same schema
+    assert check(source(2), 4, ["event_id", "ts"]) == [1, 1, 0, 0]
+    assert check(source(2), 4, ["event_id"], click) == [1, 0, 0, 0]
 
 
 def test_link_prediction_intersect_path_matches_wedge_path(spark):

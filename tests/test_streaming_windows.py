@@ -1,7 +1,6 @@
 """Streaming windows: watermark drop, streaming dedup, custom stateful op."""
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 
@@ -29,56 +28,40 @@ ROWS = [
 ]
 
 
-def test_streaming_tumbling_with_watermark(spark):
-    tmp = tempfile.mkdtemp(prefix="sws_")
-    stream = _stream_from_rows(spark, ROWS, tmp)
+def test_streaming_tumbling_with_watermark(spark, tmp_path):
+    stream = _stream_from_rows(spark, ROWS, tmp_path)
     agg = sw.tumbling_counts_stream(stream, "1 hour", "10 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbled")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    out = sw.run_to_memory_sink(
+        agg, "tumbled", str(tmp_path / "ck"), output_mode="append"
     )
-    q.awaitTermination()
-    rows = {
-        str(r["window_start"]): r["n_events"]
-        for r in spark.table("tumbled").collect()
-    }
+    rows = {str(r["window_start"]): r["n_events"] for r in out.collect()}
     # hour-0 window closed by the watermark passing 01:10 -> emitted
     assert rows.get("2024-01-01 00:00:00") == 3
 
 
-def test_streaming_dedup(spark):
-    tmp = tempfile.mkdtemp(prefix="swd_")
-    stream = _stream_from_rows(spark, ROWS, tmp)
-    q = (
-        sw.dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("deduped").select("event_id").collect()
+def test_streaming_dedup(spark, tmp_path):
+    stream = _stream_from_rows(spark, ROWS, tmp_path)
+    got = sw.run_to_memory_sink(
+        sw.dedup_stream(stream),
+        "deduped",
+        str(tmp_path / "ck"),
+        output_mode="append",
+    ).collect()
     assert sorted(r["event_id"] for r in got) == [1, 2, 3]
 
 
-def test_stateful_running_totals(spark):
-    tmp = tempfile.mkdtemp(prefix="swt_")
-    stream = _stream_from_rows(spark, ROWS, tmp)
-    out = sw.running_user_totals(stream)
-    sw.run_to_memory_sink(out, "running", os.path.join(tmp, "ck"))
-    rows = {r["user_id"]: r for r in spark.table("running").collect()}
+def test_stateful_running_totals(spark, tmp_path):
+    stream = _stream_from_rows(spark, ROWS, tmp_path)
+    out = sw.run_to_memory_sink(
+        sw.running_user_totals(stream), "running", str(tmp_path / "ck")
+    )
+    rows = {r["user_id"]: r for r in out.collect()}
     assert rows[1]["lifetime_events"] == 3  # dup NOT removed here: raw count
     assert rows[1]["lifetime_value"] == 5.0
     assert rows[2]["lifetime_events"] == 1
 
 
-def test_interval_join_stream_bounds(spark):
+def test_interval_join_stream_bounds(spark, tmp_path):
     from datetime import datetime
 
     def mkstream(rows, schema, tmp, sub):
@@ -86,7 +69,7 @@ def test_interval_join_stream_bounds(spark):
         spark.createDataFrame(rows, schema).coalesce(1).write.json(d)
         return spark.readStream.schema(schema).json(d)
 
-    tmp = tempfile.mkdtemp(prefix="ij_")
+    tmp = str(tmp_path)
     t = lambda s: datetime.fromisoformat(s)
     clicks = [
         (10, t("2024-01-01 00:00:00"), 1),
@@ -107,26 +90,19 @@ def test_interval_join_stream_bounds(spark):
         tmp, "p",
     )
     joined = sw.interval_join_stream(cs, ps, max_lag_seconds=1800)
-    q = (
-        joined.writeStream.format("memory").queryName("ijtest")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True).start()
+    out = sw.run_to_memory_sink(
+        joined, "ijtest", os.path.join(tmp, "ckpt"), output_mode="append"
     )
-    q.awaitTermination()
-    got = {
-        (r["click_id"], r["purchase_id"])
-        for r in spark.table("ijtest").collect()
-    }
+    got = {(r["click_id"], r["purchase_id"]) for r in out.collect()}
     # 30-minute bound is INCLUSIVE; purchases strictly before a click or
     # past the bound never match
     assert got == {(10, 20), (11, 21)}
 
 
-def test_session_counts_stream_flushes_with_sentinels(spark):
+def test_session_counts_stream_flushes_with_sentinels(spark, tmp_path):
     # two user-1 sessions (gap > 10 min) + a later user-2 event advancing
     # the watermark; sentinel batches flush the tail sessions
-    tmp = tempfile.mkdtemp(prefix="ssw_")
+    tmp = str(tmp_path)
     rows = [
         (1, "2024-01-01 00:00:00", 1, "click", 1.0, None),
         (2, "2024-01-01 00:05:00", 1, "click", 2.0, None),
@@ -156,22 +132,18 @@ def test_session_counts_stream_flushes_with_sentinels(spark):
         .option("maxFilesPerTrigger", 1)
         .json(log_dir)
     )
-    q = (
-        sw.session_counts_stream(stream, "10 minutes", "10 minutes")
-        .writeStream.format("memory")
-        .queryName("sessioned")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    out = sw.run_to_memory_sink(
+        sw.session_counts_stream(stream, "10 minutes", "10 minutes"),
+        "sessioned",
+        os.path.join(tmp, "ck"),
+        output_mode="append",
     )
-    q.awaitTermination()
     got = {
         (r["user_id"], str(r["session_start"])): (
             r["n_events"],
             r["sum_value"],
         )
-        for r in spark.table("sessioned").collect()
+        for r in out.collect()
     }
     # events 1+2 merge (5-min gap); event 3 is its own session
     assert got[(1, "2024-01-01 00:00:00")] == (2, 3.0)
