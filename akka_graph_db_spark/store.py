@@ -421,6 +421,11 @@ def _merge_side(
     """base ∪ upserts ∪ tombstones → winner-per-id by highest (version,
     tombstone), so a delete beats an upsert of the same version.
 
+    Rows are tagged with their chain position (base 0, deltas 1..k in
+    version order), not their absolute version: same order, so the same
+    winners, but a chain of a given depth plans to the same generated
+    code at every version, and Spark's codegen cache reuses it.
+
     ONE shuffle (the per-id aggregation, with map-side partial ``max_by``)
     over base+deltas, independent of how many deltas are stacked — the
     read-amplification bound that makes long mutation chains viable until
@@ -433,20 +438,20 @@ def _merge_side(
             spark.read.schema(core_schema).parquet(path).select(*core_cols)
         )
 
-    def _tag(df: DataFrame, v: int, deleted: bool) -> DataFrame:
-        return df.withColumn("_v", F.lit(v)).withColumn(
+    def _tag(df: DataFrame, pos: int, deleted: bool) -> DataFrame:
+        return df.withColumn("_v", F.lit(pos)).withColumn(
             "_del", F.lit(deleted)
         )
 
-    parts = [_tag(_core(_join(root, f"v={base_v}", base_name)), base_v, False)]
-    for v in delta_vs:
+    parts = [_tag(_core(_join(root, f"v={base_v}", base_name)), 0, False)]
+    for pos, v in enumerate(delta_vs, start=1):
         vdir = _join(root, f"v={v}")
-        parts.append(_tag(_core(_join(vdir, up_name)), v, False))
+        parts.append(_tag(_core(_join(vdir, up_name)), pos, False))
         dels = spark.read.schema(_ID_SCHEMA).parquet(_join(vdir, del_name))
         null_payload = [
             F.lit(None).cast(_CORE_COL_TYPES[c]).alias(c) for c in payload
         ]
-        parts.append(_tag(dels.select("id", *null_payload), v, True))
+        parts.append(_tag(dels.select("id", *null_payload), pos, True))
     merged = reduce(DataFrame.unionByName, parts)
     # order on (_v, _del): an id both upserted and deleted in one delta
     # (save_delta(validate=False) allows it) resolves to the delete, as
@@ -1014,12 +1019,15 @@ def _version_diff_fused(
     the change row falls out of comparing the two structs null-safely.
     An id is "present" at a version when its winner exists and is not a
     tombstone — exactly :func:`_merge_side`'s winner-per-id rule, so the
-    manifest matches the joined path row for row (pinned by tests)."""
+    manifest matches the joined path row for row (pinned by tests).
+    Rows carry chain positions, as in :func:`_merge_side`, and v_old is
+    compared by its position."""
     from functools import reduce
 
     from akka_graph_db_spark.model import EDGE_CORE_COLS, NODE_CORE_COLS
 
     delta_vs = sorted(v for v in kinds if base_v < v <= v_new)
+    old_pos = 0 if v_old == base_v else delta_vs.index(v_old) + 1
     pk_type = "array<struct<key:string,value:string>>"
 
     def _d(
@@ -1033,7 +1041,7 @@ def _version_diff_fused(
         payload = [c for c in cols if c not in ("id", "props")]
         fields = payload + ["_pk"]
 
-        def _state(df: DataFrame, v: int, deleted: bool) -> DataFrame:
+        def _state(df: DataFrame, pos: int, deleted: bool) -> DataFrame:
             if deleted:
                 vals = [
                     F.lit(None).cast(_CORE_COL_TYPES[c]).alias(c)
@@ -1045,7 +1053,7 @@ def _version_diff_fused(
                 pk = F.sort_array(F.map_entries("props")).alias("_pk")
             return df.select(
                 "id",
-                F.lit(v).alias("_v"),
+                F.lit(pos).alias("_v"),
                 F.struct(
                     F.lit(deleted).alias("_del"), *vals, pk
                 ).alias("_s"),
@@ -1056,18 +1064,18 @@ def _version_diff_fused(
                 spark.read.schema(schema).parquet(
                     _join(root, f"v={base_v}", base_name)
                 ).select(*cols),
-                base_v,
+                0,
                 False,
             )
         ]
-        for v in delta_vs:
+        for pos, v in enumerate(delta_vs, start=1):
             vdir = _join(root, f"v={v}")
             parts.append(
                 _state(
                     spark.read.schema(schema).parquet(
                         _join(vdir, up_name)
                     ).select(*cols),
-                    v,
+                    pos,
                     False,
                 )
             )
@@ -1076,7 +1084,7 @@ def _version_diff_fused(
                     spark.read.schema(_ID_SCHEMA).parquet(
                         _join(vdir, del_name)
                     ),
-                    v,
+                    pos,
                     True,
                 )
             )
@@ -1086,7 +1094,7 @@ def _version_diff_fused(
         order = F.struct(F.col("_v"), F.col("_s._del"))
         w = merged.groupBy("id").agg(
             F.max_by(
-                "_s", F.when(F.col("_v") <= v_old, order)
+                "_s", F.when(F.col("_v") <= old_pos, order)
             ).alias("_o"),
             F.max_by("_s", order).alias("_n"),
         )

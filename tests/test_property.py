@@ -532,3 +532,134 @@ def test_durable_fold_matches_whole_graph_fold(draws):
                         assert (
                             _stored_delta_rows(spark, root, v) == diffs[pair]
                         ), (v, pair)
+
+
+# -- version_diff: fused single aggregation == two loads joined ---------------
+
+_DIFF_NODE_IDS = NODE_IDS[:5]
+_DIFF_EDGE_IDS = [100, 101, 102, 103]
+
+# one delta: upserted nodes (id -> (label, k)), deleted node ids, upserted
+# edges (id -> (src, dst, w)), deleted edge ids; an id may be both
+# upserted and deleted, as save_delta(validate=False) allows
+delta_strategy = st.tuples(
+    st.dictionaries(
+        st.sampled_from(_DIFF_NODE_IDS),
+        st.tuples(st.sampled_from(["n", "m"]), st.integers(0, 2)),
+        max_size=3,
+    ),
+    st.sets(st.sampled_from(_DIFF_NODE_IDS), max_size=2),
+    st.dictionaries(
+        st.sampled_from(_DIFF_EDGE_IDS),
+        st.tuples(
+            st.sampled_from(_DIFF_NODE_IDS),
+            st.sampled_from(_DIFF_NODE_IDS),
+            st.integers(0, 1),
+        ),
+        max_size=2,
+    ),
+    st.sets(st.sampled_from(_DIFF_EDGE_IDS), max_size=2),
+)
+
+
+# every example diffs each version pair twice (up to 20 Spark jobs), so
+# two drawn chains plus the explicit one with same-delta upsert+delete ties
+@settings(max_examples=2, deadline=None)
+@given(chain=st.lists(delta_strategy, min_size=1, max_size=3))
+@example(
+    chain=[
+        ({1: ("m", 1), 2: ("n", 0)}, {1, 3}, {100: (2, 1, 1)}, {100, 101}),
+        ({1: ("n", 2)}, {2}, {102: (1, 1, 0)}, set()),
+    ]
+)
+def test_version_diff_fused_matches_joined_on_random_chains(chain):
+    """For every version pair on one base chain, the fused
+    ``version_diff`` path returns the same manifest as the two-load
+    joined path, including ids upserted and deleted in one delta, and
+    both equal the manifest of a plain replay of the chain in which a
+    delete beats an upsert of the same delta."""
+    import os
+    import tempfile
+
+    from akka_graph_db_spark import store
+
+    spark = _SPARK["s"]
+    base = build(spark, [(1, 2), (2, 3)])  # edges 100 and 101
+
+    def nodes(rows):
+        return spark.createDataFrame(
+            [(i, label, {"k": str(k)}) for i, (label, k) in rows.items()],
+            "id bigint, label string, props map<string,string>",
+        )
+
+    def edges(rows):
+        return spark.createDataFrame(
+            [(i, "e", s, d, {"w": str(w)}) for i, (s, d, w) in rows.items()],
+            "id bigint, label string, src bigint, dst bigint,"
+            " props map<string,string>",
+        )
+
+    def id_frame(id_set):
+        return spark.createDataFrame(
+            [(i,) for i in sorted(id_set)], "id bigint"
+        )
+
+    def rows(df):
+        return [(r["kind"], r["id"], r["change"]) for r in df.collect()]
+
+    # the replay: per version, kind -> id -> row
+    states = [
+        {
+            "node": {i: ("n", f"v{i}") for i in NODE_IDS},
+            "edge": {100: (1, 2, None), 101: (2, 3, None)},
+        }
+    ]
+    for n_up, n_del, e_up, e_del in chain:
+        state = {k: dict(v) for k, v in states[-1].items()}
+        for i, (label, k) in n_up.items():
+            state["node"][i] = (label, str(k))
+        for i, (src, dst, w) in e_up.items():
+            state["edge"][i] = (src, dst, str(w))
+        for kind, dels in (("node", n_del), ("edge", e_del)):
+            for i in dels:
+                state[kind].pop(i, None)
+        states.append(state)
+
+    def replayed(i_old, i_new):
+        out = []
+        for kind in ("edge", "node"):
+            old, new = states[i_old][kind], states[i_new][kind]
+            for i in old.keys() | new.keys():
+                if i not in old:
+                    out.append((kind, i, "added"))
+                elif i not in new:
+                    out.append((kind, i, "removed"))
+                elif old[i] != new[i]:
+                    out.append((kind, i, "updated"))
+        return sorted(out)
+
+    with tempfile.TemporaryDirectory() as tmp:
+        root = os.path.join(tmp, "chain")
+        store.save_snapshot(base, root)
+        for n_up, n_del, e_up, e_del in chain:
+            store.save_delta(
+                root,
+                store.GraphDelta(
+                    nodes(n_up), edges(e_up), id_frame(n_del), id_frame(e_del)
+                ),
+                validate=False,
+            )
+        kinds = dict(store.list_version_kinds(root, spark))
+        assert sorted(kinds) == list(range(len(chain) + 1))
+        for v_old in kinds:
+            for v_new in range(v_old, len(chain) + 1):
+                fused = rows(
+                    store._version_diff_fused(
+                        root, 0, v_old, v_new, kinds, spark
+                    )
+                )
+                joined = rows(
+                    store._version_diff_joined(root, v_old, v_new, spark)
+                )
+                assert fused == joined, (v_old, v_new)
+                assert sorted(fused) == replayed(v_old, v_new), (v_old, v_new)

@@ -40,24 +40,18 @@ def main() -> None:
 
     spark = get_spark(app_name="explain", cpus=32, shuffle_partitions=32)
     qs = entry.queries()
-    def _total_jobs() -> int:
-        """App-lifetime job count from the JVM status store (counts
-        streaming micro-batch jobs too, which run on stream-execution
-        threads and dodge thread-local job groups). -1 when the
-        reflective call is unavailable."""
-        try:
-            return (
-                spark.sparkContext._jsc.sc().statusStore()
-                .jobsList(None).size()
-            )
-        except Exception:
-            return -1
+
+    def _next_job_id() -> int:
+        """The scheduler's next job id: a delta counts every job submitted
+        in between, streaming micro-batch jobs on stream-execution threads
+        included. Not the status store's job list, which keeps only
+        ``spark.ui.retainedJobs`` entries and lags the listener bus."""
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
     for name in names:
-        before = _total_jobs()
+        before = _next_job_id()
         df = qs[name](spark, SF_DIR)
-        after = _total_jobs()
-        n_jobs = after - before if before >= 0 and after >= 0 else -1
+        n_jobs = _next_job_id() - before
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
