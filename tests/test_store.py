@@ -581,12 +581,10 @@ def test_merge_on_read_across_a_version_gap(spark, micro, tmp_path):
     assert node_rows(store.load_snapshot(spark, root, version=2)) == sorted(
         base + [(x, "new", {"p": "x"})]
     )
+    g3 = store.load_snapshot(spark, root, version=3)
     at_v3 = [r for r in base if r[0] != y] + [(y, "person", {"p": "y"})]
-    assert node_rows(store.load_snapshot(spark, root, version=3)) == sorted(
-        at_v3
-    )
-    edges = store.load_snapshot(spark, root, version=3).edges
-    assert ids(edges) == ids(micro.edges)
+    assert node_rows(g3) == sorted(at_v3)
+    assert ids(g3.edges) == ids(micro.edges)
     assert [
         (r["kind"], r["id"], r["change"])
         for r in store.version_diff(root, 2, 3, spark).collect()
