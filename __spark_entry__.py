@@ -2554,8 +2554,8 @@ def q_dedup_minhash(spark, sf_dir):
 
 
 def q_dedup_minhash_keep(spark, sf_dir):
-    """Cluster-representative near-dup dedup (the scale path: star
-    candidates + connected components — no quadratic pair emission).
+    """Cluster-representative near-dup dedup (pairs linkage: exact-dup
+    collapse, then all verified LSH pairs + connected components).
     Oracled against DuckDB: exact all-pairs Jaccard ≥ 0.9 → recursive-CTE
     transitive closure → min-id per component. Pairs-linkage components are
     exact w.r.t. the candidate set, and LSH recall is 100% here
@@ -2967,14 +2967,15 @@ def q_set_similarity_join(spark, sf_dir):
 def q_dedup_keep_source(spark, sf_dir):
     """Near-dup dedup keeping the copy from the MOST-PREFERRED SOURCE
     (lowest srcN index; doc_id ties) — the multi-corpus merge policy
-    ('prefer the curated dump over the web crawl'). Exercises the
-    NON-text-derived score path of the keep-policy-aware collapse.
-    Routed through minhash_dedup_keep_multi with a single policy
-    (VERDICT r6 #2: the end-to-end minhash_dedup_keep call re-ran the
-    shingle+signature+band+verify pipeline, 36.3s at sf0.1; the multi
-    path's collapsed-representative clustering is pytest-pinned equal
-    per policy). Oracle: the recursive-closure components with the same
-    (source priority, doc_id) survivor sort."""
+    ('prefer the curated dump over the web crawl'). Exercises a
+    NON-text-derived score: each exact-dup group carries its own
+    (priority, -doc_id) argmax, so the preferred copy survives even
+    when another source's copy has the lower id. Routed through
+    minhash_dedup_keep_multi with a single policy; it and
+    minhash_dedup_keep(keep="max_score") reduce the same near-dup group
+    map, and their survivor sets are pytest-pinned equal. Oracle: the
+    recursive-closure components with the same (source priority,
+    doc_id) survivor sort."""
     docs = read_documents(spark, sf_dir).withColumn(
         "_prio",
         -F.regexp_extract(F.col("source"), r"(\d+)", 1).cast("int"),

@@ -755,6 +755,91 @@ def ngram_jaccard_pairs(
     )
 
 
+def _score_key(score_col: str, id_col: str) -> Column:
+    """The keep order: highest score, then lowest id (as ``-id``)."""
+    return F.struct(
+        F.col(score_col).alias("s"), (-F.col(id_col)).alias("nid")
+    )
+
+
+def _near_dup_groups(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    num_perm: int,
+    bands: int,
+    shingle_n: int,
+    arrow: bool,
+    score_cols: tuple[str, ...] = (),
+    sketch: DataFrame | None = None,
+) -> DataFrame:
+    """The near-dup substrate of the keep family: exact-dup collapse ->
+    banded LSH -> exact verify -> connected components. One row per
+    distinct text: (_digest, <id_col>, _n, *score_cols, component).
+
+    ``<id_col>`` is the group's min id and represents it in the LSH
+    stage; ``_n`` is the group's size; each score column holds the
+    group's ``max(struct(score, -id))``; ``component`` is the min-id CC
+    label over the representatives. All of them come from the collapse's
+    one ``groupBy(sha2)``. Identical texts have identical shingle sets
+    and signatures, so Jaccard to any third doc — and hence every
+    candidate edge and every component — is a function of the text
+    alone: the collapse preserves components while removing the
+    quadratic blowup of large exact-dup clusters inside LSH buckets.
+    Min, sum and lexicographic max are associative, so a per-component
+    min id, size or argmax over groups equals the same reduction over
+    all members, for any score column, text-derived or not.
+    """
+    from akka_graph_db_spark.operators.analytics import (
+        connected_components_from_pairs,
+    )
+
+    # localCheckpoint so the collapse shuffle isn't re-run by the pair
+    # stage's second source scan (projection collapse would otherwise
+    # re-inline it).
+    groups = (
+        df.groupBy(F.sha2(F.col(text_col), 256).alias("_digest"))
+        .agg(
+            F.min(
+                F.struct(
+                    F.col(id_col).alias(id_col),
+                    F.col(text_col).alias(text_col),
+                )
+            ).alias("_r"),
+            F.count(F.lit(1)).alias("_n"),
+            *[F.max(_score_key(c, id_col)).alias(c) for c in score_cols],
+        )
+        .select("_digest", f"_r.{id_col}", f"_r.{text_col}", "_n",
+                *score_cols)
+        .localCheckpoint(eager=False)
+    )
+    verified = minhash_dedup_pairs(
+        groups.select(id_col, text_col), text_col, id_col, threshold,
+        num_perm, bands, shingle_n, arrow, sketch=sketch,
+    ).select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
+    comp = connected_components_from_pairs(
+        groups.select(F.col(id_col).alias("id")), verified
+    )
+    return groups.drop(text_col).join(
+        comp.select(F.col("id").alias(id_col), "component"), id_col
+    )
+
+
+def _keep_survivors(
+    groups: DataFrame, id_col: str, score_col: str | None
+) -> DataFrame:
+    """One survivor per component: the min id, or (``score_col`` set,
+    holding a :func:`_score_key` struct) the argmax score with min-id
+    ties — one aggregation, no window."""
+    by_comp = groups.groupBy("component")
+    if score_col is None:
+        return by_comp.agg(F.min(id_col).alias(id_col)).select(id_col)
+    return by_comp.agg(F.max(score_col).alias("_b")).select(
+        (-F.col("_b.nid")).alias(id_col)
+    )
+
+
 def minhash_dedup_keep(
     df: DataFrame,
     text_col: str = "text",
@@ -782,12 +867,6 @@ def minhash_dedup_keep(
     ``"max_score"`` — the member with the highest ``score_col`` value
     (min id on ties), e.g. ``score_col="n_chars"`` keeps the most
     complete version of a near-dup family, the usual curation choice.
-    With pairs linkage the exact-dup collapse is KEEP-POLICY-AWARE:
-    each identical-text group is collapsed to the member the survivor
-    rule itself would pick (argmax (score, -id) under ``max_score``), so
-    lexicographic-max associativity makes the collapse component-
-    preserving for ANY score column — text-derived (n_chars) or not
-    (source priority).
 
     Two linkage strategies over the LSH candidate graph:
 
@@ -795,16 +874,11 @@ def minhash_dedup_keep(
       exact-verified same-bucket pairs (:func:`minhash_dedup_pairs`).
       EXACT single-linkage w.r.t. the candidate set — when LSH recall is
       100% this equals components over the true near-dup graph, which is
-      what the DuckDB closure oracle checks. Exact duplicates are
-      collapsed first (one representative per distinct text, chosen as the
-      group's min id): identical texts have identical shingle sets and
-      signatures, so Jaccard to any third doc — and hence every candidate
-      edge and every component — is a function of the text alone, making
-      the collapse exactly component-preserving while removing the
-      quadratic blowup of large exact-duplicate clusters inside LSH
-      buckets. Survivors are likewise unchanged: each representative IS
-      its exact group's min id, so min-per-component over representatives
-      equals min-per-component over all docs.
+      what the DuckDB closure oracle checks. Runs on
+      :func:`_near_dup_groups`: exact duplicates are collapsed to their
+      group's min id before LSH, and each group carries its own argmax
+      (score, -id), so the per-component min id or argmax over groups is
+      the survivor over all members, for any score column.
     - ``linkage="star"``: each band bucket contributes only STAR edges
       (bucket-min ↔ member): O(docs × bands) candidates, independent of
       cluster size — the adversarial-scale path (a 1 400-doc duplicate
@@ -823,84 +897,14 @@ def minhash_dedup_keep(
         raise ValueError("keep='max_score' requires score_col")
     if sketch is not None:
         _validate_sketch(sketch, num_perm, shingle_n)
-
-    def _survivors(comp: DataFrame) -> DataFrame:
-        if keep == "min_id":
-            return (
-                comp.groupBy("component")
-                .agg(F.min("id").alias(id_col))
-                .select(id_col)
-            )
-        # argmax(score) with min-id tiebreak, as one max over a
-        # (score, -id) struct — no window, one aggregation.
-        scores = df.select(
-            F.col(id_col).alias("id"), F.col(score_col).alias("_score")
-        )
-        return (
-            comp.join(scores, "id")
-            .groupBy("component")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("_score").alias("s"),
-                        (-F.col("id")).alias("nid"),
-                    )
-                ).alias("_b")
-            )
-            .select((-F.col("_b.nid")).alias(id_col))
-        )
+    key = score_col if keep == "max_score" else None
 
     if linkage == "pairs":
-        # Exact-dup collapse (see docstring), KEEP-POLICY-AWARE: the
-        # representative of each identical-text group is the member the
-        # survivor rule itself would pick (min id, or argmax score with
-        # min-id ties) — so the collapse is component-preserving for ANY
-        # score column, text-derived or not (e.g. source priority).
-        # localCheckpoint so the collapse shuffle isn't re-run by the
-        # pair stage's second source scan (projection collapse would
-        # otherwise re-inline it).
-        if keep == "min_id":
-            rep_struct = F.min(
-                F.struct(
-                    F.col(id_col).alias(id_col),
-                    F.col(text_col).alias(text_col),
-                )
-            )
-            rep_cols = [f"_r.{id_col}", f"_r.{text_col}"]
-            base_cols = [F.col(id_col), F.col(text_col)]
-            rep_sel = None
-        else:
-            rep_struct = F.max(
-                F.struct(
-                    F.col(score_col).alias("s"),
-                    (-F.col(id_col)).alias("nid"),
-                    F.col(text_col).alias(text_col),
-                )
-            )
-            base_cols = [
-                F.col(id_col), F.col(text_col), F.col(score_col)
-            ]
-            rep_sel = [
-                (-F.col("_r.nid")).alias(id_col),
-                F.col(f"_r.{text_col}").alias(text_col),
-            ]
-            rep_cols = None
-        reps = (
-            df.select(*base_cols)
-            .groupBy(F.sha2(F.col(text_col), 256).alias("_digest"))
-            .agg(rep_struct.alias("_r"))
+        groups = _near_dup_groups(
+            df, text_col, id_col, threshold, num_perm, bands, shingle_n,
+            arrow, score_cols=(key,) if key else (), sketch=sketch,
         )
-        reps = (
-            reps.select(*rep_cols) if rep_cols else reps.select(*rep_sel)
-        ).localCheckpoint(eager=False)
-        verified = minhash_dedup_pairs(
-            reps, text_col, id_col, threshold, num_perm, bands, shingle_n,
-            arrow, sketch=sketch,
-        ).select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
-        comp = connected_components_from_pairs(
-            reps.select(F.col(id_col).alias("id")), verified
-        )
-        return _survivors(comp)
+        return _keep_survivors(groups, id_col, key)
     if linkage != "star":
         raise ValueError(f"unknown linkage: {linkage!r}")
     if num_perm % bands != 0:
@@ -958,8 +962,12 @@ def minhash_dedup_keep(
     )
     comp = connected_components_from_pairs(
         base.select(F.col("_id").alias("id")), verified
-    )
-    return _survivors(comp)
+    ).select(F.col("id").alias(id_col), "component")
+    if key:
+        comp = comp.join(
+            df.select(id_col, _score_key(key, id_col).alias(key)), id_col
+        )
+    return _keep_survivors(comp, id_col, key)
 
 
 def minhash_dedup_keep_multi(
@@ -975,81 +983,32 @@ def minhash_dedup_keep_multi(
 ) -> DataFrame:
     """Every keep policy from ONE clustering. The near-dup graph is a
     function of the TEXTS alone — signatures, candidate edges, and exact
-    Jaccard never read ids or scores — so the expensive pipeline
-    (exact-dup collapse, band join, verify, connected components) is
-    policy-INDEPENDENT and runs once; each policy then reduces to a
-    per-component argmax over the full member set. Survivor sets equal
-    running ``minhash_dedup_keep(linkage="pairs")`` once per policy
-    (pytest-pinned; the collapse there is component-preserving for any
-    score, so both paths pick the policy argmax of the same component).
+    Jaccard never read ids or scores — so :func:`_near_dup_groups`
+    (collapse, band join, verify, connected components) runs once,
+    carrying every policy's per-group argmax, and each policy is then
+    one per-component reduction over the checkpointed groups. Survivor
+    sets equal running ``minhash_dedup_keep(linkage="pairs")`` once per
+    policy (pytest-pinned).
 
     ``policies`` maps a policy name to its score column (``None`` =
     min-id keep; a column name = max-score keep with min-id ties).
     Returns (policy, doc_id) survivors.
     """
-    from akka_graph_db_spark.operators.analytics import (
-        connected_components_from_pairs,
-    )
-
     if not policies:
         raise ValueError("policies must be non-empty")
-    score_cols = sorted({c for c in policies.values() if c is not None})
-    digested = df.select(
-        F.col(id_col), F.col(text_col), *score_cols
-    ).withColumn("_digest", F.sha2(F.col(text_col), 256))
-    # canonical min-id collapse: component structure is invariant to
-    # WHICH member represents an identical-text group (identical texts
-    # have identical signatures and Jaccard to any third doc)
-    reps = (
-        digested.groupBy("_digest")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col(id_col).alias(id_col),
-                    F.col(text_col).alias(text_col),
-                )
-            ).alias("_r")
+    score_cols = tuple(
+        sorted({c for c in policies.values() if c is not None})
+    )
+    groups = _near_dup_groups(
+        df, text_col, id_col, threshold, num_perm, bands, shingle_n, arrow,
+        score_cols=score_cols,
+    ).localCheckpoint(eager=False)  # one shuffle, N policy consumers
+    parts = [
+        _keep_survivors(groups, id_col, policies[name]).select(
+            F.lit(name).alias("policy"), id_col
         )
-        .select("_digest", f"_r.{id_col}", f"_r.{text_col}")
-        .localCheckpoint(eager=False)
-    )
-    verified = minhash_dedup_pairs(
-        reps.drop("_digest"), text_col, id_col, threshold, num_perm,
-        bands, shingle_n, arrow,
-    ).select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
-    comp = connected_components_from_pairs(
-        reps.select(F.col(id_col).alias("id")), verified
-    )
-    members = (
-        digested.select(F.col(id_col), "_digest", *score_cols)
-        .join(
-            reps.select("_digest", F.col(id_col).alias("_rep")), "_digest"
-        )
-        .join(comp.select(F.col("id").alias("_rep"), "component"), "_rep")
-        .select(id_col, "component", *score_cols)
-        .localCheckpoint(eager=False)  # one shuffle, N policy consumers
-    )
-    parts = []
-    for name in sorted(policies):
-        score_col = policies[name]
-        if score_col is None:
-            surv = members.groupBy("component").agg(
-                F.min(id_col).alias(id_col)
-            )
-        else:
-            surv = (
-                members.groupBy("component")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col(score_col).alias("s"),
-                            (-F.col(id_col)).alias("nid"),
-                        )
-                    ).alias("_b")
-                )
-                .select((-F.col("_b.nid")).alias(id_col))
-            )
-        parts.append(surv.select(F.lit(name).alias("policy"), id_col))
+        for name in sorted(policies)
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1737,57 +1696,18 @@ def dedup_cluster_stats(
     the size histogram is what tells you whether removal is dominated
     by a few mega-clusters (boilerplate) or a long tail (mirrors).
 
-    Same clustering substrate as :func:`minhash_dedup_keep` pairs
-    linkage (exact-dup min-id collapse -> banded LSH -> exact verify ->
-    connected components), so its cost and its 100 TB shape are that
-    pipeline's; the histogram itself is two tiny aggregations over the
-    (doc -> component) map. The entry-registry `dup_cluster_histogram`
+    A reduction over the keep family's :func:`_near_dup_groups`: a
+    cluster's size is the sum of its exact-dup groups' sizes, then one
+    histogram aggregation. The entry-registry `dup_cluster_histogram`
     computes the same histogram WITHOUT the collapse (CC over all docs
     and all verified pairs) — correct, but a d-copy exact-dup cluster
     contributes C(d,2) verified pairs there vs one representative
     here; this is the adversarial-scale route, kept benchmarked side
     by side with the direct one.
     """
-    from akka_graph_db_spark.operators.analytics import (
-        connected_components_from_pairs,
-    )
-
-    digested = df.select(F.col(id_col), F.col(text_col)).withColumn(
-        "_digest", F.sha2(F.col(text_col), 256)
-    )
-    reps = (
-        digested.groupBy("_digest")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col(id_col).alias(id_col),
-                    F.col(text_col).alias(text_col),
-                )
-            ).alias("_r")
-        )
-        .select("_digest", f"_r.{id_col}", f"_r.{text_col}")
-        .localCheckpoint(eager=False)
-    )
-    verified = minhash_dedup_pairs(
-        reps.drop("_digest"), text_col, id_col, threshold, num_perm,
-        bands, shingle_n, arrow,
-    ).select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
-    comp = connected_components_from_pairs(
-        reps.select(F.col(id_col).alias("id")), verified
-    )
-    members = (
-        digested.select(F.col(id_col), "_digest")
-        .join(
-            reps.select("_digest", F.col(id_col).alias("_rep")),
-            "_digest",
-        )
-        .join(comp.select(F.col("id").alias("_rep"), "component"),
-              "_rep")
-        .select(id_col, "component")
-    )
-    sizes = members.groupBy("component").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
+    sizes = _near_dup_groups(
+        df, text_col, id_col, threshold, num_perm, bands, shingle_n, arrow
+    ).groupBy("component").agg(F.sum("_n").alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
@@ -1822,52 +1742,21 @@ def dedup_manifest(
     The survivor of a cluster is its minimum id, which is also the
     component id itself (the component label from min-id propagation IS
     the global minimum member), so the manifest is a filter on the
-    (doc -> component) map — no second aggregation.
-
-    Same clustering substrate (exact-dup collapse -> banded LSH ->
-    exact verify -> connected components) and hence the same 100 TB
-    shape as the keep family.
+    (doc -> component) map — no second aggregation. It is the one
+    reduction of :func:`_near_dup_groups` that needs every member: one
+    digest join maps each doc to its group's component.
     """
-    from akka_graph_db_spark.operators.analytics import (
-        connected_components_from_pairs,
+    groups = _near_dup_groups(
+        df, text_col, id_col, threshold, num_perm, bands, shingle_n, arrow
     )
-
-    digested = df.select(F.col(id_col), F.col(text_col)).withColumn(
-        "_digest", F.sha2(F.col(text_col), 256)
-    )
-    reps = (
-        digested.groupBy("_digest")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col(id_col).alias(id_col),
-                    F.col(text_col).alias(text_col),
-                )
-            ).alias("_r")
+    return (
+        df.select(
+            F.col(id_col).alias("removed_id"),
+            F.sha2(F.col(text_col), 256).alias("_digest"),
         )
-        .select("_digest", f"_r.{id_col}", f"_r.{text_col}")
-        .localCheckpoint(eager=False)
-    )
-    verified = minhash_dedup_pairs(
-        reps.drop("_digest"), text_col, id_col, threshold, num_perm,
-        bands, shingle_n, arrow,
-    ).select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
-    comp = connected_components_from_pairs(
-        reps.select(F.col(id_col).alias("id")), verified
-    )
-    members = (
-        digested.select(F.col(id_col), "_digest")
-        .join(
-            reps.select("_digest", F.col(id_col).alias("_rep")),
-            "_digest",
-        )
-        .join(comp.select(F.col("id").alias("_rep"), "component"),
-              "_rep")
-        .select(id_col, "component")
-    )
-    return members.where(F.col(id_col) != F.col("component")).select(
-        F.col("component").alias("survivor_id"),
-        F.col(id_col).alias("removed_id"),
+        .join(groups.select("_digest", "component"), "_digest")
+        .where(F.col("removed_id") != F.col("component"))
+        .select(F.col("component").alias("survivor_id"), "removed_id")
     )
 
 

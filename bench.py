@@ -113,7 +113,7 @@ HEADLINE = [
     "mis_geo",                # Luby MIS symmetry breaking
     "token_rarity",           # vocab join + per-doc rarity rollup
     "dedup_incremental",      # asymmetric new-vs-base band join
-    "dedup_policy_sweep",     # 3 keep policies off ONE shared sketch
+    "dedup_policy_sweep",     # 3 keep policies off ONE clustering
     "link_prediction_auto",   # degree-histogram-derived wedge cap
     "tpch_q2",                # decorrelated min-cost supplier join-back
     "tpch_q9",                # snowflake probe, decimal profit

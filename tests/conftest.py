@@ -3,6 +3,7 @@ hand-built micro-graph exercising every canonical-semantics edge case."""
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -19,6 +20,10 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    # get_spark defaults to a 16g driver heap. Over a whole test run G1
+    # grows the committed heap towards that cap (about 15 GB resident),
+    # which can exhaust a 16 GB host; the test inputs need far less.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark(app_name="tests", cpus=4, shuffle_partitions=4)
     yield s
 

@@ -1307,10 +1307,11 @@ def test_keep_multi_equals_per_policy_singles(spark):
 
 
 def test_minhash_keep_source_priority_exact_dup(spark):
-    """Exact duplicates in DIFFERENT sources: the keep-policy-aware
-    collapse must keep the PREFERRED source's copy even though the
-    other has the lower doc_id (the old min-id collapse would have
-    dropped it before scores were consulted)."""
+    """Exact duplicates in DIFFERENT sources: the exact-dup group is
+    represented by its min id but carries its own score argmax, so the
+    PREFERRED source's copy must survive even though the other has the
+    lower doc_id (a collapse that kept only the min id would drop it
+    before scores were consulted)."""
     from akka_graph_db_spark.functions import dedup
 
     text = "alpha beta gamma delta epsilon zeta eta theta"

@@ -284,6 +284,105 @@ def test_containment_join_lossless(token_lists, t):
     assert got == want
 
 
+# -- near-dup keep family == union-find closure over exact Jaccard ------------
+
+def _closure_components(texts, t):
+    """Components of the exact token-set Jaccard >= t graph, replayed with
+    a plain union-find: {doc id: frozenset of its component's ids}."""
+    sets = {i: set(text.split()) for i, text in texts.items()}
+    parent = {i: i for i in sets}
+
+    def find(i):
+        while parent[i] != i:
+            i = parent[i]
+        return i
+
+    ids = sorted(sets)
+    for n, a in enumerate(ids):
+        for b in ids[n + 1:]:
+            if len(sets[a] & sets[b]) / len(sets[a] | sets[b]) >= t:
+                parent[find(a)] = find(b)
+    groups = {}
+    for i in ids:
+        groups.setdefault(find(i), set()).add(i)
+    return {i: frozenset(g) for g in groups.values() for i in g}
+
+
+# five Spark pipelines per example: about 7 s an example on 4 cores
+@settings(max_examples=6, deadline=None)
+@given(
+    token_lists=docs_strategy,
+    copies=st.lists(st.integers(0, 6), max_size=3),
+    scores=st.lists(st.integers(0, 2), min_size=10, max_size=10),
+    t=st.sampled_from([0.5, 0.75, 0.9]),
+)
+@example(
+    # chain 0-1-2 (J = 0.6 per link, 0.33 end to end) and the exact-dup
+    # group {3, 4, 5} whose best score (2, shared by 4 and 5) is not on
+    # its min id
+    token_lists=[["a", "b", "c", "d"], ["b", "c", "d", "e"],
+                 ["c", "d", "e", "f"], ["a", "f"]],
+    copies=[3, 3],
+    scores=[0, 2, 1, 0, 2, 2, 0, 0, 0, 0],
+    t=0.5,
+)
+def test_keep_family_matches_closure_replay(token_lists, copies, scores, t):
+    """Every reduction over the near-dup substrate (exact-dup collapse,
+    LSH, verify, connected components) equals the same reduction over a
+    union-find closure of the exact Jaccard >= t pairs: min-id and
+    max-score survivors, the multi-policy survivors, the cluster-size
+    histogram and the removal manifest. Exact copies are planted under
+    new ids, and scores in 0..2 tie. With num_perm = bands = 32 a pair
+    at J >= t is missed with probability <= (1 - t)**32."""
+    from collections import Counter
+
+    from akka_graph_db_spark.functions import dedup
+
+    spark = _SPARK["s"]
+    texts = {i: " ".join(toks) for i, toks in enumerate(token_lists)}
+    n = len(texts)
+    for k, j in enumerate(copies):
+        texts[n + k] = texts[j % n]
+    df = spark.createDataFrame(
+        [(i, text, scores[i]) for i, text in texts.items()],
+        "doc_id bigint, text string, score int",
+    )
+    kw = dict(threshold=t, num_perm=32, bands=32, shingle_n=1)
+
+    comps = set(_closure_components(texts, t).values())
+    want = {
+        "min_id": {min(c) for c in comps},
+        "best": {max(c, key=lambda i: (scores[i], -i)) for c in comps},
+    }
+    sizes = Counter(len(c) for c in comps)
+    want_hist = {s: (k, s * k) for s, k in sizes.items()}
+    want_manifest = {(min(c), i) for c in comps for i in c if i != min(c)}
+
+    def ids(frame):
+        return {r["doc_id"] for r in frame.collect()}
+
+    assert ids(dedup.minhash_dedup_keep(df, **kw)) == want["min_id"]
+    assert ids(
+        dedup.minhash_dedup_keep(
+            df, keep="max_score", score_col="score", **kw
+        )
+    ) == want["best"]
+    multi = {}
+    for r in dedup.minhash_dedup_keep_multi(
+        df, policies={"min_id": None, "best": "score"}, **kw
+    ).collect():
+        multi.setdefault(r["policy"], set()).add(r["doc_id"])
+    assert multi == want
+    assert {
+        r["cluster_size"]: (r["n_clusters"], r["n_docs"])
+        for r in dedup.dedup_cluster_stats(df, **kw).collect()
+    } == want_hist
+    assert {
+        (r["survivor_id"], r["removed_id"])
+        for r in dedup.dedup_manifest(df, **kw).collect()
+    } == want_manifest
+
+
 # -- durable streaming fold: slice path == whole-graph fold -------------------
 
 _FOLD_CMDS = (

@@ -83,7 +83,7 @@ AUDITED = [
     ("tpch_q20", "nested semi-join chain (dominant supplier)"),
     ("tpch_q21", "per-order distinct aggregation (no correlated probes)"),
     ("link_prediction_auto", "degree-histogram-derived wedge cap"),
-    ("dedup_policy_sweep", "3 keep policies over one materialized sketch"),
+    ("dedup_policy_sweep", "3 keep policies over one clustering"),
     ("semantic_prune", "cluster-bounded integer-exact cosine prune"),
     ("coreness_parts", "h-index rounds: neighbor join + sorted-list agg"),
     ("hybrid_search", "BM25 + cosine rankings fused on integer ranks"),
