@@ -288,7 +288,7 @@ def test_containment_join_lossless(token_lists, t):
 
 def _closure_components(texts, t):
     """Components of the exact token-set Jaccard >= t graph, replayed with
-    a plain union-find: {doc id: frozenset of its component's ids}."""
+    a plain union-find, as a set of frozensets of doc ids."""
     sets = {i: set(text.split()) for i, text in texts.items()}
     parent = {i: i for i in sets}
 
@@ -305,10 +305,10 @@ def _closure_components(texts, t):
     groups = {}
     for i in ids:
         groups.setdefault(find(i), set()).add(i)
-    return {i: frozenset(g) for g in groups.values() for i in g}
+    return {frozenset(g) for g in groups.values()}
 
 
-# five Spark pipelines per example: about 7 s an example on 4 cores
+# five Spark pipelines per example: about 5 s an example on 4 cores
 @settings(max_examples=6, deadline=None)
 @given(
     token_lists=docs_strategy,
@@ -349,7 +349,7 @@ def test_keep_family_matches_closure_replay(token_lists, copies, scores, t):
     )
     kw = dict(threshold=t, num_perm=32, bands=32, shingle_n=1)
 
-    comps = set(_closure_components(texts, t).values())
+    comps = _closure_components(texts, t)
     want = {
         "min_id": {min(c) for c in comps},
         "best": {max(c, key=lambda i: (scores[i], -i)) for c in comps},
