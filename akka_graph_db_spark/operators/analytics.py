@@ -7,7 +7,9 @@ OLTP-style CRUD/traversal adapter; SURVEY.md §2.7/§2.8). The north star is
 GraphX-class analytics re-expressed in pure DataFrame form: every iterative
 algorithm is a driver-side superstep loop where each superstep is one
 Catalyst-planned join + aggregation (the Pregel pattern of GraphX's
-aggregateMessages, without the RDD API).
+aggregateMessages, without the RDD API). The fixed-round loops (rank and
+label families) supply only a ``step``; one driver, :func:`_supersteps`,
+owns their checkpoint cadence, cache release and job descriptions.
 
 Scale design notes (100 TB):
 
@@ -30,15 +32,54 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from akka_graph_db_spark.model import PropertyGraph
 
 _CHECKPOINT_EVERY = 3
+
+
+def _supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    n_rounds: int,
+    label: str,
+    checkpoint_every: int = _CHECKPOINT_EVERY,
+) -> DataFrame:
+    """Run ``state = step(state)`` for ``n_rounds`` rounds. Every
+    ``checkpoint_every``-th round is an eager ``localCheckpoint``, the
+    others are lazily persisted (a state feeds several consumers next
+    round); never both. A checkpoint releases the persisted rounds it
+    replaces, and exit or error releases the rest. The result is always
+    an eager checkpoint (the last round's own if it was one). Round n's
+    jobs are described ``label:r{n}``; the caller's description is
+    restored on exit."""
+    sc = state.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    held: list[DataFrame] = []
+    checkpointed = False
+    try:
+        for r in range(1, n_rounds + 1):
+            sc.setJobDescription(f"{label}:r{r}")
+            state = step(state)
+            checkpointed = r % checkpoint_every == 0
+            if checkpointed:
+                state = state.localCheckpoint(eager=True)
+                for df in held:
+                    df.unpersist()
+                held = []
+            else:
+                state = state.persist(StorageLevel.MEMORY_AND_DISK)
+                held.append(state)
+        return state if checkpointed else state.localCheckpoint(eager=True)
+    finally:
+        for df in held:
+            df.unpersist()
+        sc.setLocalProperty("spark.job.description", caller)
 
 
 def _edge_pairs(
@@ -298,6 +339,98 @@ def connected_components_two_phase(
         e.unpersist()
 
 
+def _rank_iterate(
+    vertices: DataFrame,
+    edges: DataFrame,
+    damping: float,
+    n_iter: int,
+    reset: Column | None,
+    label: str,
+) -> DataFrame:
+    """PageRank's rounds over directed (a, b) or weighted (a, b, w)
+    edges; returns (id, rank). ``reset=None``: uniform teleport, init
+    1.0, rank' = 1-d + d·(recv + dang/n). A ``reset`` Column over ``id``
+    (personalized): init reset, rank' = (1-d)·reset + d·(recv +
+    dang·reset). ``recv`` sums rank/out (rank·w/Σ_out w) over in-edges
+    from nodes with out > 0; ``dang`` is the others' rank."""
+    npart = vertices.sparkSession.sparkContext.defaultParallelism
+    weighted = "w" in edges.columns
+    # Hash-partition the edge frame by the RECEIVING endpoint and the
+    # node frame by id ONCE (persist keeps outputPartitioning visible to
+    # Catalyst): with the rank state broadcast, each superstep's
+    # contribution groupBy(b) and the nodes⋈contribs join then need NO
+    # exchange — the Σdeg contribution volume is never reshuffled
+    # (same r7 lever as coreness/betweenness; 8.9s -> ~6s at sf0.1).
+    edges = edges.repartition(npart, F.col("b")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    out_deg = edges.groupBy(F.col("a").alias("id")).agg(
+        (F.sum("w") if weighted else F.count(F.lit(1))).alias("out_degree")
+    )
+    nodes = (
+        vertices.select("id")
+        .join(out_deg, "id", "left")
+        .select(
+            "id",
+            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
+            *([] if reset is None else [reset.alias("reset")]),
+        )
+        .repartition(npart, F.col("id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    contrib = F.col("rank") / F.col("out_degree")
+    if weighted:
+        contrib = (F.col("rank") * F.col("w")) / F.col("out_degree")
+    try:
+        n = nodes.count()
+        if n == 0:
+            return vertices.select("id", F.lit(0.0).alias("rank"))
+        recv = F.coalesce("recv", F.lit(0.0))
+        if reset is None:
+            init = F.lit(1.0)
+            rank = F.lit(1.0 - damping) + F.lit(damping) * (
+                recv + F.col("_dang") / n
+            )
+        else:
+            init = F.col("reset")
+            rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
+                recv + F.col("_dang") * F.col("reset")
+            )
+
+        def step(state: DataFrame) -> DataFrame:
+            # one (id, rank) row per node — size-gated broadcast keeps
+            # the persisted edge frame from re-shuffling every superstep
+            # (the CC-harness pattern); past the gate, shuffle join
+            st = (
+                F.broadcast(state)
+                if n <= _CC_BROADCAST_MAX_VERTICES
+                else state
+            )
+            contribs = (
+                edges.join(st, edges["a"] == st["id"], "inner")
+                .where(F.col("out_degree") > 0)
+                .select(F.col("b").alias("id"), contrib.alias("contrib"))
+                .groupBy("id")
+                .agg(F.sum("contrib").alias("recv"))
+            )
+            # dangling mass folded INTO the plan (1-row agg, broadcast
+            # cross join) — no driver collect per iteration
+            dangling = state.where(F.col("out_degree") == 0).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
+            )
+            return (
+                nodes.join(contribs, "id", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select("id", "out_degree", rank.alias("rank"))
+            )
+
+        state = nodes.select("id", "out_degree", init.alias("rank"))
+        return _supersteps(state, step, n_iter, label).select("id", "rank")
+    finally:
+        edges.unpersist()
+        nodes.unpersist()
+
+
 def pagerank(
     g: PropertyGraph,
     edge_labels: Sequence[str] | None = None,
@@ -309,7 +442,7 @@ def pagerank(
 
     Returns (id, rank); ranks sum to ~N (GraphX convention: initial rank 1.0
     per node, dangling mass redistributed uniformly). Each superstep is one
-    join + one groupBy, both on node id.
+    join + one groupBy, both on node id (:func:`_rank_iterate`).
 
     ``weight``: an edge property name decoded as double (missing values
     default to 1.0, the :func:`shortest_paths` convention) — the random
@@ -319,109 +452,17 @@ def pagerank(
     Weights are assumed non-negative; a node whose total out-weight is 0
     is dangling.
     """
-    if weight is None:
-        edges = _edge_pairs(g, edge_labels, directed=True)
-        out_agg = F.count(F.lit(1))
-    else:
-        from akka_graph_db_spark.model import prop_double
+    from akka_graph_db_spark.model import prop_double
 
-        e = g.edges
-        if edge_labels:
-            e = e.where(F.col("label").isin(list(edge_labels)))
-        edges = e.select(
-            F.col("src").alias("a"),
-            F.col("dst").alias("b"),
-            F.coalesce(prop_double("props", weight), F.lit(1.0)).alias(
-                "w"
-            ),
-        )
-        out_agg = F.sum("w")
-    npart = g.nodes.sparkSession.sparkContext.defaultParallelism
-    # Hash-partition the edge frame by the RECEIVING endpoint and the
-    # node frame by id ONCE (persist keeps outputPartitioning visible to
-    # Catalyst): with the rank state broadcast, each superstep's
-    # contribution groupBy(b) and the nodes⋈contribs join then need NO
-    # exchange — the Σdeg contribution volume is never reshuffled
-    # (same r7 lever as coreness/betweenness; 8.9s -> ~6s at sf0.1).
-    edges = edges.repartition(npart, F.col("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out_deg = edges.groupBy(F.col("a").alias("id")).agg(
-        out_agg.alias("out_degree")
-    )
-    nodes = (
-        g.nodes.select("id")
-        .join(out_deg, "id", "left")
-        .select("id", F.coalesce("out_degree", F.lit(0)).alias("out_degree"))
-        .repartition(npart, F.col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = nodes.count()
-    if n == 0:
-        return g.nodes.select("id", F.lit(0.0).alias("rank"))
-    state = nodes.select("id", "out_degree", F.lit(1.0).alias("rank"))
-    persisted: list[DataFrame] = []
-    try:
-        for it in range(n_iter):
-            # one (id, rank) row per node — size-gated broadcast keeps
-            # the persisted edge frame from re-shuffling every superstep
-            # (the CC-harness pattern); past the gate, shuffle join
-            st = (
-                F.broadcast(state)
-                if n <= _CC_BROADCAST_MAX_VERTICES
-                else state
-            )
-            contrib = (
-                F.col("rank") / F.col("out_degree")
-                if weight is None
-                else (F.col("rank") * F.col("w")) / F.col("out_degree")
-            )
-            contribs = (
-                edges.join(st, edges["a"] == st["id"], "inner")
-                .where(F.col("out_degree") > 0)
-                .select(F.col("b").alias("id"), contrib.alias("contrib"))
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("recv"))
-            )
-            # dangling mass folded INTO the plan (1-row agg, broadcast
-            # cross join) — no driver collect per iteration; the only
-            # actions are the periodic checkpoint materializations
-            dangling = state.where(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-            )
-            state = (
-                nodes.join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "id",
-                    "out_degree",
-                    (
-                        F.lit(1.0 - damping)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce("recv", F.lit(0.0))
-                            + F.col("_dang") / n
-                        )
-                    ).alias("rank"),
-                )
-            )
-            # lazy persist: each state feeds TWO consumers next iteration
-            # (contribs + dangling) — without the cache the checkpoint
-            # action would recompute the chain 2^k times
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(state)
-            if (it + 1) % _CHECKPOINT_EVERY == 0:
-                state = state.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
-        out = state.select("id", "rank").localCheckpoint(eager=True)
-        return out
-    finally:
-        edges.unpersist()
-        nodes.unpersist()
-        for df in persisted:
-            df.unpersist()
+    e = g.edges
+    if edge_labels:
+        e = e.where(F.col("label").isin(list(edge_labels)))
+    cols = [F.col("src").alias("a"), F.col("dst").alias("b")]
+    if weight is not None:
+        w = F.coalesce(prop_double("props", weight), F.lit(1.0))
+        cols.append(w.alias("w"))
+    edges = e.select(*cols)
+    return _rank_iterate(g.nodes, edges, damping, n_iter, None, "pagerank")
 
 
 def label_propagation_communities(
@@ -457,7 +498,8 @@ def label_propagation(
     Each superstep = join(edges, state) → two hash aggregations, all
     shuffled on node id — the same exchange-reuse shape as the other
     Pregel loops here; the argmax is an order-free ``max(struct)``, no
-    window sort.
+    window sort. Rounds run on :func:`_supersteps` (every third one
+    checkpointed).
     """
     edges = (
         pairs.select("a", "b")
@@ -467,11 +509,10 @@ def label_propagation(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     verts = vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
-    n_vertices = verts.count()
-    state = verts.select("id", F.col("id").alias("community"))
-    persisted: list[DataFrame] = []
     try:
-        for it in range(n_iter):
+        n_vertices = verts.count()
+
+        def step(state: DataFrame) -> DataFrame:
             # size-gated state broadcast, as in pagerank/hits/CC
             st = (
                 F.broadcast(state)
@@ -490,28 +531,16 @@ def label_propagation(
                     F.struct(F.col("c"), (-F.col("community")).alias("nc"))
                 ).alias("m")
             ).select("id", (-F.col("m.nc")).alias("new_community"))
-            state = (
-                state.join(best, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("new_community", "community").alias(
-                        "community"
-                    ),
-                )
+            return state.join(best, "id", "left").select(
+                "id",
+                F.coalesce("new_community", "community").alias("community"),
             )
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(state)
-            if (it + 1) % _CHECKPOINT_EVERY == 0:
-                state = state.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
-        return state.localCheckpoint(eager=True)
+
+        state = verts.select("id", F.col("id").alias("community"))
+        return _supersteps(state, step, n_iter, "label_propagation")
     finally:
         edges.unpersist()
         verts.unpersist()
-        for df in persisted:
-            df.unpersist()
 
 
 _SSSP_BROADCAST_MAX_FRONTIER = 5_000_000
@@ -2171,95 +2200,23 @@ def personalized_pagerank(
     damping: float = 0.85,
     n_iter: int = 10,
 ) -> DataFrame:
-    """Personalized PageRank: the reset mass (and the dangling mass)
-    returns to the SOURCE set instead of spreading uniformly — the
-    standard proximity/recommendation score "how reachable is v from S
-    by short random walks". Fixed iteration count, deterministic; same
-    superstep shape as :func:`pagerank` (one join + one groupBy per
-    iteration, all shuffled on node id, dangling total folded in-plan
-    via a 1-row broadcast).
-
-    Returns (id, rank) for every node; ranks sum to ~1 (init 1/|S| on
-    sources, 0 elsewhere).
-    """
+    """Personalized PageRank, the proximity score "how reachable is v
+    from S by short random walks": :func:`pagerank`'s own iteration
+    (:func:`_rank_iterate`) with a reset vector of 1/|S| on the sources,
+    0 elsewhere. The rank starts there, and the teleport and dangling
+    mass return to it instead of spreading uniformly. Fixed iteration
+    count, deterministic. Returns (id, rank) for every node; ranks sum
+    to ~1."""
     if not source_ids:
         raise ValueError("source_ids must be non-empty")
-    n_src = len(source_ids)
-    edges = _edge_pairs(g, edge_labels, directed=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out_deg = edges.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
     src_set = [int(s) for s in source_ids]
-    nodes = (
-        g.nodes.select("id")
-        .join(out_deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            F.when(F.col("id").isin(src_set), F.lit(1.0 / n_src))
-            .otherwise(F.lit(0.0))
-            .alias("reset"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    reset = F.when(
+        F.col("id").isin(src_set), F.lit(1.0 / len(src_set))
+    ).otherwise(F.lit(0.0))
+    edges = _edge_pairs(g, edge_labels, directed=True)
+    return _rank_iterate(
+        g.nodes, edges, damping, n_iter, reset, "personalized_pagerank"
     )
-    state = nodes.select(
-        "id", "out_degree", "reset", F.col("reset").alias("rank")
-    )
-    n_vertices = nodes.count()
-    persisted: list[DataFrame] = []
-    try:
-        for it in range(n_iter):
-            # size-gated state broadcast, as in pagerank/hits/CC
-            st = (
-                F.broadcast(state)
-                if n_vertices <= _CC_BROADCAST_MAX_VERTICES
-                else state
-            )
-            contribs = (
-                edges.join(st, edges["a"] == st["id"], "inner")
-                .where(F.col("out_degree") > 0)
-                .select(
-                    F.col("b").alias("id"),
-                    (F.col("rank") / F.col("out_degree")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("recv"))
-            )
-            dangling = state.where(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-            )
-            state = (
-                nodes.join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "id",
-                    "out_degree",
-                    "reset",
-                    (
-                        F.lit(1.0 - damping) * F.col("reset")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce("recv", F.lit(0.0))
-                            + F.col("_dang") * F.col("reset")
-                        )
-                    ).alias("rank"),
-                )
-            )
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(state)
-            if (it + 1) % _CHECKPOINT_EVERY == 0:
-                state = state.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
-        return state.select("id", "rank").localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
-        nodes.unpersist()
-        for df in persisted:
-            df.unpersist()
 
 
 def triplets(g: PropertyGraph) -> DataFrame:
@@ -2291,10 +2248,13 @@ def aggregate_messages(
     """GraphX's aggregateMessages primitive, DataFrame-native: evaluate
     message expressions over the triplet view (columns ``edge``, ``src``,
     ``dst`` — structs of the full rows), send to either endpoint, and
-    aggregate per receiving node. This is the single primitive every
-    superstep loop in this module specializes (degrees, PageRank, CC,
-    HITS are all one aggregate_messages per round); exposing it makes
+    aggregate per receiving node. This is the user-facing primitive
+    (``GraphDB.aggregate_messages`` and the ``aggmsg_max_acctbal``
+    query call it): it makes
     user-defined graph aggregations first-class without touching RDDs.
+    The loops in this module do not call it; they join their own
+    narrower (a, b) edge frames against a per-node state instead of the
+    full triplet view.
 
     ``to_dst`` / ``to_src``: Column expressions over the triplet (NULL
     messages are dropped, mirroring GraphX's sendMsg not calling
@@ -3891,7 +3851,8 @@ def seeded_label_propagation(
     one (node, label) vote count (map-side combinable) + one per-node
     argmax window whose partition is at most the node's distinct
     neighbor-label set (bounded by the seed alphabet, never the
-    corpus); per-round localCheckpoint keeps the plan linear.
+    corpus); every round is checkpointed (:func:`_supersteps` with
+    ``checkpoint_every=1``), which keeps the plan linear.
     """
     from pyspark.sql.window import Window
 
@@ -3911,7 +3872,8 @@ def seeded_label_propagation(
     w = Window.partitionBy("id").orderBy(
         F.col("_c").desc(), "label"
     )
-    for _ in range(rounds):
+
+    def step(state: DataFrame) -> DataFrame:
         msgs = adj.join(
             state.where(F.col("label").isNotNull()).select(
                 F.col("id").alias("a"), "label"
@@ -3925,7 +3887,7 @@ def seeded_label_propagation(
             .where(F.col("_rn") == 1)
             .select("id", F.col("label").alias("_win"))
         )
-        state = (
+        return (
             nodes.join(sd, "id", "left")
             .join(
                 state.select("id", F.col("label").alias("_prev")),
@@ -3937,8 +3899,11 @@ def seeded_label_propagation(
                 "id",
                 F.coalesce("_seed", "_win", "_prev").alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    state = _supersteps(
+        state, step, rounds, "seeded_label_propagation", checkpoint_every=1
+    )
     return (
         state.where(F.col("label").isNotNull())
         .join(sd, "id", "left")
@@ -4190,7 +4155,9 @@ def katz_centrality(
     x_l = A·x_{l-1} over the symmetrized edge frame — each round one
     equi-join (state side is one row per vertex, broadcastable below
     the usual gate) + one groupBy on the destination. The edge frame is
-    persisted once and reused; no transitive materialization, counts
+    persisted once and reused; the state carries walks_1..walks_l as
+    columns, one checkpointed round of :func:`_supersteps` each, so the
+    result needs no join. No transitive materialization, counts
     only (never path enumeration) — A³ by value, not by listing, the
     same discipline as label_path_census.
     """
@@ -4203,54 +4170,54 @@ def katz_centrality(
     nodes = sym.select(F.col("a").alias("id")).distinct().persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # per-vertex state: broadcast only under the CC gate (same rule as
-    # connected_components_from_pairs) — a billion-vertex graph falls
-    # back to the shuffled equi-join.
-    small = nodes.count() <= _CC_BROADCAST_MAX_VERTICES
-    state = nodes.select("id", F.lit(1).cast("bigint").alias("_x"))
-    walks = []
-    for _ in range(max_len):
-        st = state.select(F.col("id").alias("a"), "_x")
-        msgs = (
-            sym.join(
-                F.broadcast(st) if small else st,
-                "a",
+    try:
+        # per-vertex state: broadcast only under the CC gate (same rule
+        # as connected_components_from_pairs) — a billion-vertex graph
+        # falls back to the shuffled equi-join.
+        small = nodes.count() <= _CC_BROADCAST_MAX_VERTICES
+
+        def step(state: DataFrame) -> DataFrame:
+            # state is (id, walks_0..walks_{l-1}); add walks_l
+            st = state.select(
+                F.col("id").alias("a"), F.col(state.columns[-1]).alias("_x")
             )
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.sum("_x").alias("_x"))
+            msgs = (
+                sym.join(F.broadcast(st) if small else st, "a")
+                .groupBy(F.col("b").alias("id"))
+                .agg(F.sum("_x").alias("_x"))
+            )
+            # isolated-in-round vertices get 0 walks, not a dropped row
+            return state.join(msgs, "id", "left").select(
+                *state.columns,
+                F.coalesce("_x", F.lit(0)).alias(
+                    f"walks_{len(state.columns) - 1}"
+                ),
+            )
+
+        # every round is checkpointed: each state is |V| rows and must
+        # be materialized before sym.unpersist() below, or the result
+        # would re-derive the symmetric edge frame uncached
+        walks = _supersteps(
+            nodes.select("id", F.lit(1).cast("bigint").alias("walks_0")),
+            step,
+            max_len,
+            "katz_centrality",
+            checkpoint_every=1,
         )
-        # isolated-in-round vertices get 0 walks, not a dropped row.
-        # EAGER checkpoint: each round's state is |V| rows; it must be
-        # materialized before sym.unpersist() below or the lazy result
-        # would re-derive the symmetric edge frame uncached per round.
-        state = nodes.join(msgs, "id", "left").select(
-            "id", F.coalesce("_x", F.lit(0)).alias("_x")
-        ).localCheckpoint(eager=True)
-        walks.append(state)
-    out = nodes
-    for l, w in enumerate(walks, start=1):
-        out = out.join(
-            w.select("id", F.col("_x").alias(f"walks_{l}")), "id"
-        )
+    finally:
+        sym.unpersist()
+        nodes.unpersist()
     # β = beta_permille/1000: katz·1000^max_len is the exact integer
     # Σ walks_l · beta_permille^l · 1000^(max_len-l)
-    nano = None
-    for l in range(1, max_len + 1):
-        term = F.col(f"walks_{l}") * F.lit(
-            beta_permille ** l * 1000 ** (max_len - l)
-        )
-        nano = term if nano is None else nano + term
-    res = out.select(
+    nano = sum(
+        F.col(f"walks_{l}") * F.lit(beta_permille**l * 1000 ** (max_len - l))
+        for l in range(1, max_len + 1)
+    )
+    return walks.select(
         "id",
         *[f"walks_{l}" for l in range(1, max_len + 1)],
         nano.cast("bigint").alias("katz_nano"),
-    ).localCheckpoint(eager=True)
-    # result is materialized (|V| rows, same footprint as each round's
-    # checkpointed state) — release BOTH cached frames so repeated calls
-    # in a long-lived session don't accumulate (ADVICE r8)
-    sym.unpersist()
-    nodes.unpersist()
-    return res
+    )
 
 
 def category_mixing(

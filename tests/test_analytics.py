@@ -104,6 +104,28 @@ def test_pagerank_invariants(micro):
     assert rows[2] > rows[6]
 
 
+def test_pagerank_rounds_carry_job_descriptions(micro):
+    """The superstep driver describes each round's jobs `label:r{n}`
+    (pagerank checkpoints round 3 of 4) and restores the caller's own
+    description afterwards."""
+    sc = micro.nodes.sparkSession.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setJobDescription("caller")
+    try:
+        first = int(jsc.dagScheduler().nextJobId())
+        analytics.pagerank(micro, n_iter=4)
+        end = int(jsc.dagScheduler().nextJobId())
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    jsc.listenerBus().waitUntilEmpty()
+    descriptions = set()
+    for job_id in range(first, end):
+        d = jsc.statusStore().job(job_id).description()
+        descriptions.add(d.get() if d.isDefined() else None)
+    assert "pagerank:r3" in descriptions
+
+
 def test_match_path(micro):
     chains = analytics.match_path(micro, ["lives_in", "road"])
     got = sorted((r["n0"], r["n1"], r["n2"]) for r in chains.collect())

@@ -762,3 +762,192 @@ def test_version_diff_fused_matches_joined_on_random_chains(chain):
                 )
                 assert fused == joined, (v_old, v_new)
                 assert sorted(fused) == replayed(v_old, v_new), (v_old, v_new)
+
+
+# -- fixed-round loops (rank and label families) == plain-Python replay ------
+
+# a graph is (n, edges, sources, seeds): nodes 10..10n, edges drawn with
+# repeats (parallel edges) and a == b (self-loops); a node no edge names
+# is isolated, one with no out-edge is dangling
+fixed_round_graph_strategy = st.integers(1, 12).flatmap(
+    lambda n: st.tuples(
+        st.just(n),
+        st.lists(
+            st.tuples(
+                st.integers(1, n),
+                st.integers(1, n),
+                st.sampled_from([None, 0.0, 0.5, 1.0, 3.0]),
+            ),
+            max_size=20,
+        ),
+        st.sets(st.integers(1, n), min_size=1, max_size=3),
+        st.dictionaries(
+            st.integers(1, n), st.sampled_from(["x", "y", "z"]), max_size=4
+        ),
+    )
+)
+
+
+def _rank_replay(nodes, edges, n_iter, reset=None, d=0.85):
+    """PageRank's fixed rounds (GraphX convention: uniform teleport,
+    dangling mass spread over all nodes), or with ``reset`` the
+    personalized variant whose teleport and dangling mass return to the
+    reset vector. ``edges`` are (a, b, weight)."""
+    out = dict.fromkeys(nodes, 0.0)
+    for a, _, w in edges:
+        out[a] += w
+    rank = {v: (reset[v] if reset else 1.0) for v in nodes}
+    for _ in range(n_iter):
+        recv = dict.fromkeys(nodes, 0.0)
+        for a, b, w in edges:
+            if out[a] > 0:
+                recv[b] += rank[a] * w / out[a]
+        dang = sum(rank[v] for v in nodes if out[v] == 0)
+        rank = {
+            v: (1 - d) + d * (recv[v] + dang / len(nodes))
+            if reset is None
+            else (1 - d) * reset[v] + d * (recv[v] + dang * reset[v])
+            for v in nodes
+        }
+    return rank
+
+
+def _undirected_neighbours(edges):
+    nbrs = {}
+    for a, b, _ in edges:
+        if a != b:
+            nbrs.setdefault(a, set()).add(b)
+            nbrs.setdefault(b, set()).add(a)
+    return nbrs
+
+
+def _majority(labels):
+    """Most frequent label, ties to the smallest."""
+    from collections import Counter
+
+    c = Counter(labels)
+    return min(c, key=lambda k: (-c[k], k))
+
+
+@settings(max_examples=3, deadline=None)
+@given(
+    graph=fixed_round_graph_strategy,
+    n_iter=st.integers(1, 5),
+    max_len=st.integers(1, 4),
+)
+@example(
+    # dangling 10, isolated 60, parallel 20->30, self-loop 40, a zero
+    # weight out of 50 (weighted-dangling), a checkpoint-round n_iter,
+    # and a tie at 10 (neighbours 20 and 30, labels y and x)
+    graph=(
+        6,
+        [(2, 3, 1.0), (2, 3, None), (3, 1, 0.5), (4, 4, 3.0), (3, 4, None),
+         (5, 2, 0.0), (2, 1, None)],
+        {1, 4},
+        {2: "y", 3: "x", 6: "z"},
+    ),
+    n_iter=3,
+    max_len=3,
+)
+def test_fixed_round_loops_match_python_replay(graph, n_iter, max_len):
+    """pagerank (unweighted and weighted), personalized_pagerank,
+    katz_centrality, label_propagation and seeded_label_propagation
+    equal plain-Python replays of their rounds on random graphs with
+    dangling and isolated nodes, parallel edges and self-loops: floats
+    to 1e-9 relative, integers and labels exactly."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from akka_graph_db_spark.operators import analytics
+
+    spark = _SPARK["s"]
+    n, drawn, sources, seed_draw = graph
+    nodes = [10 * i for i in range(1, n + 1)]
+    weighted = [(10 * a, 10 * b, w) for a, b, w in drawn]
+    unit = [(a, b, 1.0) for a, b, _ in weighted]
+    g = PropertyGraph(
+        nodes=spark.createDataFrame(
+            [(v, "n", {}) for v in nodes],
+            "id bigint, label string, props map<string,string>",
+        ),
+        edges=spark.createDataFrame(
+            [
+                (k, "e", a, b, {} if w is None else {"w": str(w)})
+                for k, (a, b, w) in enumerate(weighted)
+            ],
+            "id bigint, label string, src bigint, dst bigint,"
+            " props map<string,string>",
+        ),
+    )
+    pairs = g.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+
+    def close(got, want):
+        assert got.keys() == want.keys()
+        for v, x in want.items():
+            assert math.isclose(got[v], x, rel_tol=1e-9), (v, got[v], x)
+
+    def ranks(df):
+        return {r["id"]: r["rank"] for r in df.collect()}
+
+    close(
+        ranks(analytics.pagerank(g, n_iter=n_iter)),
+        _rank_replay(nodes, unit, n_iter),
+    )
+    with_w = [(a, b, 1.0 if w is None else w) for a, b, w in weighted]
+    close(
+        ranks(analytics.pagerank(g, n_iter=n_iter, weight="w")),
+        _rank_replay(nodes, with_w, n_iter),
+    )
+    src = sorted(10 * s for s in sources)
+    reset = {v: (1.0 / len(src) if v in src else 0.0) for v in nodes}
+    close(
+        ranks(analytics.personalized_pagerank(g, src, n_iter=n_iter)),
+        _rank_replay(nodes, unit, n_iter, reset=reset),
+    )
+
+    nbrs = _undirected_neighbours(weighted)
+    x, walks = dict.fromkeys(nbrs, 1), []
+    for _ in range(max_len):
+        x = {v: sum(x[u] for u in nbrs[v]) for v in nbrs}
+        walks.append(x)
+    want_katz = {
+        (
+            v,
+            *(w[v] for w in walks),
+            sum(w[v] * 1000 ** (max_len - l) for l, w in enumerate(walks, 1)),
+        )
+        for v in nbrs
+    }
+    katz = analytics.katz_centrality(pairs, max_len=max_len, beta_permille=1)
+    assert {tuple(r) for r in katz.collect()} == want_katz
+
+    comm = {v: v for v in nodes}
+    for _ in range(n_iter):
+        comm = {
+            v: _majority(comm[u] for u in nbrs[v]) if v in nbrs else comm[v]
+            for v in nodes
+        }
+    lpa = analytics.label_propagation(g.nodes.select("id"), pairs, n_iter)
+    assert {r["id"]: r["community"] for r in lpa.collect()} == comm
+
+    seeds = {10 * i: lab for i, lab in seed_draw.items()}
+    label = {v: seeds.get(v) for v in nbrs}
+    for _ in range(n_iter):
+        label = {
+            v: seeds.get(v)
+            or (
+                _majority(label[u] for u in nbrs[v] if label[u] is not None)
+                if any(label[u] is not None for u in nbrs[v])
+                else label[v]
+            )
+            for v in nbrs
+        }
+    want_seeded = {
+        (v, lab, v in seeds) for v, lab in label.items() if lab is not None
+    }
+    seed_df = spark.createDataFrame(
+        sorted(seeds.items()), "id bigint, label string"
+    )
+    seeded = analytics.seeded_label_propagation(pairs, seed_df, n_iter)
+    assert {tuple(r) for r in seeded.collect()} == want_seeded

@@ -388,40 +388,112 @@ def test_neighborhood_function_path_graph(spark):
         neighborhood_function(p4, max_radius=-1)
 
 
-# -------------------------------------------- unpersist hygiene (katz)
-def test_katz_and_bowtie_release_their_caches(spark):
-    """katz_centrality persisted `nodes` (and bowtie_classes `scc`)
-    without release — repeated calls in a long-lived session
-    accumulated cached frames (ADVICE r8)."""
-    from akka_graph_db_spark.operators.analytics import (
-        bowtie_classes,
-        katz_centrality,
-    )
+# ------------------------------- unpersist hygiene (superstep loops, bowtie)
+def _cached_rdd_ids(spark):
+    """Ids of the persisted RDDs that are not localCheckpoint blocks,
+    i.e. frames an operator persisted and did not release. Checkpoint
+    blocks stay until the ContextCleaner reclaims them, so they are
+    left out; the tests diff ids, not counts, because the cleaner may
+    reclaim OTHER tests' frames between two measurements."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(k)
+        for k in rdds.keySet().toArray()
+        if not rdds.get(k).rdd().isLocallyCheckpointed()
+    }
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        "pagerank",
+        "pagerank_weighted",
+        "pagerank_empty_graph",
+        "personalized_pagerank",
+        "label_propagation",
+        "seeded_label_propagation",
+        "katz_centrality",
+    ],
+)
+def test_superstep_loops_release_their_caches(spark, call):
+    """Every operator on the superstep driver releases what it
+    persisted, on every path, including pagerank on an empty graph,
+    which returns before its first round."""
+    from akka_graph_db_spark.model import PropertyGraph
+    from akka_graph_db_spark.operators import analytics as an
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4)]
+
+    def graph(node_ids, edge_list):
+        return PropertyGraph(
+            nodes=spark.createDataFrame(
+                [(i, "n", {}) for i in node_ids],
+                "id bigint, label string, props map<string,string>",
+            ),
+            edges=spark.createDataFrame(
+                [
+                    (k, "e", a, b, {"w": "2"})
+                    for k, (a, b) in enumerate(edge_list)
+                ],
+                "id bigint, label string, src bigint, dst bigint,"
+                " props map<string,string>",
+            ),
+        )
+
+    g = graph(range(1, 6), edges)
+    pairs = spark.createDataFrame(edges, "a bigint, b bigint")
+    seeds = spark.createDataFrame([(1, "x")], "id bigint, label string")
+    runs = {
+        "pagerank": lambda: an.pagerank(g, n_iter=4),
+        "pagerank_weighted": lambda: an.pagerank(g, n_iter=4, weight="w"),
+        "pagerank_empty_graph": lambda: an.pagerank(graph([], [])),
+        "personalized_pagerank": lambda: an.personalized_pagerank(
+            g, [1], n_iter=4
+        ),
+        "label_propagation": lambda: an.label_propagation(
+            g.nodes.select("id"), pairs, n_iter=4
+        ),
+        "seeded_label_propagation": lambda: an.seeded_label_propagation(
+            pairs, seeds, rounds=2
+        ),
+        "katz_centrality": lambda: an.katz_centrality(pairs, max_len=2),
+    }
+    before = _cached_rdd_ids(spark)
+    runs[call]().collect()
+    assert _cached_rdd_ids(spark) - before == set()
+
+
+def test_supersteps_releases_rounds_on_error(spark):
+    """A step that raises mid-loop leaves the lazily persisted round
+    before it released, and the caller's job description in place."""
+    from akka_graph_db_spark.operators.analytics import _supersteps
+
+    seen = []
+
+    def step(state):
+        seen.append((state, state.storageLevel.useMemory))
+        if len(seen) == 2:
+            raise RuntimeError("round 2 fails")
+        return state.select("id", F.lit(1).alias("x"))
+
+    with pytest.raises(RuntimeError, match="round 2 fails"):
+        _supersteps(spark.range(3), step, 3, "failing")
+    round_1, cached_in_round_2 = seen[1]
+    assert cached_in_round_2
+    assert not round_1.storageLevel.useMemory
+    desc = spark.sparkContext.getLocalProperty("spark.job.description")
+    assert desc is None
+
+
+def test_bowtie_classes_releases_its_cache(spark):
+    """bowtie_classes persisted its `scc` frame without release —
+    repeated calls in a long-lived session accumulated cached frames
+    (ADVICE r8)."""
+    from akka_graph_db_spark.operators.analytics import bowtie_classes
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "a bigint, b bigint"
     )
-
-    def persistent_ids():
-        return {
-            int(k)
-            for k in spark.sparkContext._jsc.getPersistentRDDs()
-            .keySet()
-            .toArray()
-        }
-
-    # diff RDD IDs, not counts: the async ContextCleaner may reclaim
-    # OTHER tests' checkpoint RDDs between measurements, which would
-    # make count deltas racy in either direction
-    before = persistent_ids()
-    katz_centrality(pairs, max_len=2).collect()
-    # at most the 3 localCheckpoint RDDs (2 walk states + result)
-    # linger until GC; the persisted sym/nodes frames must be released
-    # (pre-fix this was 5: 3 checkpoints + 2 leaked persists)
-    mid = persistent_ids()
-    assert len(mid - before) <= 3
+    before = _cached_rdd_ids(spark)
     bowtie_classes(pairs).collect()
-    # checkpoints only (edges, closure internals — count varies with
-    # session state — and the result); the persisted scc frame must be
-    # released (pre-fix: one more than whatever the checkpoints leave)
-    assert len(persistent_ids() - mid) <= 6
+    assert _cached_rdd_ids(spark) - before == set()
