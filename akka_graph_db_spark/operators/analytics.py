@@ -7,9 +7,10 @@ OLTP-style CRUD/traversal adapter; SURVEY.md §2.7/§2.8). The north star is
 GraphX-class analytics re-expressed in pure DataFrame form: every iterative
 algorithm is a driver-side superstep loop where each superstep is one
 Catalyst-planned join + aggregation (the Pregel pattern of GraphX's
-aggregateMessages, without the RDD API). The fixed-round loops (rank and
-label families) supply only a ``step``; one driver, :func:`_supersteps`,
-owns their checkpoint cadence, cache release and job descriptions.
+aggregateMessages, without the RDD API). The rank, label and frontier
+loops supply only a ``step`` (and a ``converged`` check if they stop at
+a fixpoint); one driver, :func:`_supersteps`, owns their checkpoint
+cadence, cache release and job descriptions.
 
 Scale design notes (100 TB):
 
@@ -22,8 +23,10 @@ Scale design notes (100 TB):
   ``spark.sparkContext.setCheckpointDir`` + ``checkpoint`` for
   fault-tolerant truncation; localCheckpoint is the single-node-friendly
   variant.
-- Convergence checks are one small aggregate per superstep — the same
-  action that materializes the persisted state, so no extra pass.
+- Under ``converged``, the convergence check is one full aggregate per
+  superstep (a count or sum, never a limit-1 probe) and is the action
+  that materializes the persisted round, so it costs no extra pass.
+  Loops without it run a fixed number of rounds.
 - Connected components uses min-id propagation; on graphs with huge
   diameter switch to the two-phase large-star/small-star algorithm
   (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
@@ -49,6 +52,7 @@ def _supersteps(
     n_rounds: int,
     label: str,
     checkpoint_every: int = _CHECKPOINT_EVERY,
+    converged: Callable[[DataFrame], bool] | None = None,
 ) -> DataFrame:
     """Run ``state = step(state)`` for ``n_rounds`` rounds. Every
     ``checkpoint_every``-th round is an eager ``localCheckpoint``, the
@@ -57,7 +61,11 @@ def _supersteps(
     replaces, and exit or error releases the rest. The result is always
     an eager checkpoint (the last round's own if it was one). Round n's
     jobs are described ``label:r{n}``; the caller's description is
-    restored on exit."""
+    restored on exit. ``converged(state)``, run after each round's
+    persist or checkpoint, stops the loop at the first round it returns
+    true; it must be a full aggregate (count, sum), the job that
+    materializes the whole round (a limit-1 ``isEmpty`` caches only the
+    partitions it scans, and the next round recomputes the rest)."""
     sc = state.sparkSession.sparkContext
     caller = sc.getLocalProperty("spark.job.description")
     held: list[DataFrame] = []
@@ -75,6 +83,8 @@ def _supersteps(
             else:
                 state = state.persist(StorageLevel.MEMORY_AND_DISK)
                 held.append(state)
+            if converged is not None and converged(state):
+                break
         return state if checkpointed else state.localCheckpoint(eager=True)
     finally:
         for df in held:
@@ -83,15 +93,20 @@ def _supersteps(
 
 
 def _edge_pairs(
-    g: PropertyGraph, edge_labels: Sequence[str] | None, directed: bool
+    g: PropertyGraph,
+    edge_labels: Sequence[str] | None,
+    directed: bool,
+    *extra: Column,
 ) -> DataFrame:
+    """(a, b, *extra) per edge of the selected labels; undirected adds
+    each edge reversed."""
     e = g.edges
     if edge_labels:
         e = e.where(F.col("label").isin(list(edge_labels)))
-    fwd = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    fwd = e.select(F.col("src").alias("a"), F.col("dst").alias("b"), *extra)
     if directed:
         return fwd
-    rev = e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+    rev = e.select(F.col("dst").alias("a"), F.col("src").alias("b"), *extra)
     return fwd.unionByName(rev)
 
 
@@ -454,14 +469,12 @@ def pagerank(
     """
     from akka_graph_db_spark.model import prop_double
 
-    e = g.edges
-    if edge_labels:
-        e = e.where(F.col("label").isin(list(edge_labels)))
-    cols = [F.col("src").alias("a"), F.col("dst").alias("b")]
-    if weight is not None:
-        w = F.coalesce(prop_double("props", weight), F.lit(1.0))
-        cols.append(w.alias("w"))
-    edges = e.select(*cols)
+    extra = (
+        []
+        if weight is None
+        else [F.coalesce(prop_double("props", weight), F.lit(1.0)).alias("w")]
+    )
+    edges = _edge_pairs(g, edge_labels, True, *extra)
     return _rank_iterate(g.nodes, edges, damping, n_iter, None, "pagerank")
 
 
@@ -543,9 +556,6 @@ def label_propagation(
         verts.unpersist()
 
 
-_SSSP_BROADCAST_MAX_FRONTIER = 5_000_000
-
-
 def shortest_paths(
     g: PropertyGraph,
     source_ids: Sequence[int],
@@ -570,81 +580,62 @@ def shortest_paths(
     min-candidate-dist per dst, and merges into the running state with a
     full-outer join on id — so successive supersteps reuse the id
     partitioning and the per-round work is proportional to the frontier's
-    out-neighborhood, not the graph. Convergence (empty frontier) is the
-    same count that gates the broadcast — no extra action.
+    out-neighborhood, not the graph. The frontier is the ``_improved``
+    flag of the :func:`_supersteps` state; its convergence check (empty
+    frontier) is the count that gates the next broadcast — no extra job.
     """
     from akka_graph_db_spark.model import prop_double
 
-    e = g.edges
-    if edge_labels:
-        e = e.where(F.col("label").isin(list(edge_labels)))
-    w = (
-        F.coalesce(prop_double("props", weight), F.lit(1.0))
-        if weight is not None
-        else F.lit(1.0)
+    w = F.lit(1.0) if weight is None else prop_double("props", weight)
+    w = F.coalesce(w, F.lit(1.0)).alias("w")
+    edges = _edge_pairs(g, edge_labels, directed, w).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    fwd = e.select(F.col("src").alias("a"), F.col("dst").alias("b"), w.alias("w"))
-    edges = (
-        fwd
-        if directed
-        else fwd.unionByName(
-            e.select(
-                F.col("dst").alias("a"), F.col("src").alias("b"), w.alias("w")
+    # the seeds are round 0's frontier; after that, the count the
+    # convergence check takes sizes the next round's broadcast
+    n_frontier = len(source_ids)
+
+    def step(state: DataFrame) -> DataFrame:
+        frontier = state.where(F.col("_improved")).select("id", "dist")
+        fr = (
+            F.broadcast(frontier)
+            if n_frontier <= _CC_BROADCAST_MAX_VERTICES
+            else frontier
+        )
+        msgs = (
+            edges.join(fr, edges["a"] == fr["id"], "inner")
+            .select(F.col("b").alias("id"), (F.col("dist") + F.col("w")).alias("cand"))
+            .groupBy("id")
+            .agg(F.min("cand").alias("cand"))
+        )
+        return (
+            state.select("id", "dist")
+            .join(msgs, "id", "full_outer")
+            .select(
+                "id",
+                F.least("dist", "cand").alias("dist"),  # least skips nulls
+                (
+                    F.col("cand").isNotNull()
+                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
+                ).alias("_improved"),
             )
         )
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    spark = g.nodes.sparkSession
-    state = spark.createDataFrame(
-        [(int(s), 0.0) for s in source_ids], "id bigint, dist double"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    frontier = state
-    persisted: list[DataFrame] = [state]
+
+    def converged(state: DataFrame) -> bool:
+        nonlocal n_frontier
+        n_frontier = state.where(F.col("_improved")).count()
+        return n_frontier == 0
+
+    seeds = g.nodes.sparkSession.createDataFrame(
+        [(int(s), 0.0, True) for s in source_ids],
+        "id bigint, dist double, _improved boolean",
+    )
     try:
-        for it in range(max_hops):
-            n_frontier = frontier.count()
-            if n_frontier == 0:
-                break
-            fr = (
-                F.broadcast(frontier)
-                if n_frontier <= _SSSP_BROADCAST_MAX_FRONTIER
-                else frontier
-            )
-            msgs = (
-                edges.join(fr, edges["a"] == fr["id"], "inner")
-                .select(F.col("b").alias("id"), (F.col("dist") + F.col("w")).alias("cand"))
-                .groupBy("id")
-                .agg(F.min("cand").alias("cand"))
-            )
-            merged = (
-                state.join(msgs, "id", "full_outer")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", F.col("cand")),
-                        F.coalesce("cand", F.col("dist")),
-                    ).alias("dist"),
-                    (
-                        F.col("cand").isNotNull()
-                        & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-                    ).alias("_improved"),
-                )
-            )
-            if (it + 1) % _CHECKPOINT_EVERY == 0:
-                merged = merged.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
-            else:
-                merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(merged)
-            frontier = merged.where(F.col("_improved")).select("id", "dist")
-            state = merged.drop("_improved")
-        out = state.localCheckpoint(eager=True)
-        return out
+        return _supersteps(
+            seeds, step, max_hops, "shortest_paths", converged=converged
+        ).drop("_improved")
     finally:
         edges.unpersist()
-        for df in persisted:
-            df.unpersist()
 
 
 def khop_neighbors(
@@ -2856,8 +2847,10 @@ def landmark_hop_distances(
     per-layer distinct, and visited anti-join all run WITHOUT an
     exchange (HashPartitioning on the reached node is a subset of every
     grouping/join key set). Past the gate, the joins fall back to
-    shuffles. Periodic localCheckpoint truncation, the traverse.py loop
-    pattern; keep k modest (its purpose is sampling, not all-pairs).
+    shuffles. Rounds run on :func:`_supersteps` (every third one
+    checkpointed); the frontier is the ``_new`` flag of the one visited
+    frame, and the loop stops at the first round whose count of new rows
+    is 0. Keep k modest (its purpose is sampling, not all-pairs).
     """
     e = canonical_undirected(pairs)
     npart = pairs.sparkSession.sparkContext.defaultParallelism
@@ -2868,7 +2861,6 @@ def landmark_hop_distances(
         .repartition(npart, F.col("b"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    persisted: list[DataFrame] = []
     try:
         n_vertices = sym.select("a").distinct().count()
         if isinstance(landmarks, int):
@@ -2886,17 +2878,15 @@ def landmark_hop_distances(
         def bc(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
 
-        visited = seed_ids.select(
-            F.col("a").alias("landmark"),
-            F.col("a").alias("id"),
-            F.lit(0).alias("dist"),
-        ).localCheckpoint(eager=True)
-        frontier = visited
-        for d in range(1, max_depth + 1):
+        depth = 0
+
+        def step(visited: DataFrame) -> DataFrame:
+            nonlocal depth
+            depth += 1
             nxt = (
                 sym.join(
                     bc(
-                        frontier.select(
+                        visited.where(F.col("_new")).select(
                             "landmark", F.col("id").alias("a")
                         )
                     ),
@@ -2909,27 +2899,30 @@ def landmark_hop_distances(
                     ["landmark", "id"],
                     "left_anti",
                 )
-                .select("landmark", "id", F.lit(d).alias("dist"))
-                .persist(StorageLevel.MEMORY_AND_DISK)
+                .select(
+                    "landmark",
+                    "id",
+                    F.lit(depth).alias("dist"),
+                    F.lit(True).alias("_new"),
+                )
             )
-            if nxt.isEmpty():
-                nxt.unpersist()
-                break
-            visited = visited.unionByName(nxt).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.extend([nxt, visited])
-            if d % _CHECKPOINT_EVERY == 0:
-                visited = visited.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
-            frontier = nxt
-        return visited.localCheckpoint(eager=True)
+            return visited.withColumn("_new", F.lit(False)).unionByName(nxt)
+
+        visited = seed_ids.select(
+            F.col("a").alias("landmark"),
+            F.col("a").alias("id"),
+            F.lit(0).alias("dist"),
+            F.lit(True).alias("_new"),
+        ).localCheckpoint(eager=True)
+        return _supersteps(
+            visited,
+            step,
+            max_depth,
+            "landmark_hop_distances",
+            converged=lambda st: st.where(F.col("_new")).count() == 0,
+        ).drop("_new")
     finally:
         sym.unpersist()
-        for df in persisted:
-            df.unpersist()
 
 
 def betweenness_landmarks(
@@ -4410,34 +4403,34 @@ def neighborhood_function(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    visited = (
-        sym.select(F.col("a").alias("src"), F.col("a").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    counts = [(0, visited.count())]
-    for r in range(1, max_radius + 1):
-        grown = (
-            visited.unionByName(
-                visited.join(
-                    sym, visited["dst"] == sym["a"], "inner"
-                ).select("src", F.col("b").alias("dst"))
-            )
+    try:
+        visited = (
+            sym.select(F.col("a").alias("src"), F.col("a").alias("dst"))
             .distinct()
             .localCheckpoint(eager=True)
         )
-        n = grown.count()
-        counts.append((r, n))
-        if n == counts[-2][1]:  # plateau: every ball is complete
-            counts.extend(
-                (rr, n) for rr in range(r + 1, max_radius + 1)
-            )
-            break
-        visited = grown
-    sym.unpersist()
+        counts = [visited.count()]
+
+        def step(visited: DataFrame) -> DataFrame:
+            return visited.unionByName(
+                visited.join(
+                    sym, visited["dst"] == sym["a"], "inner"
+                ).select("src", F.col("b").alias("dst"))
+            ).distinct()
+
+        def converged(grown: DataFrame) -> bool:
+            counts.append(grown.count())
+            # plateau: every ball is complete
+            return counts[-1] == counts[-2]
+
+        _supersteps(
+            visited, step, max_radius, "neighborhood_function", 1, converged
+        )
+    finally:
+        sym.unpersist()
+    counts += counts[-1:] * (max_radius + 1 - len(counts))
     rows = [
-        (r, n, n - (counts[i - 1][1] if i else 0))
-        for i, (r, n) in enumerate(counts)
+        (r, n, n - (counts[r - 1] if r else 0)) for r, n in enumerate(counts)
     ]
     return spark.createDataFrame(
         rows, "r int, n_pairs bigint, new_pairs bigint"
@@ -4653,7 +4646,8 @@ def hyperanf(
     small-range regime (raw ≤ 2.5m, the HLL84 correction) switches to
     linear counting m·ln(m/empty) via a BAKED 15-entry integer lookup
     (`_hll_lc_milli`) — identical literals in both engines, no
-    transcendental in any plan. Returns one row per radius:
+    transcendental in any plan. The rounds stop once ``sum_registers``
+    stops rising (the state is then final). Returns one row per radius:
     (r, n_nodes, sum_registers, est_pairs_milli) where est_pairs_milli
     = Σ_v est_v in milli-units (exact ANF's n_pairs·1000 is the
     comparison target; pytest pins the ratio on the trade graph).
@@ -4668,6 +4662,8 @@ def hyperanf(
         raise ValueError(f"m must be one of {sorted(_HLL_ALPHA_MILLI)}")
     if max_radius < 0:
         raise ValueError("max_radius must be >= 0")
+    if rho_cap < 1:
+        raise ValueError("rho_cap must be >= 1")
     spark = pairs.sparkSession
     e = canonical_undirected(pairs)
     sym = (
@@ -4685,14 +4681,6 @@ def hyperanf(
         + F.lit(1),
         F.lit(rho_cap),
     )
-    state = nodes.select(
-        "a",
-        F.pmod(
-            md5_63(F.concat(F.lit("reg:"), F.col("a").cast("string"))),
-            F.lit(m),
-        ).cast("int").alias("_j"),
-        rho.cast("int").alias("_reg"),
-    ).localCheckpoint(eager=True)
 
     alpha_num = _HLL_ALPHA_MILLI[m] * m * m * (1 << rho_cap)
     lc = _hll_lc_milli(m)
@@ -4735,18 +4723,36 @@ def hyperanf(
         ).collect()[0]
         return (r, row.n_nodes, row.sum_registers, row.est_pairs_milli)
 
-    rows = [_summary(state, 0)]
-    for r in range(1, max_radius + 1):
-        state = (
-            state.join(sym, state["a"] == sym["a"], "inner")
+    def step(st: DataFrame) -> DataFrame:
+        return (
+            st.join(sym, st["a"] == sym["a"], "inner")
             .select(F.col("b").alias("a"), "_j", "_reg")
-            .unionByName(state)
+            .unionByName(st)
             .groupBy("a", "_j")
             .agg(F.max("_reg").alias("_reg"))
-            .localCheckpoint(eager=True)
         )
-        rows.append(_summary(state, r))
-    sym.unpersist()
+
+    def converged(st: DataFrame) -> bool:
+        rows.append(_summary(st, len(rows)))
+        # every register is >= 1 and max-merge never lowers one, so an
+        # unchanged sum means an unchanged state: later rounds are no-ops
+        return rows[-1][2] == rows[-2][2]
+
+    try:
+        state = nodes.select(
+            "a",
+            F.pmod(
+                md5_63(F.concat(F.lit("reg:"), F.col("a").cast("string"))),
+                F.lit(m),
+            ).cast("int").alias("_j"),
+            rho.cast("int").alias("_reg"),
+        ).localCheckpoint(eager=True)
+        rows = [_summary(state, 0)]
+        _supersteps(state, step, max_radius, "hyperanf", 1, converged)
+    finally:
+        sym.unpersist()
+    while len(rows) <= max_radius:
+        rows.append((len(rows), *rows[-1][1:]))
     return spark.createDataFrame(
         rows,
         "r int, n_nodes bigint, sum_registers bigint, "
@@ -4924,33 +4930,37 @@ def _canonical_weighted(wpairs: DataFrame):
     return e, sym
 
 
-def _weighted_relax(sym: DataFrame, seeds, max_rounds: int) -> DataFrame:
+def _weighted_relax(
+    sym: DataFrame, seeds, max_rounds: int, per_seed: bool = False
+) -> DataFrame:
     """Bounded Bellman-Ford over the symmetric weighted edges: exactly
     ``max_rounds`` supersteps of the lexicographic (cost, seed)
     min-plus relaxation (translation-invariant, so round r holds the
     exact min over ≤r-edge paths). Returns (id, d, seed) for every
-    touched id — seeds at d = 0."""
-    dist = sym.sparkSession.createDataFrame(
-        [(s, 0, s) for s in sorted(set(seeds))],
-        "id bigint, d bigint, seed bigint",
-    )
-    for _ in range(max_rounds):
+    touched id — seeds at d = 0 — or, with ``per_seed``, for every
+    touched (id, seed) pair. A round reads its input twice (union and
+    join), so each is checkpointed lest the plan double every round."""
+
+    def step(dist: DataFrame) -> DataFrame:
         relaxed = dist.join(sym, dist["id"] == sym["a"]).select(
             F.col("b").alias("id"),
             (F.col("d") + F.col("w")).alias("d"),
             "seed",
         )
-        dist = (
+        return (
             dist.unionByName(relaxed)
-            .groupBy("id")
+            .groupBy("id", *(["seed"] if per_seed else []))
             .agg(F.min(F.struct(F.col("d"), F.col("seed"))).alias("_b"))
-            .select(
-                "id",
-                F.col("_b.d").alias("d"),
-                F.col("_b.seed").alias("seed"),
-            )
+            .select("id", "_b.d", "_b.seed")
         )
-    return dist
+
+    dist = sym.sparkSession.createDataFrame(
+        [(s, 0, s) for s in sorted(set(seeds))],
+        "id bigint, d bigint, seed bigint",
+    )
+    return _supersteps(
+        dist, step, max_rounds, "weighted_relax", checkpoint_every=1
+    )
 
 
 def weighted_nearest_seed(
@@ -5004,7 +5014,8 @@ def weighted_landmark_costs(
     total edge cost over ≤max_rounds-edge paths (plain Bellman-Ford per
     landmark, all landmarks advancing in the SAME superstep join — the
     state is keyed (id, landmark), so k landmarks cost one sweep with
-    k× state, never k sweeps). The substrate for weighted sampled
+    k× state, never k sweeps; :func:`_weighted_relax` keyed per seed).
+    The substrate for weighted sampled
     centralities; :func:`weighted_nearest_seed` is its argmin.
     """
     if max_rounds < 1:
@@ -5013,24 +5024,12 @@ def weighted_landmark_costs(
     if not landmarks:
         raise ValueError("landmarks must be non-empty")
     _, sym = _canonical_weighted(wpairs)
-    state = sym.sparkSession.createDataFrame(
-        [(s, s, 0) for s in landmarks],
-        "id bigint, landmark bigint, d bigint",
-    )
-    for _ in range(max_rounds):
-        relaxed = state.join(sym, state["id"] == sym["a"]).select(
-            F.col("b").alias("id"),
-            "landmark",
-            (F.col("d") + F.col("w")).alias("d"),
-        )
-        state = (
-            state.unionByName(relaxed)
-            .groupBy("id", "landmark")
-            .agg(F.min("d").alias("d"))
-        )
+    state = _weighted_relax(sym, landmarks, max_rounds, per_seed=True)
     nodes = sym.select(F.col("a").alias("id")).distinct()
     return state.join(nodes, "id").select(
-        "id", "landmark", F.col("d").cast("bigint").alias("cost")
+        "id",
+        F.col("seed").alias("landmark"),
+        F.col("d").cast("bigint").alias("cost"),
     )
 
 

@@ -951,3 +951,155 @@ def test_fixed_round_loops_match_python_replay(graph, n_iter, max_len):
     )
     seeded = analytics.seeded_label_propagation(pairs, seed_df, n_iter)
     assert {tuple(r) for r in seeded.collect()} == want_seeded
+
+
+# -- frontier and convergence loops == plain-Python replay --------------------
+
+
+def _min_plus(arcs, start, rounds):
+    """``rounds`` rounds of min-plus relaxation over (a, b, w) arcs from
+    ``start`` (node -> tuple whose first field is the cost): the min over
+    walks of at most ``rounds`` arcs. Values compare as tuples, so a
+    (cost, seed) value relaxes with the seed tiebreak."""
+    dist = dict(start)
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for a, b, w in arcs:
+            if a in dist:
+                cand = (dist[a][0] + w, *dist[a][1:])
+                if b not in nxt or cand < nxt[b]:
+                    nxt[b] = cand
+        dist = nxt
+    return dist
+
+
+def _union_find_components(nodes, edges):
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b, _ in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}
+
+
+@settings(max_examples=3, deadline=None)
+@given(graph=fixed_round_graph_strategy, rounds=st.integers(1, 4))
+@example(
+    # isolated 60, self-loop 30, parallel 30-40, a zero weight 40-50,
+    # and a (cost, seed) tie at 20 between seeds 10 and 30
+    graph=(
+        6,
+        [(1, 2, None), (3, 2, None), (3, 3, 3.0), (3, 4, 0.5), (4, 3, 1.0),
+         (4, 5, 0.0)],
+        {1, 3},
+        {},
+    ),
+    rounds=3,
+)
+def test_frontier_loops_match_python_replay(graph, rounds):
+    """connected components, shortest_paths (hop and weighted, directed
+    and undirected), landmark_hop_distances, neighborhood_function,
+    weighted_nearest_seed and weighted_landmark_costs equal plain-Python
+    replays on random graphs with isolated nodes, self-loops and
+    parallel edges: a union-find, bounded Bellman-Ford, BFS, all-pairs
+    BFS and bounded min-plus with the (cost, seed) tiebreak."""
+    from pyspark.sql import functions as F
+
+    from akka_graph_db_spark.operators import analytics
+
+    spark = _SPARK["s"]
+    n, drawn, sources, _ = graph
+    nodes = [10 * i for i in range(1, n + 1)]
+    weighted = [(10 * a, 10 * b, w) for a, b, w in drawn]
+    g = PropertyGraph(
+        nodes=spark.createDataFrame(
+            [(v, "n", {}) for v in nodes],
+            "id bigint, label string, props map<string,string>",
+        ),
+        edges=spark.createDataFrame(
+            [
+                (k, "e", a, b, {} if w is None else {"w": str(w)})
+                for k, (a, b, w) in enumerate(weighted)
+            ],
+            "id bigint, label string, src bigint, dst bigint,"
+            " props map<string,string>",
+        ),
+    )
+    pairs = g.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    src = sorted(10 * s for s in sources)
+
+    comp = analytics.connected_components_from_pairs(
+        g.nodes.select("id"), pairs
+    )
+    assert {r.id: r.component for r in comp.collect()} == (
+        _union_find_components(nodes, weighted)
+    )
+
+    for weight in (None, "w"):
+        arcs = [
+            (a, b, 1.0 if weight is None or w is None else w)
+            for a, b, w in weighted
+        ]
+        for directed in (True, False):
+            both = arcs if directed else arcs + [(b, a, w) for a, b, w in arcs]
+            want = _min_plus(both, {s: (0.0,) for s in src}, rounds)
+            got = analytics.shortest_paths(
+                g, src, weight=weight, directed=directed, max_hops=rounds
+            )
+            assert {r.id: (r.dist,) for r in got.collect()} == want, (
+                weight, directed,
+            )
+
+    # the undirected loops run on the canonical edges: no self-loops
+    nbrs = _undirected_neighbours(weighted)
+    hops = [(a, b, 1) for a in nbrs for b in nbrs[a]]
+    want_hops = {
+        (lm, v, d[0])
+        for lm in src
+        for v, d in _min_plus(hops, {lm: (0,)}, rounds).items()
+    }
+    got_hops = analytics.landmark_hop_distances(pairs, src, max_depth=rounds)
+    assert {tuple(r) for r in got_hops.collect()} == want_hops
+
+    ball = {u: _min_plus(hops, {u: (0,)}, len(nbrs)) for u in nbrs}
+    n_r = [
+        sum(d[0] <= r for u in nbrs for d in ball[u].values())
+        for r in range(rounds + 1)
+    ]
+    want_nf = {
+        (r, n_r[r], n_r[r] - (n_r[r - 1] if r else 0))
+        for r in range(rounds + 1)
+    }
+    nf = analytics.neighborhood_function(pairs, max_radius=rounds)
+    assert {tuple(r) for r in nf.collect()} == want_nf
+
+    # positive integer costs; the canonical edge keeps the cheapest
+    cost = {None: 1, 0.0: 1, 0.5: 2, 1.0: 3, 3.0: 7}
+    wpairs = spark.createDataFrame(
+        [(a, b, cost[w]) for a, b, w in weighted], "a bigint, b bigint, w bigint"
+    )
+    cheapest = {}
+    for a, b, w in weighted:
+        if a != b:
+            key = (min(a, b), max(a, b))
+            cheapest[key] = min(cheapest.get(key, cost[w]), cost[w])
+    warcs = [(a, b, w) for (a, b), w in cheapest.items()]
+    warcs += [(b, a, w) for a, b, w in warcs]
+    nearest = _min_plus(warcs, {s: (0, s) for s in src}, rounds)
+    got_ns = analytics.weighted_nearest_seed(wpairs, src, max_rounds=rounds)
+    assert {tuple(r) for r in got_ns.collect()} == {
+        (v, s, c) for v, (c, s) in nearest.items() if v in nbrs
+    }
+    want_lc = {
+        (v, lm, c[0])
+        for lm in src
+        for v, c in _min_plus(warcs, {lm: (0,)}, rounds).items()
+        if v in nbrs
+    }
+    got_lc = analytics.weighted_landmark_costs(wpairs, src, max_rounds=rounds)
+    assert {tuple(r) for r in got_lc.collect()} == want_lc

@@ -46,6 +46,10 @@ def test_hyperanf_deterministic_and_m_validated(spark):
     assert a[1].est_pairs_milli == a[2].est_pairs_milli
     with pytest.raises(ValueError):
         hyperanf(tri, m=13)
+    # registers must be >= 1: the plateau stop reads an unchanged
+    # register sum as an unchanged state
+    with pytest.raises(ValueError, match="rho_cap"):
+        hyperanf(tri, rho_cap=0)
 
 
 # ------------------------------------------------- effective diameter

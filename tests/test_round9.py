@@ -413,6 +413,12 @@ def _cached_rdd_ids(spark):
         "label_propagation",
         "seeded_label_propagation",
         "katz_centrality",
+        "shortest_paths",
+        "landmark_hop_distances",
+        "neighborhood_function",
+        "hyperanf",
+        "weighted_nearest_seed",
+        "weighted_landmark_costs",
     ],
 )
 def test_superstep_loops_release_their_caches(spark, call):
@@ -442,6 +448,9 @@ def test_superstep_loops_release_their_caches(spark, call):
 
     g = graph(range(1, 6), edges)
     pairs = spark.createDataFrame(edges, "a bigint, b bigint")
+    wpairs = spark.createDataFrame(
+        [(a, b, a + b) for a, b in edges], "a bigint, b bigint, w bigint"
+    )
     seeds = spark.createDataFrame([(1, "x")], "id bigint, label string")
     runs = {
         "pagerank": lambda: an.pagerank(g, n_iter=4),
@@ -457,32 +466,116 @@ def test_superstep_loops_release_their_caches(spark, call):
             pairs, seeds, rounds=2
         ),
         "katz_centrality": lambda: an.katz_centrality(pairs, max_len=2),
+        "shortest_paths": lambda: an.shortest_paths(g, [1], weight="w"),
+        "landmark_hop_distances": lambda: an.landmark_hop_distances(
+            pairs, [1, 4]
+        ),
+        "neighborhood_function": lambda: an.neighborhood_function(pairs),
+        "hyperanf": lambda: an.hyperanf(pairs),
+        "weighted_nearest_seed": lambda: an.weighted_nearest_seed(
+            wpairs, [1]
+        ),
+        "weighted_landmark_costs": lambda: an.weighted_landmark_costs(
+            wpairs, [1, 4]
+        ),
     }
     before = _cached_rdd_ids(spark)
     runs[call]().collect()
     assert _cached_rdd_ids(spark) - before == set()
 
 
-def test_supersteps_releases_rounds_on_error(spark):
-    """A step that raises mid-loop leaves the lazily persisted round
-    before it released, and the caller's job description in place."""
+@pytest.mark.parametrize(
+    "fails_in, true_from, n_rounds, want_rounds",
+    [
+        ("step", None, 3, 2),
+        ("converged", None, 3, 2),
+        (None, 2, 5, 2),
+        (None, 5, 3, 3),
+        (None, None, 4, 4),
+    ],
+    ids=[
+        "step_fails",
+        "check_fails",
+        "stops_at_first_true",
+        "true_after_last_round",
+        "never_true",
+    ],
+)
+def test_supersteps_releases_rounds_on_error(
+    spark, fails_in, true_from, n_rounds, want_rounds
+):
+    """A step or a convergence check that raises in round 2 leaves
+    every lazily persisted round released, and the caller's job
+    description in place. Without an error the loop stops at the first
+    round whose check returns true, never runs more than ``n_rounds``
+    rounds, and the check's jobs are described ``label:r{n}``. The
+    step-failure input passes no check at all."""
     from akka_graph_db_spark.operators.analytics import _supersteps
 
-    seen = []
+    sc = spark.sparkContext
+    seen, checked = [], []
 
     def step(state):
         seen.append((state, state.storageLevel.useMemory))
-        if len(seen) == 2:
+        if fails_in == "step" and len(seen) == 2:
             raise RuntimeError("round 2 fails")
-        return state.select("id", F.lit(1).alias("x"))
+        return state.select("id", F.lit(len(seen)).alias("x"))
 
-    with pytest.raises(RuntimeError, match="round 2 fails"):
-        _supersteps(spark.range(3), step, 3, "failing")
+    def converged(state):
+        checked.append(
+            (state, sc.getLocalProperty("spark.job.description"))
+        )
+        if fails_in == "converged" and len(checked) == 2:
+            raise RuntimeError("round 2 fails")
+        return state.count() == 3 and len(checked) == true_from
+
+    def run():
+        return _supersteps(
+            spark.range(3),
+            step,
+            n_rounds,
+            "failing",
+            converged=None if fails_in == "step" else converged,
+        )
+
+    if fails_in:
+        with pytest.raises(RuntimeError, match="round 2 fails"):
+            run()
+    else:
+        assert {r.x for r in run().collect()} == {want_rounds}
+    assert len(seen) == want_rounds
     round_1, cached_in_round_2 = seen[1]
     assert cached_in_round_2
-    assert not round_1.storageLevel.useMemory
-    desc = spark.sparkContext.getLocalProperty("spark.job.description")
+    assert not any(
+        df.storageLevel.useMemory
+        for df in [df for df, _ in seen[1:]] + [df for df, _ in checked]
+    )
+    assert [d for _, d in checked] == [
+        f"failing:r{r}" for r in range(1, len(checked) + 1)
+    ]
+    desc = sc.getLocalProperty("spark.job.description")
     assert desc is None
+
+
+def test_weighted_relaxations_cut_their_lineage(spark):
+    """Each relaxation round reads its input twice (a union and a join),
+    so without a lineage cut the analyzed plan doubles every round:
+    about 2000 lines at 8 rounds for 9 at one. The plan of an 8-round
+    result must stay within 8x the 1-round plan."""
+    from akka_graph_db_spark.operators import analytics as an
+
+    wpairs = spark.createDataFrame(
+        [(i, i + 1, 1 + i % 3) for i in range(12)] + [(0, 6, 2), (3, 9, 1)],
+        "a bigint, b bigint, w bigint",
+    )
+
+    def plan_lines(df):
+        return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
+
+    for op in (an.weighted_nearest_seed, an.weighted_landmark_costs):
+        one, eight = (op(wpairs, [0, 5], max_rounds=r) for r in (1, 8))
+        assert plan_lines(eight) <= 8 * plan_lines(one), op.__name__
+        assert eight.count() == 13 * (1 if op is an.weighted_nearest_seed else 2)
 
 
 def test_bowtie_classes_releases_its_cache(spark):
