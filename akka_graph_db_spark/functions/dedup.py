@@ -405,32 +405,6 @@ def _banded_candidates(
     )
 
 
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    arrow: bool = True,
-) -> DataFrame:
-    """LSH candidate pairs (a_id < b_id): docs sharing ≥1 band bucket.
-
-    shingle → minhash → band → bucket-join: each doc explodes to ``bands``
-    (band_idx, band_hash) rows; a self-equi-join on those keys yields
-    candidates. With r = num_perm/bands rows per band, the match curve is
-    the classic (1-(1-s^r)^b).
-    """
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    # Materialize signatures before fan-out: each doc's signature feeds
-    # `bands` band hashes and the self-join's two sides — without the
-    # barrier, projection collapse would recompute the shingle pass for
-    # every consumer. Tiny frame: num_perm longs per doc.
-    sigs = _signatures(df, text_col, id_col, num_perm, shingle_n, arrow)
-    return _banded_candidates(sigs, num_perm, bands)
-
-
 def _hashed_shingles(text: Column, shingle_n: int) -> Column:
     """The xxhash64-hashed per-doc shingle array the verify join
     intersects — shared between :func:`_shingle_sets` (which stores it)

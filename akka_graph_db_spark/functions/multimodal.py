@@ -171,49 +171,6 @@ def decode_images(
     return media.mapInPandas(_decode, schema=DECODED_IMAGE_SCHEMA)
 
 
-FRAME_SAMPLE_SCHEMA = "media_id bigint, frame_idx int, frame_sha256 string"
-
-
-def sample_frames(
-    media: DataFrame, every_n: int = 10, allow_fake: bool = False
-) -> DataFrame:
-    """Sample frames from video payloads.
-
-    STUB: real frame extraction requires ffmpeg/av (absent here). The
-    deterministic fake emits ``len(payload) // (1024 * every_n) + 1``
-    pseudo-frames whose hashes chain off the content hash — exercising the
-    one-to-many mapInPandas shape (one media row → N frame rows) for real.
-    """
-
-    def _sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-
-        import pandas as pd
-
-        if not allow_fake:
-            raise NotImplementedError(
-                "video frame sampling requires ffmpeg/av (not in this "
-                "container); pass allow_fake=True for the deterministic fake"
-            )
-        for pdf in batches:
-            ids, idxs, shas = [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                b = b or b""
-                n_frames = len(b) // (1024 * every_n) + 1
-                h = hashlib.sha256(b).hexdigest()
-                for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    shas.append(
-                        hashlib.sha256(f"{h}:{i}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_sha256": shas}
-            )
-
-    return media.mapInPandas(_sample, schema=FRAME_SAMPLE_SCHEMA)
-
-
 RESIZED_SCHEMA = (
     "media_id bigint, out_width int, out_height int, resized_sha256 string"
 )

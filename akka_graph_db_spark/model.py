@@ -62,10 +62,6 @@ def json_number(c: Column) -> Column:
     return c.cast("string")
 
 
-def json_bool(c: Column) -> Column:
-    return F.when(c, F.lit("true")).when(~c, F.lit("false"))
-
-
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
@@ -95,10 +91,6 @@ def prop_str(props: Column | str, key: str) -> Column:
 def prop_double(props: Column | str, key: str) -> Column:
     # try_cast: a non-numeric fragment decodes to NULL, not an ANSI error
     return prop_get(props, key).try_cast("double")
-
-
-def prop_long(props: Column | str, key: str) -> Column:
-    return prop_get(props, key).try_cast("bigint")
 
 
 def prop_bool(props: Column | str, key: str) -> Column:

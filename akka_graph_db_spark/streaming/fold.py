@@ -6,7 +6,7 @@ fire-and-forget and applied asynchronously (`MainActor.scala:20-29`; the
 worker actors were never implemented). The Spark-native equivalent is a
 mutation LOG consumed by Structured Streaming: ``readStream`` over the log,
 ``foreachBatch`` folding each micro-batch into the next copy-on-write
-snapshot via the batch CRUD operators — same async-submission semantics,
+snapshot with the batch CRUD semantics — same async-submission semantics,
 but with exactly-once micro-batch boundaries instead of per-message
 interleaving.
 
@@ -20,19 +20,12 @@ Log schema (one row per command)::
     src BIGINT, dst BIGINT  -- edge add only
     props MAP<STRING,STRING>  -- JSON fragments; "null" value deletes key
 
-Within a micro-batch, commands apply in ``seq`` order grouped by (op, kind)
-runs — a batch that interleaves ops on the SAME id is split into ordered
-sub-batches, so add→update→remove of one id inside one micro-batch lands
-correctly.
-
-At scale: each fold step is the same anti-join/union/merge plan as batch
-CRUD. A durable fold (``store_root``) runs it on only the pre-image slice
-its batch touches. To cut that slice, a batch reads the store's latest
-version through merge-on-read (base plus stacked deltas, one shuffle per
-side) and semi-joins it with batch-sized id sets; the CRUD plan, the diff
-and the write then cover O(changes) rows. Each persist moves the fold onto
-the store's file-backed latest version, which bounds lineage the way a
-Pregel checkpoint cadence does. An in-memory fold runs on the whole
+Within a micro-batch each touched id folds its own commands in ``seq``
+order, so any interleaving (add→remove→add of one id, ops alternating on
+every command) lands as a sequential replay would, in one plan. A durable
+fold (``store_root``) folds a batch into only the pre-image slice it
+touches, so fold, diff and write cover O(changes) rows, and each persist
+moves it onto file-backed scans; an in-memory fold runs on the whole
 snapshot and truncates its lineage every ``checkpoint_every`` batches.
 """
 
@@ -43,7 +36,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from akka_graph_db_spark.model import PropertyGraph
+from akka_graph_db_spark.model import (
+    EDGE_CORE_COLS,
+    NODE_CORE_COLS,
+    PropertyGraph,
+)
 from akka_graph_db_spark.operators import crud
 from akka_graph_db_spark.streaming import drain
 
@@ -54,98 +51,86 @@ MUTATION_SCHEMA = (
 
 
 def apply_mutation_batch(g: PropertyGraph, batch: DataFrame) -> PropertyGraph:
-    """Fold one (micro-)batch of mutation commands into a new snapshot.
+    """Fold one (micro-)batch of mutation commands into a new snapshot as
+    one lazy plan (no Spark job runs until the result is used).
 
-    Commands are grouped into maximal runs of equal (op, kind) in ``seq``
-    order; each run applies as one vectorized CRUD call. The run split is
-    driver-side but touches only the distinct run keys (a tiny collect of
-    run boundaries), not the command rows themselves.
-
-    Cost bound (ADVICE r2): the run detection is a global ``Window.orderBy
-    ("seq")`` — a single-task sort over the micro-batch's (seq, op, kind)
-    triples — and each run re-filters the batch frame, so a batch with R
-    runs does R passes over it. Both are O(batch), fine for micro-batch
-    sizes (≤ a few hundred thousand commands); a pathological feed that
-    alternates (op, kind) per command degenerates to R ≈ N and should be
-    pre-compacted upstream (e.g. one (op, kind) topic-partition each, or a
-    producer-side group-by), which is how a log compactor would ship this
-    at scale anyway.
+    Each touched (kind, id) folds its commands in ``seq`` order over its
+    pre-image row: add sets the row (replacing a live one), ``added`` and,
+    if the id was dead, ``born``; update merges into a live row; remove
+    clears ``live``. An edge survives iff each endpoint the batch touches
+    is live at the end and born before the edge's last add (pre-image
+    edges: before every command). As live over [add, end] ⇔ live at the
+    end and born before add, two equi-joins apply MATCH-first at each add
+    (a failed add leaves the id absent) and the DETACH cascade of removes.
     """
-    runs = (
-        batch.select("seq", "op", "kind")
-        .withColumn(
-            "_run",
-            F.sum(
-                F.coalesce(
-                    (
-                        (F.lag("op").over(_seq_w()) != F.col("op"))
-                        | (F.lag("kind").over(_seq_w()) != F.col("kind"))
-                    ).cast("int"),
-                    F.lit(0),  # NULL lag on the first row is NOT a break
-                )
-            ).over(_seq_w_rows()),
-        )
-        .groupBy("_run", "op", "kind")
-        .agg(F.min("seq").alias("_from"), F.max("seq").alias("_to"))
-        .orderBy("_from")
-        .collect()
+    # label, src, dst, props; src and dst stay null on nodes
+    cols = EDGE_CORE_COLS[1:]
+    pre = g.nodes.select(*NODE_CORE_COLS, F.lit("node").alias("kind"))
+    pre_edges = g.edges.select(*EDGE_CORE_COLS, F.lit("edge").alias("kind"))
+    pre = pre.unionByName(pre_edges, allowMissingColumns=True)
+    # an edge add touches its endpoints: their rows answer MATCH-first
+    ends = batch.where("kind = 'edge' AND op = 'add'").select(
+        F.lit("node").alias("kind"),
+        F.explode(F.array("src", "dst")).alias("id"),
     )
-    for r in runs:
-        cmds = batch.where(
-            (F.col("seq") >= r["_from"]) & (F.col("seq") <= r["_to"])
-        )
-        g = _apply_run(g, r["op"], r["kind"], cmds)
-    return g
-
-
-def _seq_w():
-    from pyspark.sql import Window
-
-    return Window.orderBy("seq")
-
-
-def _seq_w_rows():
-    from pyspark.sql import Window
-
-    return (
-        Window.orderBy("seq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cmds = batch.unionByName(ends, allowMissingColumns=True)
+    # one id set for every pre-image semi- and anti-join, so they share one
+    # broadcast; an id of the other kind only passes its pre-image row
+    # through the fold unchanged
+    ids = cmds.select("id")
+    cmd = F.when(F.col("op").isNotNull(), F.struct("seq", "op", *cols))
+    rows = (
+        pre.join(ids, "id", "left_semi")
+        .select("kind", "id", F.struct(*cols).alias("_pre"))
+        .unionByName(cmds.select("kind", "id", cmd.alias("_cmd")), True)
+    )
+    by_seq = F.array_sort(
+        F.collect_list("_cmd"),
+        # explicit comparator: structs holding maps have no default ordering
+        lambda l, r: F.when(l["seq"] < r["seq"], -1)
+        .when(l["seq"] > r["seq"], 1)
+        .otherwise(0),
+    )
+    unset = F.lit(None).cast("bigint")
+    pre_row = F.first("_pre", ignorenulls=True)
+    init = F.struct(
+        pre_row.isNotNull().alias("live"),
+        *[pre_row[c].alias(c) for c in cols],
+        *[unset.alias(c) for c in ("born", "added")],
     )
 
+    def apply(s, c):
+        add, live = c["op"] == "add", s["live"]
+        kept = {k: s[k] for k in cols}
+        kept["props"] = F.when(
+            live & (c["op"] == "update"),
+            crud._merge_props(s["props"], c["props"]),
+        ).otherwise(s["props"])
+        return F.struct(
+            (add | (live & (c["op"] != "remove"))).alias("live"),
+            *[F.when(add, c[k]).otherwise(kept[k]).alias(k) for k in cols],
+            F.when(add & ~live, c["seq"]).otherwise(s["born"]).alias("born"),
+            F.when(add, c["seq"]).otherwise(s["added"]).alias("added"),
+        )
 
-def _apply_run(
-    g: PropertyGraph, op: str, kind: str, cmds: DataFrame
-) -> PropertyGraph:
-    if op == "add" and kind == "node":
-        return crud.add_nodes(g, cmds.select("id", "label", "props"))
-    if op == "add" and kind == "edge":
-        return crud.add_edges(
-            g, cmds.select("id", "label", "src", "dst", "props")
+    folded = rows.groupBy("kind", "id").agg(
+        F.aggregate(by_seq, init, apply).alias("_s")
+    )
+    alive = folded.where("_s.live").select("kind", "id", "_s.*")
+    after = pre.join(ids, "id", "left_anti").unionByName(alive, True)
+    ends_at = folded.where("kind = 'node'").selectExpr(
+        "id _nid", "_s.live _live", "_s.born _born"
+    )
+    keep = "_nid IS NULL OR _live AND (_born IS NULL OR _born < added)"
+    edges = after.where("kind = 'edge'")
+    for end in ("src", "dst"):
+        edges = (
+            edges.join(ends_at, F.col(end) == F.col("_nid"), "left")
+            .where(keep)
+            .drop("_nid", "_live", "_born")
         )
-    if op == "update" and kind in ("node", "edge"):
-        # pre-merge duplicate ids IN SEQ ORDER (delete-markers kept), so a
-        # run updating the same id twice lands deterministically
-        merged = cmds.groupBy("id").agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct("seq", "props")),
-                    # explicit comparator: structs holding maps have no
-                    # default ordering
-                    lambda l, r: F.when(l["seq"] < r["seq"], -1)
-                    .when(l["seq"] > r["seq"], 1)
-                    .otherwise(0),
-                ),
-                crud._empty_map(),
-                lambda acc, s: crud.merge_keep_nulls(acc, s["props"]),
-            ).alias("changes")
-        )
-        fn = crud.update_nodes if kind == "node" else crud.update_edges
-        return fn(g, merged)
-    if op == "remove" and kind == "node":
-        return crud.remove_nodes_by_id(g, cmds.select("id"))
-    if op == "remove" and kind == "edge":
-        return crud.remove_edges_by_id(g, cmds.select("id"))
-    raise ValueError(f"unknown mutation op/kind: {op}/{kind}")
+    nodes = after.where("kind = 'node'").select(*NODE_CORE_COLS)
+    return PropertyGraph(nodes, edges.select(*EDGE_CORE_COLS))
 
 
 @dataclass
@@ -159,7 +144,7 @@ class StreamingGraphFold:
     sources, wrong or crashing for Kafka/rate).
 
     In memory (``store_root=None``) each batch folds into the whole
-    snapshot, which stays a lazy CRUD plan over (previous state,
+    snapshot, which stays a lazy fold plan over (previous state,
     checkpointed batch); ``checkpoint_every`` truncates that stacked
     lineage on a cadence.
 
@@ -190,7 +175,7 @@ class StreamingGraphFold:
     store_every: int = 1
     compact_every: int | None = None
     # Whole-snapshot localCheckpoint cadence for IN-MEMORY folds; 0/None
-    # disables it (the CRUD plan then stacks one layer per batch). Durable
+    # disables it (the fold plan then stacks one layer per batch). Durable
     # folds ignore it: each persist moves them onto file-backed scans.
     checkpoint_every: int | None = 4
     # the store's latest version; None until the fold can slice from it
@@ -215,32 +200,41 @@ class StreamingGraphFold:
                 self._persisted = latest
 
     def step(self, batch: DataFrame, batch_id: int) -> None:
-        # no sort: run detection and the update pre-merge order by seq
-        b = batch.localCheckpoint(eager=True)
-        self.batches_applied += 1
-        if self._persisted is not None:
-            self._fold_slice(b)
-        else:
-            g = apply_mutation_batch(self.graph, b)
+        """Fold one micro-batch. Its jobs are described ``fold:batch``,
+        ``fold:pull``, ``fold:persist`` or ``fold:compact``."""
+        sc = batch.sparkSession.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        try:
+            sc.setJobDescription("fold:batch")
+            # no sort: the fold orders each id's commands by seq
+            b = batch.localCheckpoint(eager=True)
+            self.batches_applied += 1
+            if self._persisted is not None:
+                sc.setJobDescription("fold:pull")  # the fold itself is lazy
+                self._fold_slice(b)
+            else:
+                g = apply_mutation_batch(self.graph, b)
+                if (
+                    self.store_root is None
+                    and self.checkpoint_every
+                    and self.batches_applied % self.checkpoint_every == 0
+                ):
+                    g = PropertyGraph(
+                        g.nodes.localCheckpoint(eager=True),
+                        g.edges.localCheckpoint(eager=True),
+                    )
+                self.graph = g
             if (
-                self.store_root is None
-                and self.checkpoint_every
-                and self.batches_applied % self.checkpoint_every == 0
+                self.store_root is not None
+                and self.batches_applied % self.store_every == 0
             ):
-                g = PropertyGraph(
-                    g.nodes.localCheckpoint(eager=True),
-                    g.edges.localCheckpoint(eager=True),
-                )
-            self.graph = g
-        if (
-            self.store_root is not None
-            and self.batches_applied % self.store_every == 0
-        ):
-            self._persist()
+                self._persist()
+        finally:
+            sc.setLocalProperty("spark.job.description", caller)
 
     def _fold_slice(self, b: DataFrame) -> None:
         """Fold batch ``b`` into the window's slices. Only equi-semi-joins
-        against the persisted view, never an OR-condition join: CRUD
+        against the persisted view, never an OR-condition join: the fold
         reads command ids, added edges' endpoints and (for the removal
         cascade) the removed nodes' incident edges, nothing else."""
         view = self._persisted
@@ -297,6 +291,7 @@ class StreamingGraphFold:
         from akka_graph_db_spark import store
 
         spark = self.graph.nodes.sparkSession
+        spark.sparkContext.setJobDescription("fold:persist")
         root = self.store_root
         if self._persisted is not None:
             old, new = self._pre, self._post
@@ -315,10 +310,11 @@ class StreamingGraphFold:
             self.compact_every is not None
             and self._deltas_since_base >= self.compact_every
         ):
+            spark.sparkContext.setJobDescription("fold:compact")
             store.compact(root, spark)
             self._deltas_since_base = 0
         # move onto the file-backed read of what was just written: same
-        # rows, and the CRUD lineage is gone
+        # rows, and the fold's lineage is gone
         self._persisted = self.graph = store.load_snapshot(spark, root)
         self._pre = self._post = None
 

@@ -633,6 +633,160 @@ def test_durable_fold_matches_whole_graph_fold(draws):
                         ), (v, pair)
 
 
+# -- one-plan mutation fold == plain sequential replay -----------------------
+
+_REPLAY_NODES = list(range(1, 9))  # 1..6 are in the pre-image
+_REPLAY_EDGES = list(range(50, 57))  # 50..54 are in the pre-image
+_OPS = ("add", "update", "remove")
+_CHANGES = ({"k": '"x"'}, {"k": "null"}, {"j": '"y"'})
+
+# (kind, op, id, change, src, dst): any op on any id of a small universe,
+# so commands on dead ids, edges to dead endpoints and re-adds all occur
+replay_cmd_strategy = st.one_of(
+    st.tuples(
+        st.just("node"),
+        st.sampled_from(_OPS),
+        st.sampled_from(_REPLAY_NODES),
+        st.integers(0, 2),
+        st.none(),
+        st.none(),
+    ),
+    st.tuples(
+        st.just("edge"),
+        st.sampled_from(_OPS),
+        st.sampled_from(_REPLAY_EDGES),
+        st.integers(0, 2),
+        st.sampled_from(_REPLAY_NODES),
+        st.sampled_from(_REPLAY_NODES),
+    ),
+)
+
+
+def _replay_rows(batches):
+    """MUTATION_SCHEMA rows per batch, seq numbered across batches."""
+    seq, out = 0, []
+    for batch in batches:
+        rows = []
+        for kind, op, i, change, src, dst in batch:
+            seq += 1
+            label = props = None
+            if op == "add":
+                label = ("n", "r")[change % 2] if kind == "node" else "e"
+                props = {"k" if kind == "node" else "w": f'"{seq}"'}
+            elif op == "update":
+                props = _CHANGES[change]
+            if kind == "node" or op != "add":
+                src = dst = None
+            rows.append((seq, op, kind, i, label, src, dst, props))
+        out.append(rows)
+    return out
+
+
+def _replay(nodes, edges, rows):
+    """Apply ``rows`` one by one, in seq order, to the dicts ``nodes``
+    (id -> (label, props)) and ``edges`` (id -> (label, src, dst, props)):
+    add sets the row (an edge only if both endpoints exist, else the id
+    is left absent), update merges into a live row (a "null" value
+    deletes the key), and a node remove cascades to its edges."""
+
+    def merge(props, changes):
+        merged = {**props, **changes}
+        return {k: v for k, v in merged.items() if v != "null"}
+
+    for seq, op, kind, i, label, src, dst, props in sorted(rows):
+        table = nodes if kind == "node" else edges
+        if op == "add" and kind == "node":
+            nodes[i] = (label, props)
+        elif op == "add":
+            edges.pop(i, None)
+            if src in nodes and dst in nodes:
+                edges[i] = (label, src, dst, props)
+        elif op == "update" and i in table:
+            *head, old = table[i]
+            table[i] = (*head, merge(old, props))
+        elif op == "remove" and i in table:
+            del table[i]
+            if kind == "node":
+                for e in [e for e, v in edges.items() if i in v[1:3]]:
+                    del edges[e]
+
+
+# every example folds one or two batches (a few seconds each), so four
+# drawn examples plus the explicit one that covers every adversarial order
+@settings(max_examples=4, deadline=None)
+@given(
+    batches=st.lists(
+        st.lists(replay_cmd_strategy, min_size=1, max_size=12),
+        min_size=1,
+        max_size=2,
+    )
+)
+@example(
+    batches=[
+        [
+            ("node", "add", 7, 0, None, None),  # add -> remove -> add
+            ("node", "remove", 7, 0, None, None),
+            ("node", "add", 7, 1, None, None),
+            ("edge", "add", 55, 0, 7, 8),  # before its endpoint's add
+            ("node", "add", 8, 0, None, None),
+            ("node", "remove", 5, 0, None, None),
+            ("edge", "add", 56, 0, 1, 5),  # after its endpoint's removal
+            ("node", "remove", 2, 0, None, None),  # cascades 50 and 51
+            ("edge", "update", 50, 0, None, None),  # after the cascade
+            ("node", "remove", 4, 0, None, None),  # pre-image edge 53 ...
+            ("node", "add", 4, 0, None, None),  # ... stays gone
+            ("node", "update", 4, 1, None, None),
+            ("edge", "add", 52, 0, 7, 1),  # a live id: replaced
+            ("node", "update", 7, 2, None, None),
+            ("edge", "remove", 54, 0, None, None),
+            ("edge", "update", 52, 1, None, None),
+        ],
+        [
+            ("edge", "add", 54, 0, 1, 7),  # re-add of a removed id
+            ("node", "update", 2, 0, None, None),  # dead: no-op
+            ("edge", "remove", 55, 0, None, None),  # dead: no-op
+            ("node", "remove", 5, 0, None, None),  # dead: no-op
+            ("edge", "add", 53, 0, 4, 6),
+            ("node", "add", 1, 1, None, None),  # a live id: edges stay
+            ("edge", "add", 56, 0, 7, 2),  # endpoint dead: stays absent
+            ("edge", "add", 52, 0, 3, 2),  # live id, dead endpoint: gone
+        ],
+    ]
+)
+def test_mutation_fold_matches_plain_replay(batches):
+    """``apply_mutation_batch`` folds every batch to exactly the graph a
+    plain sequential replay of its commands gives: MATCH-first at each
+    edge add, the DETACH cascade of each node remove, and no-ops on dead
+    ids, under any interleaving of ops and kinds."""
+    from akka_graph_db_spark.streaming.fold import (
+        MUTATION_SCHEMA,
+        apply_mutation_batch,
+    )
+
+    spark = _SPARK["s"]
+    g = build(spark, [])
+    g = crud.add_edges(
+        g, [(e, "e", s, d, {"w": 0}) for e, (s, d) in _BASE_EDGES.items()]
+    )
+
+    def state(g):
+        return (
+            {r["id"]: (r["label"], r["props"]) for r in g.nodes.collect()},
+            {
+                r["id"]: (r["label"], r["src"], r["dst"], r["props"])
+                for r in g.edges.collect()
+            },
+        )
+
+    nodes, edges = state(g)
+    for rows in _replay_rows(batches):
+        batch = spark.createDataFrame(rows, MUTATION_SCHEMA)
+        g = apply_mutation_batch(g, batch)
+        g = PropertyGraph(g.nodes.localCheckpoint(), g.edges.localCheckpoint())
+        _replay(nodes, edges, rows)
+        assert state(g) == (nodes, edges), rows
+
+
 # -- version_diff: fused single aggregation == two loads joined ---------------
 
 _DIFF_NODE_IDS = NODE_IDS[:5]

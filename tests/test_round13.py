@@ -15,6 +15,7 @@ Pins the invariants the r13 optimization pass relies on:
 import os
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from conftest import SF as SF_DIR
@@ -83,68 +84,84 @@ def test_signature_n_equals_verify_set_size(spark, shingle_n, arrow):
     assert bad == 0
 
 
+def _stage_source(dirpath, n, row_group_size=7):
+    """A parquet events table of ``n`` rows in row groups of
+    ``row_group_size``; returns its path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(str(dirpath), f"events_{n}_{row_group_size}.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [1_700_000_000_000_000 + 997 * i for i in range(n)],
+                    pa.timestamp("us"),
+                ),
+                "event_type": ["click" if i % 3 else "view" for i in range(n)],
+            }
+        ),
+        path,
+        row_group_size=row_group_size,
+    )
+    return path
+
+
+def _check_stage(dirpath, path, n_files, columns, where=None, repeat=1):
+    """Stage ``path`` with ``_stage`` and check that it writes exactly
+    ``n_files`` files on the one-minute mtime ladder, each the matching
+    contiguous slice of the whole (filtered, repeated, renamed) table.
+    Returns the files' row counts."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    whole = pq.read_table(path)
+    if where is not None:
+        whole = whole.filter(where)
+    whole = whole.set_column(
+        1, "ts", whole["ts"].cast(pa.timestamp("us", tz="UTC"))
+    )
+    whole = pa.concat_tables([whole] * repeat)
+    if not isinstance(columns, dict):
+        columns = dict(zip(columns, columns))
+    whole = pa.table([whole[c] for c in columns.values()], names=list(columns))
+    dest = os.path.join(str(dirpath), f"staged_{len(os.listdir(dirpath))}")
+    paths = entry._stage(path, dest, n_files, columns, where, repeat)
+
+    names = [f"part-{i:02d}.parquet" for i in range(n_files)]
+    assert sorted(os.listdir(dest)) == names
+    assert paths == [os.path.join(dest, f) for f in names]
+    assert [os.path.getmtime(p) for p in paths] == [
+        1_600_000_000 + 60 * i for i in range(n_files)
+    ]
+    step = max(1, math.ceil(whole.num_rows / n_files))
+    for i, p in enumerate(paths):
+        got = pq.read_table(p)
+        assert got.equals(whole.slice(i * step, step)), (p, got)
+    counts = [pq.read_metadata(p).num_rows for p in paths]
+    assert sum(counts) == whole.num_rows
+    return counts
+
+
 def test_stage_writes_contiguous_slices(tmp_path):
     """_stage streams record batches into exactly ``n_files`` files on
     the one-minute mtime ladder, each the matching contiguous slice of
     the whole (filtered, repeated, renamed) table — also when slices
     cross the source's 7-row batches and when the source has fewer rows
     than ``n_files`` (empty tail files)."""
-    import math
-
-    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    import __spark_entry__ as entry
 
     def source(n):
-        path = str(tmp_path / f"events_{n}.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(range(n), pa.int64()),
-                    "ts": pa.array(
-                        [1_700_000_000_000_000 + 997 * i for i in range(n)],
-                        pa.timestamp("us"),
-                    ),
-                    "event_type": [
-                        "click" if i % 3 else "view" for i in range(n)
-                    ],
-                }
-            ),
-            path,
-            row_group_size=7,
-        )
-        return path
+        return _stage_source(tmp_path, n)
 
     def check(path, n_files, columns, where=None, repeat=1):
-        whole = pq.read_table(path)
-        if where is not None:
-            whole = whole.filter(where)
-        whole = whole.set_column(
-            1, "ts", whole["ts"].cast(pa.timestamp("us", tz="UTC"))
-        )
-        whole = pa.concat_tables([whole] * repeat)
-        if not isinstance(columns, dict):
-            columns = dict(zip(columns, columns))
-        whole = pa.table(
-            [whole[c] for c in columns.values()], names=list(columns)
-        )
-        dest = str(tmp_path / f"staged_{len(os.listdir(tmp_path))}")
-        paths = entry._stage(path, dest, n_files, columns, where, repeat)
-
-        names = [f"part-{i:02d}.parquet" for i in range(n_files)]
-        assert sorted(os.listdir(dest)) == names
-        assert paths == [os.path.join(dest, f) for f in names]
-        assert [os.path.getmtime(p) for p in paths] == [
-            1_600_000_000 + 60 * i for i in range(n_files)
-        ]
-        step = max(1, math.ceil(whole.num_rows / n_files))
-        for i, p in enumerate(paths):
-            got = pq.read_table(p)
-            assert got.equals(whole.slice(i * step, step)), (p, got)
-        return [pq.read_metadata(p).num_rows for p in paths]
+        return _check_stage(tmp_path, path, n_files, columns, where, repeat)
 
     big = source(100)
     # the premise: scans yield many small batches, so slices cross them
@@ -156,6 +173,39 @@ def test_stage_writes_contiguous_slices(tmp_path):
     # fewer rows than files: the tail files exist, empty, same schema
     assert check(source(2), 4, ["event_id", "ts"]) == [1, 1, 0, 0]
     assert check(source(2), 4, ["event_id"], click) == [1, 0, 0, 0]
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    n_rows=st.integers(0, 40),
+    row_group_size=st.integers(1, 9),
+    n_files=st.integers(1, 6),
+    columns=st.sampled_from(
+        [
+            ["event_id", "ts"],
+            ["ts"],
+            ["event_type", "event_id"],
+            {"id": "event_id", "t": "ts"},
+            {"kind": "event_type", "when": "ts", "again": "ts"},
+        ]
+    ),
+    clicks_only=st.booleans(),
+    repeat=st.integers(1, 3),
+)
+def test_stage_slices_match_whole_table(
+    n_rows, row_group_size, n_files, columns, clicks_only, repeat
+):
+    """For random source sizes and row-group sizes, file counts, filters,
+    renames and repeats, every file ``_stage`` writes is the contiguous
+    slice of the whole table at its position (pyarrow only, no Spark)."""
+    import tempfile
+
+    import pyarrow.compute as pc
+
+    where = (pc.field("event_type") == "click") if clicks_only else None
+    with tempfile.TemporaryDirectory() as tmp:
+        path = _stage_source(tmp, n_rows, row_group_size)
+        _check_stage(tmp, path, n_files, columns, where, repeat)
 
 
 def test_link_prediction_intersect_path_matches_wedge_path(spark):
@@ -282,3 +332,4 @@ def test_version_diff_fused_matches_joined(spark, tmp_path):
     got_x = rows(store.version_diff(root, 1, 3, spark))
     want_x = rows(store._version_diff_joined(root, 1, 3, spark))
     assert got_x == want_x
+

@@ -196,6 +196,27 @@ def test_fold_resumed_on_store_slices_first_batch(spark, micro, tmp_path):
     assert ids(fold.graph.edges) == ids(want.edges)
 
 
+def test_slice_fold_keeps_node_and_edge_id_spaces_apart(
+    spark, micro, tmp_path
+):
+    """An edge command on id 9 does not read as node 9, which is outside
+    the batch's slice: edge 115 (5 -> 9) keeps its row and its update."""
+    tmp = str(tmp_path)
+    root = os.path.join(tmp, "store")
+    store.save_snapshot(micro, root)
+    fold = StreamingGraphFold(
+        store.load_snapshot(spark, root), store_root=root
+    )
+    batch = [
+        (1, "remove", "edge", 9, None, None, None, None),  # no such edge
+        (2, "update", "edge", 115, None, None, None, {"w": '"1"'}),
+    ]
+    _fold_batches(spark, fold, [batch], tmp)
+    got = store.load_snapshot(spark, root).edges
+    assert ids(got) == ids(micro.edges)
+    assert got.where("id = 115").first()["props"] == {"w": '"1"'}
+
+
 def test_fold_resumed_off_store_writes_gap_in_first_delta(
     spark, micro, tmp_path
 ):
