@@ -92,29 +92,3 @@ def bloom_prune(
             "left_semi",
         )
     return out.drop(*[f"_bloom_p{i}" for i in range(k)])
-
-
-def bloom_semi_join(
-    probe: DataFrame,
-    probe_key: str,
-    build: DataFrame,
-    build_key: str,
-    m_bits: int = 1 << 20,
-    k: int = 3,
-    exact: bool = False,
-) -> DataFrame:
-    """Semi-join ``probe`` to ``build`` through a Bloom filter.
-
-    ``exact=False`` returns the pruned superset (false positives at the
-    sketch rate, never false negatives) — the cheap ingest-filter mode.
-    ``exact=True`` chases the pruned survivors with a true semi-join
-    against the build keys, giving exact results while the Bloom pass has
-    already dropped ~all non-matching rows before the shuffle — the
-    runtime-filter-under-a-join mode.
-    """
-    bits = bloom_build(build, build_key, m_bits=m_bits, k=k)
-    pruned = bloom_prune(probe, probe_key, bits, m_bits, k)
-    if not exact:
-        return pruned
-    keys = build.select(F.col(build_key).alias(probe_key)).distinct()
-    return pruned.join(keys, probe_key, "left_semi")

@@ -79,21 +79,3 @@ def contamination(
         )
     )
 
-
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    threshold: float = 0.5,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """Drop eval documents whose contamination ratio >= ``threshold``;
-    returns the surviving eval rows (original columns)."""
-    clean_ids = (
-        contamination(train, eval_df, text_col, id_col, n, hash_family)
-        .where(F.col("contamination") < threshold)
-        .select(id_col)
-    )
-    return eval_df.join(clean_ids, id_col, "left_semi")

@@ -169,111 +169,3 @@ def decode_images(
             )
 
     return media.mapInPandas(_decode, schema=DECODED_IMAGE_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "media_id bigint, out_width int, out_height int, resized_sha256 string"
-)
-
-
-def resize_images(
-    media: DataFrame,
-    width: int = 224,
-    height: int = 224,
-    allow_fake: bool = False,
-) -> DataFrame:
-    """Resize image payloads to a fixed (width, height) — the standard
-    normalization step before vision-model feature extraction.
-
-    STUB like :func:`decode_images`: real resampling requires PIL (absent
-    here); the deterministic fake content-addresses the "resized" bytes
-    as sha256(payload_hash : WxH) so downstream joins/dedups over the
-    resized column are exercised for real. One-to-one mapInPandas, Arrow
-    batches, no row-at-a-time Python.
-    """
-
-    def _resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-
-        import pandas as pd
-
-        try:
-            import io
-
-            from PIL import Image
-
-            have_pil = True
-        except ImportError:
-            have_pil = False
-
-        for pdf in batches:
-            if have_pil:
-                def rsha(b):
-                    try:
-                        im = Image.open(io.BytesIO(b)).resize((width, height))
-                        return hashlib.sha256(im.tobytes()).hexdigest()
-                    except Exception:
-                        return ""
-            elif allow_fake:
-                def rsha(b):
-                    h = hashlib.sha256(b or b"").hexdigest()
-                    return hashlib.sha256(
-                        f"{h}:{width}x{height}".encode()
-                    ).hexdigest()
-            else:
-                raise NotImplementedError(
-                    "image resize requires PIL (not in this container); "
-                    "pass allow_fake=True for the deterministic fake"
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_width": width,
-                    "out_height": height,
-                    "resized_sha256": pdf["payload"].map(rsha),
-                }
-            )
-
-    return media.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
-def byte_histogram_features(
-    media: DataFrame, n_buckets: int = 16
-) -> DataFrame:
-    """REAL feature extraction over opaque payload bytes (no optional
-    deps): a normalized ``n_buckets``-bin byte-value histogram per media
-    row — the content-signature feature used for corpus clustering and
-    near-dup triage when no modality-specific decoder is available.
-    numpy-vectorized per Arrow batch (one bincount per row over a
-    frombuffer view — no Python loop over bytes). Returns (media_id,
-    n_bytes, features ARRAY<DOUBLE> length ``n_buckets``).
-    """
-    if 256 % n_buckets != 0:
-        raise ValueError("n_buckets must divide 256")
-    schema = "media_id bigint, n_bytes bigint, features array<double>"
-
-    def _feat(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        width = 256 // n_buckets
-
-        def hist(b):
-            if not b:
-                return [0.0] * n_buckets
-            arr = np.frombuffer(bytes(b), dtype=np.uint8) // width
-            counts = np.bincount(arr, minlength=n_buckets).astype("float64")
-            return list(counts / counts.sum())
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": pdf["payload"].map(
-                        lambda b: len(b) if b is not None else 0
-                    ),
-                    "features": pdf["payload"].map(hist),
-                }
-            )
-
-    return media.mapInPandas(_feat, schema=schema)

@@ -8,9 +8,16 @@ GraphX-class analytics re-expressed in pure DataFrame form: every iterative
 algorithm is a driver-side superstep loop where each superstep is one
 Catalyst-planned join + aggregation (the Pregel pattern of GraphX's
 aggregateMessages, without the RDD API). The rank, label and frontier
-loops supply only a ``step`` (and a ``converged`` check if they stop at
-a fixpoint); one driver, :func:`_supersteps`, owns their checkpoint
-cadence, cache release and job descriptions.
+loops and the peeling family (:func:`kcore`, :func:`coreness`,
+:func:`ktruss`, :func:`dag_layers`, :func:`transitive_closure`,
+:func:`wl_color_histogram`, :func:`maximal_matching`,
+:func:`greedy_coloring`) supply only a ``step`` (and a ``converged``
+check if they stop at a fixpoint); one driver, :func:`_supersteps`, owns
+their checkpoint cadence, cache release and job descriptions. Frames
+that stay the same across rounds (a symmetrized edge frame, the node
+ids) stay outside the state: the operator persists them once and
+releases them in its ``finally`` (or checkpoints them once, where a
+cached frame's measured size would mislead the join planner).
 
 Scale design notes (100 TB):
 
@@ -65,7 +72,14 @@ def _supersteps(
     persist or checkpoint, stops the loop at the first round it returns
     true; it must be a full aggregate (count, sum), the job that
     materializes the whole round (a limit-1 ``isEmpty`` caches only the
-    partitions it scans, and the next round recomputes the rest)."""
+    partitions it scans, and the next round recomputes the rest).
+
+    Cadence rule: a step that reads its state more than once (a self-
+    join, a union with a join of itself, two semi-joins against it)
+    runs at ``checkpoint_every=1``. A persisted round still carries its
+    whole plan in the analyzed tree, so every extra read copies it and
+    the plan doubles each round until a checkpoint cuts it. A step that
+    reads its state once keeps the default cadence."""
     sc = state.sparkSession.sparkContext
     caller = sc.getLocalProperty("spark.job.description")
     held: list[DataFrame] = []
@@ -1179,100 +1193,85 @@ def hits(
             df.unpersist()
 
 
+def _persisted_sym(pairs: DataFrame) -> DataFrame:
+    """Both directions (a, b) of the canonical undirected edges,
+    hash-partitioned by ``a`` and persisted: the constant edge frame of
+    the peeling loops, which the caller unpersists. Persist, not
+    checkpoint: the cached relation keeps the hash partitioning visible
+    (a checkpointed scan reports it unknown), so a groupBy on ``a``
+    over joins that broadcast their other side needs no exchange."""
+    e = canonical_undirected(pairs)
+    return (
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .repartition(pairs.sparkSession.sparkContext.defaultParallelism, "a")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
 def kcore(pairs: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     """k-core decomposition membership: iteratively peel nodes of degree
     < k from an undirected (a, b) pair frame until a fixpoint; returns
     (id, core_degree) — the surviving nodes with their degree inside the
     core.
 
-    Each round is one degree aggregation (the only full shuffle of the
-    edge frame) followed by two semi-joins against the MATERIALIZED
-    kept-vertex frame — because ``keep`` is an eager localCheckpoint
-    with a known (and shrinking) size, AQE plans those semi-joins as
-    broadcasts once the survivor set is small, so the edge frame is not
-    reshuffled twice per round. Convergence is detected on the kept-
-    VERTEX count (peeling is monotone: keep_{r+1} ⊆ keep_r, so an equal
-    count means an identical set), which lets the fixpoint round break
-    BEFORE doing any edge join, and lets the fixpoint return ``keep``
-    itself — its ``deg`` is exactly the in-core degree when nothing was
-    peeled. Superseded checkpoints are unpersisted as the loop advances;
-    the surviving edge frame only shrinks, so per-round cost is bounded
-    by the current subgraph, and rounds-to-fixpoint is small in practice
-    (degeneracy peeling removes whole shells per round).
+    The state is the kept-vertex frame (a, deg) over the constant
+    symmetrized edges: each round is two semi-joins of the edges against
+    the kept vertices (broadcast under the vertex gate; the kept set
+    only shrinks) and one degree aggregation. The edges are hash-
+    partitioned by ``a`` and persisted once, and the broadcast semi-
+    joins keep that partitioning, so the aggregation never reshuffles.
+    A round reads its state twice, so every round is checkpointed.
+    Convergence is the kept-vertex count (peeling is monotone: an equal
+    count means an identical set), and at the fixpoint ``deg`` is
+    exactly the in-core degree. If ``max_iter`` rounds pass without the
+    fixpoint, one more round recounts inside the last kept set so the
+    contract (in-core degrees) holds.
     """
-    e = canonical_undirected(pairs)
-    npart = pairs.sparkSession.sparkContext.defaultParallelism
-    # Symmetrize once, hash-partitioned by the degree-grouping key and
-    # PERSISTED (persist keeps outputPartitioning visible; localCheckpoint
-    # would hide it): every round's degree groupBy is then exchange-free,
-    # and because the semi-joins against the small checkpointed keep
-    # frame broadcast (AQE), the shrinking edge frame KEEPS that
-    # partitioning through all rounds without ever reshuffling.
-    sym = (
-        e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .repartition(npart, F.col("a"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    prev_kept: int | None = None
-    # Every checkpointed frame lands in `stale`; the frames the RETURNED
-    # plan still references land in `live` — the finally block
-    # unpersists exactly stale − live by identity (ADVICE r6: the old
-    # positional stale[:-2] slice leaked the final sym on the fixpoint
-    # path and an extra superseded frame on the others).
-    stale: list[DataFrame] = [sym]
-    live: list[DataFrame] = []
-    try:
-        for _ in range(max_iter):
-            keep = (
-                sym.groupBy("a")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .where(F.col("deg") >= k)
-                .localCheckpoint(eager=True)
-            )
-            stale.append(keep)
-            n_kept = keep.count()  # reuses the checkpoint blocks
-            if n_kept == prev_kept or n_kept == 0:
-                # Fixpoint: no vertex fell below k this round, so keep's
-                # deg column IS the core degree — no edge rejoin needed.
-                live.append(keep)
-                return keep.select(
-                    F.col("a").alias("id"), F.col("deg").alias("core_degree")
-                )
-            prev_kept = n_kept
-            # persist, not checkpoint: the broadcast semi-joins preserve
-            # sym's hash(a) partitioning, so the next round's groupBy
-            # stays exchange-free; round count is small (whole shells
-            # peel per round), so the lineage stays shallow.
-            nxt = (
-                sym.join(keep.select("a"), "a", "left_semi")
-                .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-                .select("a", "b")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            stale.append(nxt)
-            sym = nxt
-        # max_iter exhausted without a detected fixpoint: recount inside
-        # the final subgraph so the contract (in-core degrees) holds.
-        # Materialize eagerly — sym is now a persisted (not checkpointed)
-        # chain that the finally block unpersists.
+    sym = _persisted_sym(pairs)
+
+    def degrees(edges: DataFrame) -> DataFrame:
         return (
-            sym.groupBy(F.col("a").alias("id"))
-            .agg(F.count(F.lit(1)).alias("core_degree"))
-            .where(F.col("core_degree") >= k)
-            .localCheckpoint(eager=True)
+            edges.groupBy("a")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .where(F.col("deg") >= k)
         )
+
+    try:
+        keep = degrees(sym)
+        counts = [keep.count()]
+        small = counts[0] <= _CC_BROADCAST_MAX_VERTICES
+
+        def step(keep: DataFrame) -> DataFrame:
+            ka = keep.select("a")
+            kb = keep.select(F.col("a").alias("b"))
+            if small:
+                ka, kb = F.broadcast(ka), F.broadcast(kb)
+            return degrees(
+                sym.join(ka, "a", "left_semi").join(kb, "b", "left_semi")
+            )
+
+        def converged(keep: DataFrame) -> bool:
+            counts.append(keep.count())
+            return counts[-1] in (counts[-2], 0)
+
+        keep = _supersteps(keep, step, max_iter - 1, "kcore", 1, converged)
+        if len(counts) == 1 or counts[-1] not in (counts[-2], 0):
+            # max_iter ran out: recount inside the last kept set
+            keep = step(keep).localCheckpoint(eager=True)
     finally:
-        keep_ids = {id(df) for df in live}
-        for df in stale:
-            if id(df) not in keep_ids:
-                df.unpersist()
+        sym.unpersist()
+    return keep.select(F.col("a").alias("id"), F.col("deg").alias("core_degree"))
 
 
-def coreness(
-    pairs: DataFrame, max_iter: int = 60, check_every: int = 3
-) -> DataFrame:
+# h-index rounds chained into one lazily composed plan per superstep of
+# coreness. A block costs one broadcast job per round plus three jobs to
+# checkpoint it and sum it, so longer blocks trade a few no-op rounds
+# past the fixpoint for fewer jobs: at 5, the sf0.1 part co-order graph
+# (38 rounds to its fixpoint) takes 9 blocks.
+_CORENESS_BLOCK = 5
+
+
+def coreness(pairs: DataFrame, max_iter: int = 60) -> DataFrame:
     """FULL core decomposition — every vertex's core number in one run
     (vs :func:`kcore`'s single-k membership) — by h-index iteration
     (Lü et al. 2016, Sci. Rep. 6:22241): h⁰(v) = deg(v), hⁿ⁺¹(v) =
@@ -1289,119 +1288,75 @@ def coreness(
     multi-million-degree hubs, cap hubs first (their coreness can also
     be resolved by peeling the low shells). Returns (id, coreness).
 
-    Two r7 wall-clock levers (26s -> ~13s at sf0.1, where the per-round
-    DATA is tiny and driver job scheduling dominates):
+    Per-round data is NOT small: on the sf0.1 part co-order graph every
+    round joins and sorts 2.39 M directed edge rows, and the fixpoint
+    takes 38 rounds. Two levers keep the job count down:
 
-    - **Round chaining**: ``check_every`` h-index rounds run as ONE
-      lazily-composed plan between materializations — one Spark job per
-      block instead of one (plus a convergence job) per round.
-      Intermediate rounds are never persisted; the block-end frame is a
-      lazy localCheckpoint whose materialization rides the convergence
-      aggregate's job and truncates lineage for the next block.
+    - **Round chaining**: one superstep of :func:`_supersteps` is a
+      block of ``_CORENESS_BLOCK`` h-index rounds composed as ONE lazy
+      plan, so a block costs one checkpoint and one convergence sum
+      instead of one per round. ``max_iter`` is rounded up to whole
+      blocks (rounds past the fixpoint are no-ops). Every block is
+      checkpointed: in a fresh JVM, persisted blocks (the default
+      cadence) measured slower at sf0.1 than a checkpoint per block.
     - **Sum-based convergence**: hⁿ⁺¹(v) <= hⁿ(v) pointwise (Lü et al.
       Thm 1), so Σh strictly decreases until the fixpoint — equal
-      block-end sums prove NO round in the block changed anything. One
-      1-row aggregate over the new small (id, h) frame replaces the old
-      per-round join+count against the previous frame.
+      block-end sums prove NO round in the block changed anything. The
+      first block compares against the degree sum.
 
     Raises RuntimeError if ``max_iter`` rounds pass without reaching the
-    fixpoint (ADVICE r6): the intermediate h values are only UPPER
-    BOUNDS on coreness, and unlike :func:`kcore` there is no recount
-    fallback that restores the contract — a silent return would hand
-    back wrong answers. Raise ``max_iter`` instead. (The old silent
-    30-round cap was measured returning non-converged values on the
-    sf0.1 co-order graph, whose fixpoint is round 37 — the default is
-    now 60, and rounds past the fixpoint are no-ops.)
+    fixpoint: the intermediate h values are only UPPER BOUNDS on
+    coreness, and unlike :func:`kcore` there is no recount fallback that
+    restores the contract — a silent return would hand back wrong
+    answers. Raise ``max_iter`` instead.
     """
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
-    e = canonical_undirected(pairs)
-    npart = pairs.sparkSession.sparkContext.defaultParallelism
-    # Hash-partition the symmetrized edges by the GROUPING key `a` ONCE
-    # and persist (not checkpoint: InMemoryRelation keeps the plan's
-    # outputPartitioning, a checkpointed RDD scan reports unknown). With
-    # the h frame broadcast, every round is then broadcast-join +
-    # exchange-FREE aggregation — a check_every-round block compiles to
-    # narrow stages over the cached edge partitions instead of
-    # reshuffling 2|E| rows per round (38 true-fixpoint rounds at sf0.1
-    # in 16.3s vs 26s for the old code's premature 30).
-    sym = (
-        e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .repartition(npart, F.col("a"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_vertices = sym.select("a").distinct().count()
-    h = (
-        sym.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("h"))
-        .localCheckpoint(eager=True)
-    )
-    stale: list[DataFrame] = [sym, h]
-    live: list[DataFrame] = []
-    # Seed with the h0 = degree sum: a graph already at its fixpoint
-    # (every h-index equals the degree) then converges on the FIRST
-    # block instead of needing an extra confirming block — and, with a
-    # tight max_iter, instead of spuriously raising after the budget is
-    # spent on no-op rounds (r7 review finding).
-    prev_sum: int | None = h.agg(
-        F.sum("h").cast("bigint").alias("s")
-    ).collect()[0]["s"]
-    converged = False
-
-    def _round(cur: DataFrame) -> DataFrame:
-        st = cur.select(F.col("a").alias("b"), F.col("h").alias("_nh"))
-        if n_vertices <= _CC_BROADCAST_MAX_VERTICES:
-            st = F.broadcast(st)
-        nh = sym.join(st, "b").select("a", "_nh")
-        hs = F.sort_array(F.collect_list("_nh"), asc=False)
-        return (
-            nh.groupBy("a")
-            .agg(hs.alias("_hs"))
-            .select(
-                "a",
-                F.array_max(
-                    F.zip_with(
-                        F.col("_hs"),
-                        F.sequence(F.lit(1), F.size("_hs")),
-                        lambda v, i: F.least(v, i.cast("bigint")),
-                    )
-                ).alias("h"),
-            )
-        )
-
+    # with the h frame broadcast, every round is a broadcast join and an
+    # exchange-free aggregation over the cached edge partitions
+    sym = _persisted_sym(pairs)
     try:
-        rounds_done = 0
-        while rounds_done < max_iter:
-            cur = h
-            for _ in range(min(check_every, max_iter - rounds_done)):
-                cur = _round(cur)
-                rounds_done += 1
-            hnew = cur.localCheckpoint(eager=False)
-            stale.append(hnew)
-            # this collect materializes the checkpoint AND returns the sum
-            h_sum = hnew.agg(
-                F.sum("h").cast("bigint").alias("s")
-            ).collect()[0]["s"]
-            h = hnew
-            if h_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = h_sum
-        if not converged:
-            raise RuntimeError(
-                f"coreness did not converge in {max_iter} rounds — the "
-                "current h values are only upper bounds on coreness; "
-                "raise max_iter"
-            )
-        live.append(h)
-        return h.select(F.col("a").alias("id"), F.col("h").alias("coreness"))
+        h = sym.groupBy("a").agg(F.count(F.lit(1)).alias("h"))
+        n_vertices, h_sum = h.agg(
+            F.count(F.lit(1)), F.sum("h").cast("bigint")
+        ).first()
+        sums = [h_sum]
+        small = n_vertices <= _CC_BROADCAST_MAX_VERTICES
+
+        def step(h: DataFrame) -> DataFrame:
+            for _ in range(_CORENESS_BLOCK):
+                st = h.select(F.col("a").alias("b"), F.col("h").alias("_nh"))
+                nh = sym.join(F.broadcast(st) if small else st, "b")
+                hs = F.sort_array(F.collect_list("_nh"), asc=False)
+                h = (
+                    nh.groupBy("a")
+                    .agg(hs.alias("_hs"))
+                    .select(
+                        "a",
+                        F.array_max(
+                            F.zip_with(
+                                F.col("_hs"),
+                                F.sequence(F.lit(1), F.size("_hs")),
+                                lambda v, i: F.least(v, i.cast("bigint")),
+                            )
+                        ).alias("h"),
+                    )
+                )
+            return h
+
+        def converged(h: DataFrame) -> bool:
+            sums.append(h.agg(F.sum("h").cast("bigint")).first()[0])
+            return sums[-1] == sums[-2]
+
+        n_blocks = -(-max_iter // _CORENESS_BLOCK)
+        h = _supersteps(h, step, n_blocks, "coreness", 1, converged)
     finally:
-        keep_ids = {id(df) for df in live}
-        for df in stale:
-            if id(df) not in keep_ids:
-                df.unpersist()
+        sym.unpersist()
+    if len(sums) == 1 or sums[-1] != sums[-2]:
+        raise RuntimeError(
+            f"coreness did not converge in {max_iter} rounds — the "
+            "current h values are only upper bounds on coreness; "
+            "raise max_iter"
+        )
+    return h.select(F.col("a").alias("id"), F.col("h").alias("coreness"))
 
 
 def maximal_independent_set(
@@ -1556,28 +1511,27 @@ def transitive_closure(
     billion-node raw graphs; the per-round join itself is
     shuffle-partitioned on the join key and never materializes more
     than the closure. Fixpoint-detected (count stable), monotone — an
-    oracle can unroll a fixed round count safely past the fixpoint.
+    oracle can unroll a fixed round count safely past the fixpoint. A
+    round reads the closure three times, so every round is
+    checkpointed.
     """
-    reach = (
-        pairs.select("a", "b").distinct().localCheckpoint(eager=True)
-    )
-    prev = reach.count()
-    for _ in range(max_doublings):
+    reach = pairs.select("a", "b").distinct().localCheckpoint(eager=True)
+    counts = [reach.count()]
+
+    def step(reach: DataFrame) -> DataFrame:
         x, y = reach.alias("x"), reach.alias("y")
-        stepped = x.join(
-            y, F.col("x.b") == F.col("y.a")
-        ).select(F.col("x.a").alias("a"), F.col("y.b").alias("b"))
-        nxt = (
-            reach.unionByName(stepped)
-            .distinct()
-            .localCheckpoint(eager=True)
+        stepped = x.join(y, F.col("x.b") == F.col("y.a")).select(
+            F.col("x.a").alias("a"), F.col("y.b").alias("b")
         )
-        after = nxt.count()
-        reach = nxt
-        if after == prev:
-            break
-        prev = after
-    return reach
+        return reach.unionByName(stepped).distinct()
+
+    def converged(reach: DataFrame) -> bool:
+        counts.append(reach.count())
+        return counts[-1] == counts[-2]
+
+    return _supersteps(
+        reach, step, max_doublings, "transitive_closure", 1, converged
+    )
 
 
 def strongly_connected_components(
@@ -1629,10 +1583,12 @@ def ktruss(pairs: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     Each round enumerates triangles of the CURRENT edge set via the same
     degree-oriented edge-iterator as :func:`triangle_count` (wedge work
     bounded O(m^1.5) under skew), credits each triangle to its three
-    edges, and semi-joins the survivors. The edge frame only shrinks;
-    it is checkpointed every round (loop state, same cadence as kcore).
-    Peeling is monotone, so rounds past the fixpoint are no-ops — an
-    oracle can safely unroll a FIXED round count >= the actual fixpoint.
+    edges, and keeps the supported ones. The state is the surviving
+    edge frame, which only shrinks; a round reads it several times, so
+    every round is checkpointed. The input edges are materialized once
+    for the same reason. Peeling is monotone, so rounds past the
+    fixpoint are no-ops — an oracle can safely unroll a FIXED round
+    count >= the actual fixpoint.
 
     Returns the surviving canonical edges (a, b) with their final
     ``support`` count.
@@ -1642,35 +1598,27 @@ def ktruss(pairs: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     if max_iter < 1:
         raise ValueError(f"ktruss needs max_iter >= 1, got {max_iter}")
     e = canonical_undirected(pairs).localCheckpoint(eager=True)
-    prev = e.count()
-    for _ in range(max_iter):
-        tri = _oriented_triangles(e)
+    counts = [e.count()]
+
+    def step(surv: DataFrame) -> DataFrame:
+        tri = _oriented_triangles(surv.select("a", "b"))
         # each (x, y, z) triangle supports its three canonical edges
-        sides = tri.select(
-            F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-        ).unionByName(
-            tri.select(
-                F.least("x", "z").alias("a"),
-                F.greatest("x", "z").alias("b"),
-            )
-        ).unionByName(
-            tri.select(
-                F.least("y", "z").alias("a"),
-                F.greatest("y", "z").alias("b"),
-            )
+        sides = [
+            tri.select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
+            for u, v in (("x", "y"), ("x", "z"), ("y", "z"))
+        ]
+        return (
+            sides[0].unionByName(sides[1]).unionByName(sides[2])
+            .groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("support"))
+            .where(F.col("support") >= k - 2)
         )
-        sup = sides.groupBy("a", "b").agg(
-            F.count(F.lit(1)).alias("support")
-        ).where(F.col("support") >= k - 2)
-        nxt = sup.select("a", "b", "support").localCheckpoint(eager=True)
-        after = nxt.count()  # materializes the checkpoint, reused below
-        e = nxt.select("a", "b")
-        if after == prev:
-            return nxt
-        prev = after
-        if after == 0:
-            return nxt
-    return nxt
+
+    def converged(surv: DataFrame) -> bool:
+        counts.append(surv.count())
+        return counts[-1] in (counts[-2], 0)
+
+    return _supersteps(e, step, max_iter, "ktruss", 1, converged)
 
 
 _WEDGE_BROADCAST_MAX_EDGES = 10_000_000
@@ -3145,34 +3093,32 @@ def greedy_coloring(
     colors identically, and an unrolled SQL oracle can reproduce every
     assignment.
 
-    Per round: two semi-joins restrict edges to uncolored endpoints, one
-    neighbor-min aggregation picks winners, and the mex (smallest absent
-    color) is an anti-join of a bounded candidate explode (colors after
-    round r never exceed r+1, so ``sequence(1, r+2)`` always contains
-    the mex) against colored-neighbor colors — all joins keyed by vertex
-    id, edge frame only shrinks, loop state checkpointed (the MIS/kcore
-    cadence). Raises on overrun instead of returning a partial coloring.
+    The state is (id, _deg, color), a null color marking an uncolored
+    vertex, over the symmetrized edges hash-partitioned and persisted
+    once. Per round: one semi-join and one join restrict edges to
+    uncolored endpoints, one neighbor-min aggregation picks winners,
+    and the mex (smallest absent color) is an anti-join of a bounded
+    candidate explode (colors after round r never exceed r+1, so
+    ``sequence(1, r+2)`` always contains the mex) against colored-
+    neighbor colors — all joins keyed by vertex id. A round reads its
+    state several times, so every round is checkpointed; the
+    uncolored count is the convergence check. Raises on overrun
+    instead of returning a partial coloring.
 
     Returns (id, color) with colors ≥ 1; a proper coloring of the input
     graph (pytest-pinned: no edge joins two equal colors).
     """
     from akka_graph_db_spark.functions.hashing import md5_63
 
-    e = canonical_undirected(pairs)
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    sym = _persisted_sym(pairs)
     verts = (
         vertices.select("id")
         if vertices is not None
         else sym.select(F.col("a").alias("id")).distinct()
-    ).localCheckpoint(eager=True)
+    )
     deg = sym.groupBy(F.col("a").alias("id")).agg(
         F.count(F.lit(1)).alias("_deg")
     )
-    vdeg = verts.join(deg, "id", "left").select(
-        "id", F.coalesce("_deg", F.lit(0)).alias("_deg")
-    ).localCheckpoint(eager=True)
 
     def _key(idc, degc, r: int):
         # (degree DESC, hash, id) as one fixed-width string:
@@ -3187,63 +3133,82 @@ def greedy_coloring(
             idc,
         )
 
-    colored = verts.limit(0).select(
-        "id", F.lit(1).alias("color")
-    ).localCheckpoint(eager=True)
-    uncolored = vdeg
-    for r in range(max_rounds):
-        if uncolored.isEmpty():
-            break
-        u_ids = uncolored.select("id")
-        s = (
-            sym.join(u_ids.select(F.col("id").alias("a")), "a", "left_semi")
-            .join(u_ids.select(F.col("id").alias("b")), "b", "left_semi")
-        )
-        nkey = s.join(
-            vdeg.select(F.col("id").alias("b"), F.col("_deg").alias("_bd")),
-            "b",
-        ).select(
-            F.col("a").alias("id"),
-            _key(F.col("b"), F.col("_bd"), r).alias("_nk"),
+    r, n_left = -1, None
+
+    def step(state: DataFrame) -> DataFrame:
+        nonlocal r
+        r += 1
+        unc = state.where(F.col("color").isNull())
+        nkey = (
+            sym.join(unc.select(F.col("id").alias("a")), "a", "left_semi")
+            .join(
+                unc.select(F.col("id").alias("b"), F.col("_deg").alias("_bd")),
+                "b",
+            )
+            .select(
+                F.col("a").alias("id"),
+                _key(F.col("b"), F.col("_bd"), r).alias("_nk"),
+            )
         )
         nmin = nkey.groupBy("id").agg(F.min("_nk").alias("_nmin"))
         winners = (
-            uncolored.join(nmin, "id", "left")
+            unc.join(nmin, "id", "left")
             .where(
                 F.col("_nmin").isNull()
                 | (_key(F.col("id"), F.col("_deg"), r) < F.col("_nmin"))
             )
             .select("id")
-            .localCheckpoint(eager=True)
         )
         used = (
             sym.join(winners.select(F.col("id").alias("a")), "a", "left_semi")
             .join(
-                colored.select(F.col("id").alias("b"), "color"), "b"
+                state.where(F.col("color").isNotNull())
+                .select(F.col("id").alias("b"), "color"),
+                "b",
             )
             .select(F.col("a").alias("id"), "color")
             .distinct()
         )
         mex = (
             winners.select(
-                "id", F.explode(F.sequence(F.lit(1), F.lit(r + 2))).alias("color")
+                "id", F.explode(F.sequence(F.lit(1), F.lit(r + 2))).alias("_c")
             )
-            .join(used, ["id", "color"], "left_anti")
+            .join(
+                used.withColumnRenamed("color", "_c"), ["id", "_c"], "left_anti"
+            )
             .groupBy("id")
-            .agg(F.min("color").alias("color"))
+            .agg(F.min("_c").alias("_c"))
         )
-        colored = colored.unionByName(mex).localCheckpoint(eager=True)
-        uncolored = uncolored.join(winners, "id", "left_anti").localCheckpoint(
-            eager=True
+        return state.join(mex, "id", "left").select(
+            "id", "_deg", F.coalesce("color", "_c").alias("color")
         )
-    else:
-        n_rem = uncolored.count()
-        if n_rem:
-            raise RuntimeError(
-                f"greedy_coloring: {n_rem} vertices uncolored after "
-                f"{max_rounds} rounds; raise max_rounds"
-            )
-    return colored
+
+    def converged(state: DataFrame) -> bool:
+        nonlocal n_left
+        n_left = state.where(F.col("color").isNull()).count()
+        return n_left == 0
+
+    try:
+        colors = _supersteps(
+            verts.join(deg, "id", "left").select(
+                "id",
+                F.coalesce("_deg", F.lit(0)).alias("_deg"),
+                F.lit(None).cast("int").alias("color"),
+            ),
+            step,
+            max_rounds,
+            "greedy_coloring",
+            1,
+            converged,
+        )
+    finally:
+        sym.unpersist()
+    if n_left:
+        raise RuntimeError(
+            f"greedy_coloring: {n_left} vertices uncolored after "
+            f"{max_rounds} rounds; raise max_rounds"
+        )
+    return colors.select("id", "color")
 
 
 def node_four_clique_counts(edge_pairs: DataFrame) -> DataFrame:
@@ -3637,43 +3602,45 @@ def wl_color_histogram(
     histogram bit-for-bit.
 
     Scale shape: each round is exactly one PageRank-superstep shuffle —
-    an edge join against the (node, color) state plus a groupBy
-    collect — with per-round localCheckpoint keeping the plan linear.
+    an edge join against the (id, color) state plus a groupBy collect.
+    A round reads its state twice (the join and the recolor), so every
+    round is checkpointed. The adjacency is an eager localCheckpoint,
+    not a persisted frame: once cached, its measured size (under the
+    broadcast threshold at sf0.1) made the planner broadcast the 2.39 M
+    adjacency rows every round instead of the per-vertex colors.
     Neighbor color lists are degree-sized strings; for degree-skewed
     graphs cap or hash-fold the hub lists the same way the wedge ops
     cap centers (hubs are already uniquely colored by round 1).
     """
     und = canonical_undirected(pairs)
-    adj = und.select("a", "b").unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    colors = (
-        adj.groupBy(F.col("a").alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select("id", F.col("deg").cast("string").alias("color"))
+    adj = (
+        und.select("a", "b")
+        .unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
+
+    def step(colors: DataFrame) -> DataFrame:
         nbr = adj.join(
-            colors.select(
-                F.col("id").alias("b"), F.col("color").alias("_nc")
-            ),
+            colors.select(F.col("id").alias("b"), F.col("color").alias("_nc")),
             "b",
         ).select(F.col("a").alias("id"), "_nc")
         folded = nbr.groupBy("id").agg(
-            F.concat_ws(
-                ",", F.sort_array(F.collect_list("_nc"))
-            ).alias("_ns")
+            F.concat_ws(",", F.sort_array(F.collect_list("_nc"))).alias("_ns")
         )
-        colors = (
-            colors.join(folded, "id")
-            .select(
-                "id",
-                F.md5(
-                    F.concat_ws("|", F.col("color"), F.col("_ns"))
-                ).alias("color"),
-            )
-            .localCheckpoint(eager=True)
+        return colors.join(folded, "id").select(
+            "id",
+            F.md5(F.concat_ws("|", F.col("color"), F.col("_ns"))).alias("color"),
         )
+
+    colors = _supersteps(
+        adj.groupBy(F.col("a").alias("id"))
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .select("id", F.col("deg").cast("string").alias("color")),
+        step,
+        rounds,
+        "wl_color_histogram",
+        checkpoint_every=1,
+    )
     return (
         colors.groupBy(F.col("color").alias("wl_color"))
         .agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -3698,52 +3665,55 @@ def dag_layers(
     non-converged state).
 
     Scale shape: each round is one edge join + groupBy MAX (map-side
-    combinable — the PageRank superstep shuffle), convergence is a
-    monotone-sum 1-row aggregate (no join), and per-round
-    localCheckpoint keeps the lazy plan linear in rounds. Depth, not
-    |V|, bounds the round count — typically O(10) even on huge graphs.
+    combinable — the PageRank superstep shuffle) left-joined onto the
+    constant node ids, so a round reads its (id, layer) state once and
+    runs at the driver's default cadence; convergence is a monotone-sum
+    1-row aggregate (no join). Depth, not |V|, bounds the round count —
+    typically O(10) even on huge graphs.
     """
-    node_ids = nodes.select("id", "label")
-    layer = node_ids.select(
-        "id", F.lit(0).cast("bigint").alias("layer")
-    ).localCheckpoint(eager=True)
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    prev_sum = -1
-    for _ in range(max_iter):
+    ids = nodes.select("id").persist(StorageLevel.MEMORY_AND_DISK)
+    e = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    sums = [0]
+
+    def step(layer: DataFrame) -> DataFrame:
         recv = (
             e.join(
                 layer.select(
-                    F.col("id").alias("src"),
-                    F.col("layer").alias("_lu"),
+                    F.col("id").alias("src"), F.col("layer").alias("_lu")
                 ),
                 "src",
             )
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("_lu") + 1).alias("_recv"))
         )
-        layer = (
-            layer.select("id")
-            .join(recv, "id", "left")
-            .select(
-                "id",
-                F.coalesce("_recv", F.lit(0)).cast("bigint").alias(
-                    "layer"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        return ids.join(recv, "id", "left").select(
+            "id", F.coalesce("_recv", F.lit(0)).cast("bigint").alias("layer")
         )
-        cur_sum = layer.agg(F.sum("layer")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
+
+    def converged(layer: DataFrame) -> bool:
+        sums.append(layer.agg(F.sum("layer")).first()[0] or 0)
+        return sums[-1] == sums[-2]
+
+    try:
+        layer = _supersteps(
+            ids.select("id", F.lit(0).cast("bigint").alias("layer")),
+            step,
+            max_iter,
+            "dag_layers",
+            converged=converged,
+        )
+    finally:
+        ids.unpersist()
+        e.unpersist()
+    if len(sums) == 1 or sums[-1] != sums[-2]:
         raise ValueError(
             f"dag_layers did not converge in {max_iter} rounds — "
             "the edge frame contains a cycle (longest-path layering "
             "is undefined on cyclic graphs)"
         )
     return (
-        node_ids.join(layer, "id")
+        nodes.select("id", "label")
+        .join(layer, "id")
         .groupBy("label", "layer")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
         .orderBy("label", "layer")
@@ -4065,69 +4035,84 @@ def maximal_matching(
     partitioning AND by a SQL oracle that unrolls the same rounds.
     Returns the matched edges (a, b, matched_round) ordered by (a, b).
 
-    Shape per round: two groupBy MINs over the live edge frame + two
-    equi-joins to pick local minima + one anti-join to drop matched
-    endpoints — all keyed on endpoints, map-side combinable,
-    localCheckpoint per round keeps the plan linear. The classic
+    The state is the canonical edges (a, b, _k, matched_round): a null
+    ``matched_round`` is a live edge, and an edge that loses an endpoint
+    to a match leaves the state. Shape per round: one groupBy MIN of the
+    live keys per vertex, one groupBy count per key (an edge is picked
+    iff its key is the minimum of both its endpoints), and three left
+    joins of the state against the picked keys and the matched
+    vertices — all map-side combinable. A round reads its state
+    several times, so every round is checkpointed, and the keyed input
+    edges are materialized once for the same reason. The classic
     building block for distributed coarsening/pairing passes.
     """
-    live = canonical_undirected(pairs).select(
+    edges = canonical_undirected(pairs).select(
         "a",
         "b",
         F.md5(
             F.concat_ws(
-                ":", F.col("a").cast("string"),
-                F.col("b").cast("string")
+                ":", F.col("a").cast("string"), F.col("b").cast("string")
             )
         ).alias("_k"),
+        F.lit(None).cast("int").alias("matched_round"),
     ).localCheckpoint(eager=True)
-    out = None
-    for rnd in range(1, rounds + 1):
-        # per-VERTEX minimum over the SYMMETRIZED incidence — grouping
-        # the canonical frame's sides separately is wrong: a vertex
-        # appearing as `a` in one edge and `b` in another could match
-        # twice (caught by the matching-invariant pytest; the first
-        # oracle shared the bug, so hash equality alone missed it)
-        inc = live.select(F.col("a").alias("_v"), "_k").unionByName(
-            live.select(F.col("b").alias("_v"), "_k")
+    rnd = 0
+
+    def step(state: DataFrame) -> DataFrame:
+        nonlocal rnd
+        rnd += 1
+        live = state.where(F.col("matched_round").isNull())
+        # per-VERTEX minimum over the SYMMETRIZED incidence: a vertex
+        # appearing as `a` in one edge and `b` in another takes one
+        # minimum over both (grouping the canonical frame's sides
+        # separately let a vertex match twice)
+        vmin = (
+            live.select(F.col("a").alias("_v"), "_k")
+            .unionByName(live.select(F.col("b").alias("_v"), "_k"))
+            .groupBy("_v")
+            .agg(F.min("_k").alias("_k"))
         )
-        vmin = inc.groupBy("_v").agg(F.min("_k").alias("_mk"))
-        sel = (
-            live.join(
-                vmin.select(F.col("_v").alias("a"),
-                            F.col("_mk").alias("_ma")), "a"
-            )
-            .where(F.col("_k") == F.col("_ma"))
+        # an edge is picked iff it is the minimum at BOTH endpoints,
+        # i.e. its key is the minimum of exactly two vertices
+        picked = (
+            vmin.groupBy("_k")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .where(F.col("_n") == 2)
+            .select("_k", F.lit(rnd).alias("_r"))
+        )
+        gone = vmin.join(picked, "_k", "left_semi")
+        # a live edge that loses an endpoint to a match leaves the state
+        return (
+            state.join(picked, "_k", "left")
             .join(
-                vmin.select(F.col("_v").alias("b"),
-                            F.col("_mk").alias("_mb")), "b"
+                gone.select(F.col("_v").alias("a"), F.lit(1).alias("_ga")),
+                "a",
+                "left",
             )
-            .where(F.col("_k") == F.col("_mb"))
+            .join(
+                gone.select(F.col("_v").alias("b"), F.lit(1).alias("_gb")),
+                "b",
+                "left",
+            )
+            .where(
+                F.col("matched_round").isNotNull()
+                | F.col("_r").isNotNull()
+                | (F.col("_ga").isNull() & F.col("_gb").isNull())
+            )
             .select(
-                "a", "b",
-                F.lit(rnd).cast("int").alias("matched_round"),
+                "a",
+                "b",
+                "_k",
+                F.coalesce("matched_round", "_r").alias("matched_round"),
             )
-            .localCheckpoint(eager=True)
         )
-        out = sel if out is None else out.unionByName(sel)
-        matched = (
-            sel.select(F.col("a").alias("id"))
-            .unionByName(sel.select(F.col("b").alias("id")))
-            .distinct()
-        )
-        live = (
-            live.join(
-                matched.select(F.col("id").alias("a")), "a",
-                "left_anti",
-            )
-            .join(
-                matched.select(F.col("id").alias("b")), "b",
-                "left_anti",
-            )
-            .select("a", "b", "_k")
-            .localCheckpoint(eager=True)
-        )
-    return out.orderBy("a", "b")
+
+    return (
+        _supersteps(edges, step, rounds, "maximal_matching", 1)
+        .where(F.col("matched_round").isNotNull())
+        .select("a", "b", "matched_round")
+        .orderBy("a", "b")
+    )
 
 
 def katz_centrality(

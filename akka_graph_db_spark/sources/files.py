@@ -1,4 +1,4 @@
-"""Text-format interchange: JSONL (and CSV) readers/writers.
+"""File interchange: JSONL and ORC readers/writers.
 
 Parquet is the engine's native storage (store.py); JSONL is the lingua
 franca of LLM training-data interchange — every curation pipeline imports
@@ -38,31 +38,6 @@ def read_jsonl(
     Malformed lines land in ``_corrupt_record``-free PERMISSIVE nulls by
     Spark default; switch to FAILFAST to refuse bad input outright."""
     return spark.read.schema(schema).json(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True):
-    """CSV with quoting/escaping on (embedded newlines survive)."""
-    (
-        df.write.mode("overwrite")
-        .option("header", str(header).lower())
-        .option("quoteAll", "true")
-        .option("escape", '"')
-        .csv(path)
-    )
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: str, header: bool = True
-) -> DataFrame:
-    """CSV with explicit schema; multiLine on so quoted newlines parse."""
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("multiLine", "true")
-        .csv(path)
-    )
 
 
 def write_orc(df: DataFrame, path: str, compression: str = "zlib"):

@@ -510,7 +510,11 @@ def delta_from_graphs(old: PropertyGraph, new: PropertyGraph) -> GraphDelta:
     materialized ONCE (lazy localCheckpoint): the upsert and delete
     frames are separate write actions in :func:`save_delta` (plus
     validation jobs when enabled), and without the barrier every one of
-    them re-ran its side's full O(old+new) diff join.
+    them re-ran its side's full O(old+new) diff join. Under adaptive
+    execution ``localCheckpoint(eager=False)`` still finalizes the
+    adaptive plan inside the call, so each side's shuffle and broadcast
+    stages run HERE, not in :func:`save_delta`; only the final stage
+    that fills the checkpoint blocks waits for the first write.
     """
 
     def _diff(o: DataFrame, n: DataFrame, cols: tuple[str, ...]):
@@ -549,56 +553,6 @@ def delta_from_graphs(old: PropertyGraph, new: PropertyGraph) -> GraphDelta:
     e_up, e_del = _diff(old.edges, new.edges, EDGE_CORE_COLS)
     return GraphDelta(n_up, e_up, n_del, e_del)
 
-
-# ---------------------------------------------------------------------------
-# Bucketed adjacency tables (co-located joins)
-# ---------------------------------------------------------------------------
-
-def save_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: "str | list[str]" = "src",
-    n_buckets: int = 64,
-    sort_cols: "str | list[str] | None" = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a BUCKETED (and optionally sorted) parquet
-    catalog table — the co-location layout for the hot join keys.
-
-    Two tables bucketed the same way join WITHOUT an Exchange on either
-    side, and a groupBy on the bucket columns aggregates without a
-    shuffle: at 100 TB this converts every frontier⋈adjacency and
-    adjacency self-join from a full-data shuffle into a local per-bucket
-    merge (Spark reads matching buckets pairwise). ``sort_cols``
-    additionally pre-sorts rows within each bucket file so sort-merge
-    joins skip their sort.
-
-    OSS Spark only tracks bucketing through the session catalog
-    (``saveAsTable`` — path-based ``parquet(path)`` writes cannot record
-    bucket metadata), so callers address the result by TABLE NAME. With
-    the default in-memory catalog the metadata lives for the session; on
-    a cluster back the catalog with a metastore and the layout is
-    permanent. Pick ``n_buckets`` so one bucket of the largest table
-    fits an executor core's working memory (~shuffle-partition sizing).
-
-    The reference has no physical layout control at all (storage is
-    delegated wholesale, Neo4jGraph.scala:150-154); this is the
-    §1.4/§4 "partition the tables" scale path.
-    """
-    bucket_cols = (
-        [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    )
-    w = (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        sort_cols = (
-            [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        )
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
 
 
 def incremental_label_counts(

@@ -28,30 +28,6 @@ EVENTS_SCHEMA = (
 )
 
 
-def tumbling_counts_stream(
-    events: DataFrame, duration: str = "1 hour", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked tumbling windows: events later than ``watermark`` behind
-    the max seen ts are dropped; closed windows emit finalized rows in
-    append mode."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def dedup_stream(
     events: DataFrame, watermark: str = "10 minutes"
 ) -> DataFrame:

@@ -475,17 +475,6 @@ def test_coreness_matches_kcore_membership(spark):
             r["id"] for r in analytics.kcore(pairs, k=k).collect()
         }
         assert members == {v for v, c in core.items() if c >= k}, k
-    # block-boundary insensitivity: chaining rounds 1-at-a-time vs
-    # 5-at-a-time must land on the identical fixpoint
-    core1 = {
-        r["id"]: r["coreness"]
-        for r in analytics.coreness(pairs, check_every=1).collect()
-    }
-    core5 = {
-        r["id"]: r["coreness"]
-        for r in analytics.coreness(pairs, check_every=5).collect()
-    }
-    assert core1 == core == core5
 
 
 def test_coreness_raises_instead_of_returning_bounds(spark):
@@ -500,7 +489,7 @@ def test_coreness_raises_instead_of_returning_bounds(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "a bigint, b bigint"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        analytics.coreness(pairs, max_iter=1, check_every=1)
+        analytics.coreness(pairs, max_iter=1)
     core = {
         r["id"]: r["coreness"] for r in analytics.coreness(pairs).collect()
     }

@@ -1257,3 +1257,204 @@ def test_frontier_loops_match_python_replay(graph, rounds):
     }
     got_lc = analytics.weighted_landmark_costs(wpairs, src, max_rounds=rounds)
     assert {tuple(r) for r in got_lc.collect()} == want_lc
+
+
+# -- peeling and fixpoint loops == plain-Python replay ------------------------
+
+
+def _md5_hex(s):
+    import hashlib
+
+    return hashlib.md5(s.encode()).hexdigest()
+
+
+def _md5_63(s):
+    """functions.hashing.md5_63: the first 8 digest bytes, little-endian,
+    sign bit masked."""
+    import hashlib
+
+    digest = hashlib.md5(s.encode()).digest()
+    return int.from_bytes(digest[:8], "little") & 0x7FFFFFFFFFFFFFFF
+
+
+def _peel_replays(nodes, nbrs, arcs, k, rounds):
+    """Expected rows of the eight peeling and fixpoint operators. ``nbrs``
+    is the simple undirected graph (no self-loops, no parallel edges),
+    ``arcs`` the directed (a, b) pairs as drawn."""
+    from collections import Counter
+
+    # kcore: peel every vertex below k until the kept set is stable
+    keep = set(nbrs)
+    while True:
+        deg = {v: len(nbrs[v] & keep) for v in keep}
+        kept = {v for v in keep if deg[v] >= k}
+        if kept == keep:
+            break
+        keep = kept
+    want = {"kcore": {(v, deg[v]) for v in keep}}
+
+    # coreness: Batagelj-Zaversnik, remove a minimum-degree vertex
+    deg = {v: len(nbrs[v]) for v in nbrs}
+    left, core, shell = set(nbrs), {}, 0
+    while left:
+        v = min(left, key=lambda u: (deg[u], u))
+        shell = max(shell, deg[v])
+        core[v] = shell
+        left.remove(v)
+        for u in nbrs[v] & left:
+            deg[u] -= 1
+    want["coreness"] = set(core.items())
+
+    # ktruss (k + 1 >= 3): drop edges in fewer than k - 1 triangles
+    edges = {(a, b) for a in nbrs for b in nbrs[a] if a < b}
+    while True:
+        adj = {}
+        for a, b in edges:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        sup = {(a, b): len(adj[a] & adj[b]) for a, b in edges}
+        kept = {e for e in edges if sup[e] >= k - 1}
+        if kept == edges:
+            break
+        edges = kept
+    want["ktruss"] = {(a, b, sup[a, b]) for a, b in edges}
+
+    # transitive_closure: BFS over the directed arcs, paths of >= 1 arc
+    out = {}
+    for a, b in arcs:
+        out.setdefault(a, set()).add(b)
+    closure = set()
+    for u in out:
+        seen, todo = set(), list(out[u])
+        while todo:
+            v = todo.pop()
+            if v not in seen:
+                seen.add(v)
+                todo.extend(out.get(v, ()))
+        closure |= {(u, v) for v in seen}
+    want["transitive_closure"] = closure
+
+    # dag_layers: longest path with every edge oriented a < b
+    layer = {}
+    for v in nodes:  # ascending ids are a topological order
+        preds = [min(a, b) for a, b in arcs if min(a, b) < v == max(a, b)]
+        layer[v] = 1 + max(layer[a] for a in preds) if preds else 0
+    per_layer = Counter(
+        ("odd" if v % 20 else "even", l) for v, l in layer.items()
+    )
+    want["dag_layers"] = {(*key, n) for key, n in per_layer.items()}
+
+    # wl_color_histogram: md5 of own color | sorted neighbor colors
+    color = {v: str(len(nbrs[v])) for v in nbrs}
+    for _ in range(rounds):
+        color = {
+            v: _md5_hex(
+                color[v] + "|" + ",".join(sorted(color[u] for u in nbrs[v]))
+            )
+            for v in nbrs
+        }
+    hist = Counter(color.values())
+    want["wl_color_histogram"] = sorted(
+        hist.items(), key=lambda cn: (-cn[1], cn[0])
+    )[:20]
+
+    # maximal_matching: per round, every live edge whose md5 key is the
+    # minimum at both endpoints; matched endpoints leave the graph
+    live = {(a, b): _md5_hex(f"{a}:{b}") for a, b in
+            ((a, b) for a in nbrs for b in nbrs[a] if a < b)}
+    matched = []
+    for r in range(1, rounds + 1):
+        vmin = {}
+        for (a, b), key in live.items():
+            for v in (a, b):
+                vmin[v] = min(vmin.get(v, key), key)
+        sel = [e for e, key in live.items() if vmin[e[0]] == vmin[e[1]] == key]
+        matched += [(a, b, r) for a, b in sel]
+        gone = {v for e in sel for v in e}
+        live = {e: key for e, key in live.items() if not set(e) & gone}
+    want["maximal_matching"] = sorted(matched)
+
+    # greedy_coloring: Jones-Plassmann on (degree desc, md5_63, id) keys,
+    # each winner takes the smallest color absent around it
+    colors, r = {}, 0
+    while len(colors) < len(nodes):
+        def key(v):
+            return (-len(nbrs.get(v, ())), _md5_63(f"{v}:{r}:color"), v)
+
+        unc = [v for v in nodes if v not in colors]
+        won = [
+            v for v in unc
+            if all(key(v) < key(u) for u in nbrs.get(v, ()) if u not in colors)
+        ]
+        for v in won:
+            used = {colors[u] for u in nbrs.get(v, ()) if u in colors}
+            colors[v] = min(c for c in range(1, r + 3) if c not in used)
+        r += 1
+    want["greedy_coloring"] = set(colors.items())
+    return want
+
+
+# eight operators per example, a few seconds each on 4 cores
+@settings(max_examples=3, deadline=None)
+@given(
+    graph=fixed_round_graph_strategy,
+    k=st.integers(2, 3),
+    rounds=st.integers(1, 4),
+)
+@example(
+    # triangle 10-20-30 with pendant 40, self-loop 50, parallel edges
+    # 50-60 (twice, and once reversed), isolated 70
+    graph=(
+        7,
+        [(1, 2, None), (2, 3, None), (3, 1, None), (3, 4, None),
+         (5, 5, None), (5, 6, None), (5, 6, None), (6, 5, None)],
+        {1},
+        {},
+    ),
+    k=2,
+    rounds=2,
+)
+def test_peel_loops_match_python_replay(graph, k, rounds):
+    """kcore, coreness, ktruss, transitive_closure, dag_layers,
+    wl_color_histogram, maximal_matching and greedy_coloring equal
+    plain-Python replays on random graphs with isolated nodes,
+    self-loops and parallel edges: repeated peeling,
+    Batagelj-Zaversnik, triangle-support peeling, BFS, longest path on
+    the a<b orientation, and hashlib replays of the md5 keys."""
+    from pyspark.sql import functions as F
+
+    from akka_graph_db_spark.operators import analytics
+
+    spark = _SPARK["s"]
+    n, drawn, _, _ = graph
+    nodes = [10 * i for i in range(1, n + 1)]
+    arcs = [(10 * a, 10 * b) for a, b, _ in drawn]
+    pairs = spark.createDataFrame(arcs, "a bigint, b bigint")
+    nbrs = _undirected_neighbours([(a, b, None) for a, b in arcs])
+    want = _peel_replays(nodes, nbrs, arcs, k, rounds)
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    assert rows(analytics.kcore(pairs, k)) == want["kcore"]
+    assert rows(analytics.coreness(pairs)) == want["coreness"]
+    assert rows(analytics.ktruss(pairs, k + 1)) == want["ktruss"]
+    assert rows(analytics.transitive_closure(pairs)) == (
+        want["transitive_closure"]
+    )
+    node_df = spark.createDataFrame(
+        [(v, "odd" if v % 20 else "even") for v in nodes],
+        "id bigint, label string",
+    )
+    dag = pairs.select(
+        F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
+    ).where(F.col("src") < F.col("dst"))
+    assert rows(analytics.dag_layers(node_df, dag)) == want["dag_layers"]
+    wl = analytics.wl_color_histogram(pairs, rounds=rounds)
+    assert [tuple(r) for r in wl.collect()] == want["wl_color_histogram"]
+    mm = analytics.maximal_matching(pairs, rounds=rounds)
+    assert [tuple(r) for r in mm.collect()] == want["maximal_matching"]
+    gc = analytics.greedy_coloring(
+        pairs, node_df.select("id"), max_rounds=len(nodes) + 1
+    )
+    assert rows(gc) == want["greedy_coloring"]

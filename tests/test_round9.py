@@ -419,12 +419,25 @@ def _cached_rdd_ids(spark):
         "hyperanf",
         "weighted_nearest_seed",
         "weighted_landmark_costs",
+        "kcore",
+        "kcore_max_iter_recount",
+        "coreness",
+        "coreness_not_converged",
+        "ktruss",
+        "dag_layers",
+        "dag_layers_cycle",
+        "transitive_closure",
+        "wl_color_histogram",
+        "maximal_matching",
+        "greedy_coloring",
+        "greedy_coloring_overrun",
     ],
 )
 def test_superstep_loops_release_their_caches(spark, call):
     """Every operator on the superstep driver releases what it
     persisted, on every path, including pagerank on an empty graph,
-    which returns before its first round."""
+    which returns before its first round, and the peeling loops that
+    recount or raise once their round budget runs out."""
     from akka_graph_db_spark.model import PropertyGraph
     from akka_graph_db_spark.operators import analytics as an
 
@@ -452,6 +465,10 @@ def test_superstep_loops_release_their_caches(spark, call):
         [(a, b, a + b) for a, b in edges], "a bigint, b bigint, w bigint"
     )
     seeds = spark.createDataFrame([(1, "x")], "id bigint, label string")
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "a bigint, b bigint"
+    )
+    dag = graph(range(1, 6), [(1, 2), (2, 3), (1, 3), (3, 4)])
     runs = {
         "pagerank": lambda: an.pagerank(g, n_iter=4),
         "pagerank_weighted": lambda: an.pagerank(g, n_iter=4, weight="w"),
@@ -478,9 +495,34 @@ def test_superstep_loops_release_their_caches(spark, call):
         "weighted_landmark_costs": lambda: an.weighted_landmark_costs(
             wpairs, [1, 4]
         ),
+        "kcore": lambda: an.kcore(pairs, k=2),
+        "kcore_max_iter_recount": lambda: an.kcore(pairs, k=2, max_iter=1),
+        "coreness": lambda: an.coreness(pairs),
+        "coreness_not_converged": lambda: an.coreness(path, max_iter=1),
+        "ktruss": lambda: an.ktruss(pairs, k=3),
+        "dag_layers": lambda: an.dag_layers(g.nodes, dag.edges),
+        "dag_layers_cycle": lambda: an.dag_layers(
+            g.nodes, g.edges, max_iter=4
+        ),
+        "transitive_closure": lambda: an.transitive_closure(pairs),
+        "wl_color_histogram": lambda: an.wl_color_histogram(pairs),
+        "maximal_matching": lambda: an.maximal_matching(pairs),
+        "greedy_coloring": lambda: an.greedy_coloring(pairs),
+        "greedy_coloring_overrun": lambda: an.greedy_coloring(
+            pairs, max_rounds=1
+        ),
+    }
+    raises = {
+        "coreness_not_converged": RuntimeError,
+        "dag_layers_cycle": ValueError,
+        "greedy_coloring_overrun": RuntimeError,
     }
     before = _cached_rdd_ids(spark)
-    runs[call]().collect()
+    if call in raises:
+        with pytest.raises(raises[call]):
+            runs[call]()
+    else:
+        runs[call]().collect()
     assert _cached_rdd_ids(spark) - before == set()
 
 
@@ -576,6 +618,39 @@ def test_weighted_relaxations_cut_their_lineage(spark):
         one, eight = (op(wpairs, [0, 5], max_rounds=r) for r in (1, 8))
         assert plan_lines(eight) <= 8 * plan_lines(one), op.__name__
         assert eight.count() == 13 * (1 if op is an.weighted_nearest_seed else 2)
+
+
+def test_fixed_round_peels_cut_their_lineage(spark, monkeypatch):
+    """wl_color_histogram and maximal_matching read their state twice
+    per round, so without a lineage cut the analyzed plan of a round
+    doubles every round. The driver's result is always a checkpoint, so
+    the check traces the plan each step returns: round 8's must stay
+    within 8x round 1's."""
+    from akka_graph_db_spark.operators import analytics as an
+
+    pairs = spark.createDataFrame(
+        [(i, (3 * i + 1) % 14) for i in range(14)] + [(0, 7), (2, 9)],
+        "a bigint, b bigint",
+    )
+
+    def plan_lines(df):
+        return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
+
+    drive, plans = an._supersteps, []
+
+    def traced(state, step, *args, **kwargs):
+        def traced_step(s):
+            out = step(s)
+            plans.append(plan_lines(out))
+            return out
+
+        return drive(state, traced_step, *args, **kwargs)
+
+    monkeypatch.setattr(an, "_supersteps", traced)
+    for op in (an.wl_color_histogram, an.maximal_matching):
+        plans.clear()
+        assert op(pairs, rounds=8).count() > 0
+        assert len(plans) == 8 and plans[-1] <= 8 * plans[0], op.__name__
 
 
 def test_bowtie_classes_releases_its_cache(spark):

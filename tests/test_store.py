@@ -152,58 +152,6 @@ def test_delta_contract_enforced(spark, micro):
     assert ids(merged.edges) == ids(micro.edges)
 
 
-def test_bucketed_table_joins_without_exchange(spark, tmp_path):
-    """Two tables bucketed 8 ways on the join key join with NO Exchange
-    in the physical plan (co-located buckets), while the same join over
-    plain parquet shuffles both sides. Broadcast is disabled for the
-    check so the shuffle-free plan is attributable to bucketing alone."""
-    from akka_graph_db_spark import store
-
-    spark.sql(
-        "CREATE DATABASE IF NOT EXISTS bktest "
-        f"LOCATION '{tmp_path}/warehouse'"
-    )
-    edges = spark.range(0, 1000).select(
-        (F.col("id") % 97).alias("src"), F.col("id").alias("dst")
-    )
-    store.save_bucketed(
-        edges, "bktest.adj_a", bucket_cols="src", n_buckets=8,
-        sort_cols="src",
-    )
-    store.save_bucketed(
-        edges, "bktest.adj_b", bucket_cols="src", n_buckets=8,
-        sort_cols="src",
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table("bktest.adj_a")
-        b = spark.table("bktest.adj_b")
-        j = a.join(b, "src")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert j.count() > 0
-
-        # same-key aggregation is exchange-free too
-        agg = a.groupBy("src").count()
-        agg_plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in agg_plan
-        assert agg.count() == 97
-
-        # control: un-bucketed parquet shuffles
-        edges.write.mode("overwrite").parquet(f"{tmp_path}/plain")
-        p = spark.read.parquet(f"{tmp_path}/plain")
-        pj = p.join(p.withColumnRenamed("dst", "d2"), "src")
-        pplan = pj._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in pplan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", old_thresh
-        )
-        spark.sql("DROP TABLE IF EXISTS bktest.adj_a")
-        spark.sql("DROP TABLE IF EXISTS bktest.adj_b")
-        spark.sql("DROP DATABASE IF EXISTS bktest")
-
 
 def test_crashed_writer_versions_are_invisible(spark, micro, tmp_path):
     """Durability contract: a version directory missing its commit

@@ -28,16 +28,6 @@ ROWS = [
 ]
 
 
-def test_streaming_tumbling_with_watermark(spark, tmp_path):
-    stream = _stream_from_rows(spark, ROWS, tmp_path)
-    agg = sw.tumbling_counts_stream(stream, "1 hour", "10 minutes")
-    out = sw.run_to_memory_sink(
-        agg, "tumbled", str(tmp_path / "ck"), output_mode="append"
-    )
-    rows = {str(r["window_start"]): r["n_events"] for r in out.collect()}
-    # hour-0 window closed by the watermark passing 01:10 -> emitted
-    assert rows.get("2024-01-01 00:00:00") == 3
-
 
 def test_streaming_dedup(spark, tmp_path):
     stream = _stream_from_rows(spark, ROWS, tmp_path)
