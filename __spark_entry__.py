@@ -4342,14 +4342,12 @@ def _coorder_pairs(spark, sf_dir):
 def q_hits_top20(spark, sf_dir):
     """HITS hubs & authorities, fixed 8 iterations — top-20 by
     authority, oracled against an unrolled DuckDB CTE chain
-    (_hits_oracle, per-half-step normalization). The engine runs
-    normalize_every=0 (final-only L1): the scalars cancel exactly in
-    the math, the float drift is ~1e-15 relative, and both sides round
-    to 6 decimals before hashing — while the engine halves its join
-    work (each normalizer re-consumed the raw frame; VERDICT r6 #6,
-    16.2s -> ~8s at sf0.1)."""
+    (_hits_oracle, per-half-step normalization). The engine normalizes
+    once per iteration: the scalars cancel exactly in the math, the
+    float drift is ~1e-15 relative, and both sides round to 6 decimals
+    before hashing."""
     g = _g(spark, sf_dir)
-    h = analytics.hits(g, n_iter=8, normalize_every=0)
+    h = analytics.hits(g, n_iter=8)
     return (
         h.orderBy(F.col("authority").desc(), F.col("id"))
         .limit(20)

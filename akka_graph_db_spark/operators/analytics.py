@@ -8,7 +8,10 @@ GraphX-class analytics re-expressed in pure DataFrame form: every iterative
 algorithm is a driver-side superstep loop where each superstep is one
 Catalyst-planned join + aggregation (the Pregel pattern of GraphX's
 aggregateMessages, without the RDD API). The rank, label and frontier
-loops and the peeling family (:func:`kcore`, :func:`coreness`,
+loops (with :func:`khop_neighbors`, which shares the landmark BFS
+:func:`_hop_bfs`, and the forward σ sweep of
+:func:`betweenness_landmarks`), :func:`connected_components_two_phase`,
+:func:`hits` and the peeling family (:func:`kcore`, :func:`coreness`,
 :func:`ktruss`, :func:`dag_layers`, :func:`transitive_closure`,
 :func:`wl_color_histogram`, :func:`maximal_matching`,
 :func:`greedy_coloring`) supply only a ``step`` (and a ``converged``
@@ -281,91 +284,76 @@ def connected_components_two_phase(
     small-star: every neighbor v ≤ u links to m likewise. At the fixpoint
     the edge set is a star forest rooted at component minima.
     Returns (id, component); singletons map to themselves.
+
+    One superstep of :func:`_supersteps` is a large-star round followed
+    by a small-star round over the state, the star edge frame (u, v)
+    with u > v. The step reads its state twice, so every round is
+    checkpointed; the loop stops at the first round that leaves the
+    (count, xor of row hashes) signature of the edge set unchanged.
     """
-    e = (
+
+    def _star(
+        e: DataFrame, keep: Callable[[Column, Column], Column], roots: bool
+    ) -> DataFrame:
+        # link every neighbor v of u that passes keep(v, u) to
+        # m = min(N(u) ∪ {u}); the small star also links u itself
+        und = e.select("u", "v").unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        m = und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        links = (
+            und.join(m, "u")
+            .where(keep(F.col("v"), F.col("u")))
+            .select(F.col("v").alias("u2"), F.col("m").alias("v2"))
+        )
+        if roots:
+            links = links.unionByName(
+                m.select(F.col("u").alias("u2"), F.col("m").alias("v2"))
+            )
+        return (
+            links.where(F.col("u2") != F.col("v2"))
+            .select(
+                F.greatest("u2", "v2").alias("u"),
+                F.least("u2", "v2").alias("v"),
+            )
+            .distinct()
+        )
+
+    def step(e: DataFrame) -> DataFrame:
+        large = _star(e, lambda v, u: v > u, roots=False)
+        return _star(large, lambda v, u: v <= u, roots=True)
+
+    prev_sig = None
+
+    def converged(e: DataFrame) -> bool:
+        nonlocal prev_sig
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))), F.lit(0)
+            ).alias("s"),
+        ).collect()[0]
+        sig = (row["n"], row["s"])
+        same, prev_sig = sig == prev_sig, sig
+        return same
+
+    e = _supersteps(
         pairs.select("a", "b")
         .where(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+        .distinct(),
+        step,
+        max_iter,
+        "connected_components_two_phase",
+        checkpoint_every=1,
+        converged=converged,
     )
-    prev_sig = None
-    try:
-        for it in range(max_iter):
-            # large-star: group by u over undirected neighborhood
-            und = e.select("u", "v").unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            m = und.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            large = (
-                und.join(m, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(
-                    F.col("v").alias("u2"), F.col("m").alias("v2")
-                )
-            )
-            e1 = (
-                large.where(F.col("u2") != F.col("v2"))
-                .select(
-                    F.greatest("u2", "v2").alias("u"),
-                    F.least("u2", "v2").alias("v"),
-                )
-                .distinct()
-            )
-            # small-star on the large-star output
-            und1 = e1.select("u", "v").unionByName(
-                e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            m1 = und1.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            small = (
-                und1.join(m1, "u")
-                .where(F.col("v") <= F.col("u"))
-                .select(F.col("v").alias("u2"), F.col("m").alias("v2"))
-                .unionByName(
-                    m1.select(F.col("u").alias("u2"), F.col("m").alias("v2"))
-                )
-            )
-            e_new = (
-                small.where(F.col("u2") != F.col("v2"))
-                .select(
-                    F.greatest("u2", "v2").alias("u"),
-                    F.least("u2", "v2").alias("v"),
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            sig = e_new.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))), F.lit(0)
-                ).alias("s"),
-            ).collect()[0]
-            sig = (sig["n"], sig["s"])
-            old = e
-            e = e_new.persist(StorageLevel.MEMORY_AND_DISK)
-            old.unpersist()
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-        # star forest: every u points at its component min v
-        comp = e.groupBy(F.col("u").alias("id")).agg(
-            F.min("v").alias("component")
-        )
-        roots_and_singletons = vertices.select("id").join(
-            comp, "id", "left_anti"
-        ).select("id", F.col("id").alias("component"))
-        out = comp.unionByName(roots_and_singletons).localCheckpoint(
-            eager=True
-        )
-        return out
-    finally:
-        e.unpersist()
+    # star forest: every u points at its component min v
+    comp = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
+    roots_and_singletons = vertices.select("id").join(
+        comp, "id", "left_anti"
+    ).select("id", F.col("id").alias("component"))
+    return comp.unionByName(roots_and_singletons).localCheckpoint(eager=True)
 
 
 def _rank_iterate(
@@ -663,57 +651,41 @@ def khop_neighbors(
     feature aggregation: join node features onto ``neighbor`` and
     groupBy ``id``.
 
-    Frontier expansion on the PAIR set: each round joins only the pairs
-    DISCOVERED last round against the edge list, anti-joins the known
-    set, and unions — work is bounded by the output (the reachable-pair
-    count), every shuffle is on node id so rounds reuse the same hash
-    partitioning, and high-degree skew is AQE's standard case. The
-    reachable-pair count is the intrinsic size of the query's answer —
-    at 100 TB, bound it with ``k`` and ``edge_labels`` (or sample
-    neighbors downstream), not by a different algorithm.
+    A multi-source BFS on the PAIR set: :func:`_hop_bfs`, the loop
+    behind :func:`landmark_hop_distances`, with every node a landmark.
+    Its visited frame starts at the distinct non-loop 1-hop pairs, and
+    each of the k − 1 rounds joins only the pairs DISCOVERED last round
+    against the edge list and anti-joins the known set — work is bounded
+    by the output (the reachable-pair count), and high-degree skew is
+    AQE's standard case. The reachable-pair count is the intrinsic size
+    of the query's answer — at 100 TB, bound it with ``k`` and
+    ``edge_labels`` (or sample neighbors downstream), not by a different
+    algorithm.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = _edge_pairs(g, edge_labels, directed).persist(
-        StorageLevel.MEMORY_AND_DISK
+
+    def seed(adj: DataFrame) -> tuple[DataFrame, bool]:
+        # every node is a landmark, so seeds × vertices ≤ vertices²
+        n = adj.select(F.explode(F.array("a", "b"))).distinct().count()
+        visited = (
+            adj.where(F.col("a") != F.col("b"))
+            .select(
+                F.col("a").alias("landmark"),
+                F.col("b").alias("id"),
+                F.lit(1).alias("dist"),
+            )
+            .distinct()
+            .withColumn("_new", F.lit(True))
+        )
+        return visited, n * n <= _CC_BROADCAST_MAX_VERTICES
+
+    reach = _hop_bfs(
+        _edge_pairs(g, edge_labels, directed), seed, k - 1, "khop_neighbors"
     )
-    reach = (
-        e.where(F.col("a") != F.col("b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    return reach.select(
+        F.col("landmark").alias("id"), F.col("id").alias("neighbor")
     )
-    frontier = reach
-    persisted: list[DataFrame] = [reach]
-    try:
-        for _ in range(k - 1):
-            step = (
-                frontier.join(
-                    e.select(
-                        F.col("a").alias("b"), F.col("b").alias("_c")
-                    ),
-                    "b",
-                )
-                .select("a", F.col("_c").alias("b"))
-                .where(F.col("a") != F.col("b"))
-                .distinct()
-            )
-            new = step.join(reach, ["a", "b"], "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            if new.isEmpty():
-                break
-            reach = reach.unionByName(new).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.extend([new, reach])
-            frontier = new
-        return reach.select(
-            F.col("a").alias("id"), F.col("b").alias("neighbor")
-        ).localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-        for df in persisted:
-            df.unpersist()
 
 
 def canonical_undirected(edge_pairs: DataFrame) -> DataFrame:
@@ -1037,38 +1009,29 @@ def hits(
     g: PropertyGraph,
     edge_labels: Sequence[str] | None = None,
     n_iter: int = 8,
-    normalize_every: int = 1,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) with a fixed iteration
-    count and L1 normalization after every half-step — fully
-    deterministic, so an unrolled SQL CTE chain can reproduce it exactly.
+    count and L1-normalized results — fully deterministic, so an
+    unrolled SQL CTE chain can reproduce it exactly.
 
     Returns (id, hub, authority) for every node. Per half-step: one join
-    + one groupBy, both shuffled on node id (the same exchange-reuse
-    shape as :func:`pagerank`); the L1 normalizer is a 1-row aggregate
-    folded back via broadcast cross join — no driver-side collect per
-    iteration. The reference has no analytics at all (SURVEY.md §2.7);
-    this is §2.8 extension surface.
+    + one groupBy over a persisted edge copy; the L1 normalizer is a
+    1-row aggregate folded back via broadcast cross join — no
+    driver-side collect per iteration. The reference has no analytics
+    at all (SURVEY.md §2.7); this is §2.8 extension surface.
 
-    ``normalize_every=k`` normalizes only every k-th ITERATION (plus
-    always once at the end; ``0`` = final-only). L1 scalars commute with
-    the linear half-steps, so the final vectors are mathematically
-    IDENTICAL for any cadence — the divergence is float-rounding at
-    ~1e-15 relative, invisible at the 6-decimal output rounding the
-    certified query uses. The win: the normalizer's 1-row aggregate
-    consumes the raw sum frame a second time, so each normalized
-    half-step computes its join+groupBy TWICE (Catalyst does not reuse
-    the subtree inside one plan) — final-only normalization halves the
-    join work (16.2s -> 9.0s at sf0.1, n_iter=8). Keep the per-half-step
-    default where intermediate magnitudes must stay bounded (e.g.
-    degree^16 overflow on graphs with 10^15+ average degree — not a
-    realistic scale; 8 iterations on a 10^4-avg-degree graph peaks at
-    ~1e64 against double's 1.8e308 ceiling).
+    The state of :func:`_supersteps` is the hub vector: a round
+    L1-normalizes it (as a scale on the first half-step's output) and
+    takes both half-steps (authority, then hub). L1 scalars commute with
+    the linear half-steps, so normalizing once per iteration equals
+    normalizing every half-step up to float rounding (~1e-15 relative)
+    and keeps magnitudes bounded at any ``n_iter``. The normalizer reads
+    the state a second time, so every round is checkpointed and that
+    read is a scan, not the join recomputed. The last iteration runs
+    after the loop, because it also yields the authority vector.
     """
     if n_iter < 1:
         raise ValueError(f"hits() needs n_iter >= 1, got {n_iter}")
-    if normalize_every < 0:
-        raise ValueError(f"normalize_every must be >= 0, got {normalize_every}")
     base_edges = _edge_pairs(g, edge_labels, directed=True)
     npart = g.nodes.sparkSession.sparkContext.defaultParallelism
     # Two persisted copies, each hash-partitioned by the half-step's
@@ -1083,12 +1046,12 @@ def hits(
         StorageLevel.MEMORY_AND_DISK
     )
     nodes = g.nodes.select("id")
-    n_vertices = nodes.count()
-    hub = nodes.select("id", F.lit(1.0).alias("score"))
-    auth = None
-    stale: list[DataFrame] = []
+    small = nodes.count() <= _CC_BROADCAST_MAX_VERTICES
 
-    def _half_raw(state: DataFrame, out_col: str, in_col: str) -> DataFrame:
+    def bc(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if small else df
+
+    def _half(state: DataFrame, out_col: str, in_col: str) -> DataFrame:
         # sum incoming scores over edges. Nodes absent from the support
         # (zero score) contribute nothing to either the sums or the
         # normalizer, so the loop carries ONLY the nonzero support — no
@@ -1098,11 +1061,7 @@ def hits(
         # (same size-gated pattern as the CC harness); at vertex counts
         # past the gate, fall back to the shuffle join.
         edges = edges_by_b if in_col == "b" else edges_by_a
-        st = (
-            F.broadcast(state)
-            if n_vertices <= _CC_BROADCAST_MAX_VERTICES
-            else state
-        )
+        st = bc(state)
         return (
             edges.join(st, edges[out_col] == st["id"], "inner")
             .select(F.col(in_col).alias("id"), "score")
@@ -1110,15 +1069,11 @@ def hits(
             .agg(F.sum("score").alias("score"))
         )
 
-    def _normalize(raw: DataFrame) -> DataFrame:
-        # L1-normalize in-plan: 1-row total folded back via broadcast
-        # cross join, no driver collect. The caller materializes `raw`
-        # first — the total aggregate is a SECOND consumer of the frame
-        # and Catalyst does not reuse the subtree within one plan.
-        total = raw.agg(
-            F.coalesce(F.sum("score"), F.lit(1.0)).alias("_tot")
-        )
-        return raw.crossJoin(F.broadcast(total)).select(
+    def _scaled(v: DataFrame, by: DataFrame) -> DataFrame:
+        # v over the L1 total of `by`, in-plan: the 1-row total is folded
+        # back via broadcast cross join, no driver collect
+        total = by.agg(F.coalesce(F.sum("score"), F.lit(1.0)).alias("_tot"))
+        return v.crossJoin(F.broadcast(total)).select(
             "id",
             (
                 F.col("score")
@@ -1128,51 +1083,38 @@ def hits(
             ).alias("score"),
         )
 
+    def step(hub: DataFrame) -> DataFrame:
+        # scaling the half-step's output by the input's total equals
+        # normalizing the input, and the total and the broadcast of the
+        # input run side by side instead of one after the other
+        return _half(_scaled(_half(hub, "a", "b"), hub), "b", "a")
+
     try:
-        for it in range(n_iter):
-            norm_now = (
-                normalize_every > 0 and (it + 1) % normalize_every == 0
-            )
-            # Materialize on normalization (the frame is consumed twice)
-            # and on the plan-depth cadence; unnormalized half-steps in
-            # between chain LAZILY — one job per checkpoint block
-            # instead of two persisted passes per half-step.
-            cp_now = (
-                norm_now
-                or (it + 1) % _CHECKPOINT_EVERY == 0
-                or it == n_iter - 1
-            )
-            auth = _half_raw(hub, "a", "b")
-            if cp_now:
-                auth = auth.localCheckpoint(eager=True)
-                stale.append(auth)
-            if norm_now:
-                auth = _normalize(auth)
-            hub = _half_raw(auth, "b", "a")
-            if cp_now:
-                hub = hub.localCheckpoint(eager=True)
-                stale.append(hub)
-                # Later iterations only read the newest (auth, hub)
-                # checkpoint pair — release everything older now instead
-                # of holding 2*n_iter O(V) frames until the return (r7
-                # review finding; the finally block frees the last two).
-                for df in stale[:-2]:
-                    df.unpersist()
-                stale = stale[-2:]
-            if norm_now:
-                hub = _normalize(hub)
-        if not (normalize_every > 0 and n_iter % normalize_every == 0):
-            # final L1 normalization (skipped only when the last
-            # iteration already normalized — re-dividing by a 1.0±1e-16
-            # total would perturb the per-step-cadence bit pattern)
-            auth = _normalize(auth)
-            hub = _normalize(hub)
-        out = (
+        hub = _supersteps(
+            nodes.select("id", F.lit(1.0).alias("score")),
+            step,
+            n_iter - 1,
+            "hits",
+            checkpoint_every=1,
+        )
+        auth = _scaled(_half(hub, "a", "b"), hub).localCheckpoint(eager=True)
+        hub = _half(auth, "b", "a").localCheckpoint(eager=True)
+        return (
             nodes.join(
-                hub.select("id", F.col("score").alias("hub")), "id", "left"
+                bc(
+                    _scaled(hub, hub).select(
+                        "id", F.col("score").alias("hub")
+                    )
+                ),
+                "id",
+                "left",
             )
             .join(
-                auth.select("id", F.col("score").alias("authority")),
+                bc(
+                    _scaled(auth, auth).select(
+                        "id", F.col("score").alias("authority")
+                    )
+                ),
                 "id",
                 "left",
             )
@@ -1183,27 +1125,27 @@ def hits(
             )
             .localCheckpoint(eager=True)
         )
-        return out
     finally:
-        # `out` is an eager checkpoint, so every intermediate frame is
-        # safe to release once it exists (or on an error unwind).
         edges_by_b.unpersist()
         edges_by_a.unpersist()
-        for df in stale:
-            df.unpersist()
 
 
-def _persisted_sym(pairs: DataFrame) -> DataFrame:
-    """Both directions (a, b) of the canonical undirected edges,
-    hash-partitioned by ``a`` and persisted: the constant edge frame of
-    the peeling loops, which the caller unpersists. Persist, not
-    checkpoint: the cached relation keeps the hash partitioning visible
-    (a checkpointed scan reports it unknown), so a groupBy on ``a``
-    over joins that broadcast their other side needs no exchange."""
+def _symmetric(pairs: DataFrame) -> DataFrame:
+    """Both directions (a, b) of the canonical undirected edges."""
     e = canonical_undirected(pairs)
+    return e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _persisted_sym(pairs: DataFrame, key: str = "a") -> DataFrame:
+    """:func:`_symmetric` hash-partitioned by ``key`` and persisted: the
+    constant edge frame of the peeling loops and the Brandes sweeps,
+    which the caller unpersists. Persist, not checkpoint: the cached
+    relation keeps the hash partitioning visible (a checkpointed scan
+    reports it unknown), so a groupBy on ``key`` over joins that
+    broadcast their other side needs no exchange."""
     return (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism, "a")
+        _symmetric(pairs)
+        .repartition(pairs.sparkSession.sparkContext.defaultParallelism, key)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -2788,89 +2730,114 @@ def landmark_hop_distances(
 
     Scale shape: one BFS frontier per landmark advances CONCURRENTLY in
     the same superstep join (state rows are (landmark, node) pairs, so k
-    landmarks cost one k×-wider frontier, not k sequential BFS runs).
-    The adjacency is hash-partitioned by the REACHED endpoint once and
-    persisted; with the (landmark, node) frontier/visited frames
-    broadcast behind a k·|V| size gate, each step's expansion join,
-    per-layer distinct, and visited anti-join all run WITHOUT an
-    exchange (HashPartitioning on the reached node is a subset of every
-    grouping/join key set). Past the gate, the joins fall back to
-    shuffles. Rounds run on :func:`_supersteps` (every third one
-    checkpointed); the frontier is the ``_new`` flag of the one visited
-    frame, and the loop stops at the first round whose count of new rows
-    is 0. Keep k modest (its purpose is sampling, not all-pairs).
+    landmarks cost one k×-wider frontier, not k sequential BFS runs);
+    the loop is :func:`_hop_bfs`, seeded with the landmarks at dist 0.
+    Keep k modest (its purpose is sampling, not all-pairs).
     """
-    e = canonical_undirected(pairs)
-    npart = pairs.sparkSession.sparkContext.defaultParallelism
-    sym = (
-        e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+
+    def seed(sym: DataFrame) -> tuple[DataFrame, bool]:
+        ids, small = _landmark_seeds(sym, landmarks)
+        return (
+            ids.select(
+                F.col("a").alias("landmark"),
+                F.col("a").alias("id"),
+                F.lit(0).alias("dist"),
+                F.lit(True).alias("_new"),
+            ),
+            small,
         )
-        .repartition(npart, F.col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    return _hop_bfs(
+        _symmetric(pairs), seed, max_depth, "landmark_hop_distances"
+    ).drop("_new")
+
+
+def _landmark_seeds(
+    sym: DataFrame, landmarks: int | Sequence[int]
+) -> tuple[DataFrame, bool]:
+    """The landmark ids (a) of a sampled sweep over the symmetric edge
+    frame ``sym`` — an explicit sequence, or an int k meaning the k
+    lowest ids that have an edge — and whether landmarks × vertices is
+    under the broadcast gate. The vertex count is this helper's one job;
+    on a persisted ``sym`` it also fills the cache."""
+    n_vertices = sym.select("a").distinct().count()
+    if isinstance(landmarks, int):
+        ids = sym.select("a").distinct().orderBy("a").limit(landmarks)
+        n_land = landmarks
+    else:
+        ids = sym.sparkSession.createDataFrame(
+            [(int(x),) for x in landmarks], "a bigint"
+        )
+        n_land = len(landmarks)
+    return ids, n_land * n_vertices <= _CC_BROADCAST_MAX_VERTICES
+
+
+def _hop_bfs(
+    adj: DataFrame,
+    seed: Callable[[DataFrame], tuple[DataFrame, bool]],
+    n_rounds: int,
+    label: str,
+) -> DataFrame:
+    """Multi-source BFS over the (a, b) adjacency ``adj``, the loop of
+    :func:`landmark_hop_distances` and :func:`khop_neighbors`.
+    ``seed(adj)`` gets the persisted adjacency and returns the initial
+    visited frame (landmark, id, dist, _new) and whether it may be
+    broadcast (landmarks × vertices under the gate). Each round expands
+    the ``_new`` rows by one hop at their ``dist + 1``, drops rows that
+    reach their own landmark or are already visited, and unions the rest
+    as the next ``_new`` rows; the loop stops after ``n_rounds`` rounds
+    or at the first round with no new row. Returns the visited frame, a
+    checkpoint.
+
+    The adjacency is hash-partitioned by the REACHED endpoint ``b`` once
+    and persisted (released on exit); with the visited frames broadcast,
+    each round's expansion join, per-layer distinct and visited anti-join
+    all run WITHOUT an exchange (HashPartitioning on the reached node is
+    a subset of every grouping/join key set). Past the gate, the joins
+    fall back to shuffles. The step reads its state three times, so
+    every round is checkpointed."""
+    npart = adj.sparkSession.sparkContext.defaultParallelism
+    adj = adj.repartition(npart, F.col("b")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     try:
-        n_vertices = sym.select("a").distinct().count()
-        if isinstance(landmarks, int):
-            seed_ids = (
-                sym.select("a").distinct().orderBy("a").limit(landmarks)
-            )
-            n_land = landmarks
-        else:
-            seed_ids = sym.sparkSession.createDataFrame(
-                [(int(x),) for x in landmarks], "a bigint"
-            )
-            n_land = len(landmarks)
-        small = n_land * n_vertices <= _CC_BROADCAST_MAX_VERTICES
+        visited, small = seed(adj)
 
         def bc(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
 
-        depth = 0
-
         def step(visited: DataFrame) -> DataFrame:
-            nonlocal depth
-            depth += 1
+            frontier = visited.where(F.col("_new")).select(
+                "landmark", F.col("id").alias("a"), "dist"
+            )
             nxt = (
-                sym.join(
-                    bc(
-                        visited.where(F.col("_new")).select(
-                            "landmark", F.col("id").alias("a")
-                        )
-                    ),
-                    "a",
+                adj.join(bc(frontier), "a")
+                .where(F.col("b") != F.col("landmark"))
+                .select(
+                    "landmark",
+                    F.col("b").alias("id"),
+                    (F.col("dist") + 1).alias("dist"),
                 )
-                .select("landmark", F.col("b").alias("id"))
                 .distinct()
                 .join(
                     bc(visited.select("landmark", "id")),
                     ["landmark", "id"],
                     "left_anti",
                 )
-                .select(
-                    "landmark",
-                    "id",
-                    F.lit(depth).alias("dist"),
-                    F.lit(True).alias("_new"),
-                )
+                .withColumn("_new", F.lit(True))
             )
             return visited.withColumn("_new", F.lit(False)).unionByName(nxt)
 
-        visited = seed_ids.select(
-            F.col("a").alias("landmark"),
-            F.col("a").alias("id"),
-            F.lit(0).alias("dist"),
-            F.lit(True).alias("_new"),
-        ).localCheckpoint(eager=True)
         return _supersteps(
-            visited,
+            visited.localCheckpoint(eager=True),
             step,
-            max_depth,
-            "landmark_hop_distances",
+            n_rounds,
+            label,
+            checkpoint_every=1,
             converged=lambda st: st.where(F.col("_new")).count() == 0,
-        ).drop("_new")
+        )
     finally:
-        sym.unpersist()
+        adj.unpersist()
 
 
 def betweenness_landmarks(
@@ -2904,6 +2871,15 @@ def betweenness_landmarks(
     fall back to shuffles — the still-correct big-graph path. Returns
     (id, betweenness) for every node with a nonzero score.
 
+    The forward sweep runs on :func:`_supersteps`: its state is every
+    layer so far, (s, id, sig, dist, _new), checkpointed each round (the
+    step reads it three times), and it stops at the first round with no
+    new row. It stays apart from :func:`_hop_bfs` because σ is a
+    ``sum`` of longs, which throws on overflow in ANSI mode; hop
+    distances must not pick up that failure. The backward sweep reads
+    layer d as the rows with ``dist == d``; its length is known, so it
+    is a plain loop.
+
     ``level="edge"`` returns Girvan-Newman EDGE betweenness instead:
     the per-DAG-edge dependency σv/σw · (1 + δ(w)) — the exact term the
     backward sweep already forms before its per-node aggregation — is
@@ -2915,79 +2891,75 @@ def betweenness_landmarks(
     """
     if level not in ("node", "edge"):
         raise ValueError("level must be 'node' or 'edge'")
-    e = canonical_undirected(pairs)
-    npart = pairs.sparkSession.sparkContext.defaultParallelism
-    base_sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    sym_b = (
-        base_sym.repartition(npart, F.col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym_a = (
-        base_sym.repartition(npart, F.col("a"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    persisted: list[DataFrame] = [sym_a, sym_b]
+    sym_b = _persisted_sym(pairs, "b")
+    sym_a = _persisted_sym(pairs, "a")
     try:
-        n_vertices = sym_a.select("a").distinct().count()
-        if isinstance(landmarks, int):
-            seed_ids = (
-                sym_a.select("a").distinct().orderBy("a").limit(landmarks)
-            )
-            n_land = landmarks
-        else:
-            seed_ids = sym_a.sparkSession.createDataFrame(
-                [(int(x),) for x in landmarks], "a bigint"
-            )
-            n_land = len(landmarks)
-        small = n_land * n_vertices <= _CC_BROADCAST_MAX_VERTICES
+        seed_ids, small = _landmark_seeds(sym_a, landmarks)
 
         def bc(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
 
-        l0 = seed_ids.select(
-            F.col("a").alias("s"),
-            F.col("a").alias("id"),
-            F.lit(1).cast("long").alias("sig"),
-        ).localCheckpoint(eager=True)
-        layers = [l0]
-        visited = l0.select("s", "id").persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(visited)
-        for _d in range(1, max_depth + 1):
+        def forward(st: DataFrame) -> DataFrame:
+            # the next BFS layer: σ summed over the last layer's edges
+            # into every node no earlier layer reached
             nxt = (
                 sym_b.join(
                     bc(
-                        layers[-1].select(
-                            "s", F.col("id").alias("a"), "sig"
+                        st.where(F.col("_new")).select(
+                            "s", F.col("id").alias("a"), "sig", "dist"
                         )
                     ),
                     "a",
                 )
-                .select("s", F.col("b").alias("id"), "sig")
-                .join(bc(visited), ["s", "id"], "left_anti")
-                .groupBy("s", "id")
+                .select(
+                    "s",
+                    F.col("b").alias("id"),
+                    "sig",
+                    (F.col("dist") + 1).alias("dist"),
+                )
+                .join(bc(st.select("s", "id")), ["s", "id"], "left_anti")
+                .groupBy("s", "id", "dist")
                 .agg(F.sum("sig").alias("sig"))
-                .localCheckpoint(eager=True)
+                .withColumn("_new", F.lit(True))
             )
-            if nxt.isEmpty():
-                break
-            layers.append(nxt)
-            visited = visited.unionByName(nxt.select("s", "id")).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.append(visited)
+            return st.withColumn("_new", F.lit(False)).unionByName(nxt)
+
+        depth = 0
+
+        def converged(st: DataFrame) -> bool:
+            nonlocal depth
+            if st.where(F.col("_new")).count() == 0:
+                return True
+            depth += 1
+            return False
+
+        layers = _supersteps(
+            seed_ids.select(
+                F.col("a").alias("s"),
+                F.col("a").alias("id"),
+                F.lit(1).cast("long").alias("sig"),
+                F.lit(0).alias("dist"),
+                F.lit(True).alias("_new"),
+            ).localCheckpoint(eager=True),
+            forward,
+            max_depth,
+            "betweenness_landmarks",
+            checkpoint_every=1,
+            converged=converged,
+        )
+
+        def layer(d: int) -> DataFrame:
+            return layers.where(F.col("dist") == d)
+
         # backward dependency sweep over the BFS DAG, deepest layer first
         delta_parts: list[DataFrame] = []
         edge_parts: list[DataFrame] = []
-        delta_cur = layers[-1].select(
-            "s", "id", F.lit(0.0).alias("delta")
-        )
-        for d in range(len(layers) - 1, 0, -1):
+        delta_cur = layer(depth).select("s", "id", F.lit(0.0).alias("delta"))
+        for d in range(depth, 0, -1):
             pe = (
                 sym_a.join(
                     bc(
-                        layers[d - 1].select(
+                        layer(d - 1).select(
                             "s",
                             F.col("id").alias("a"),
                             F.col("sig").alias("_sv"),
@@ -3000,11 +2972,7 @@ def betweenness_landmarks(
                     F.col("b").alias("id"),
                 )
                 .join(
-                    bc(
-                        layers[d].select(
-                            "s", "id", F.col("sig").alias("_sw")
-                        )
-                    ),
+                    bc(layer(d).select("s", "id", F.col("sig").alias("_sw"))),
                     ["s", "id"],
                     "inner",
                 )
@@ -3040,7 +3008,7 @@ def betweenness_landmarks(
             delta_cur = delta_prev
         if level == "edge":
             if not edge_parts:
-                return l0.limit(0).select(
+                return layers.limit(0).select(
                     F.col("id").alias("a"),
                     F.col("id").alias("b"),
                     F.lit(0.0).alias("edge_betweenness"),
@@ -3057,7 +3025,7 @@ def betweenness_landmarks(
                 .localCheckpoint(eager=True)
             )
         if not delta_parts:
-            return l0.select("id").limit(0).select(
+            return layers.select("id").limit(0).select(
                 "id", F.lit(0.0).alias("betweenness")
             )
         all_d = delta_parts[0]
@@ -3070,8 +3038,8 @@ def betweenness_landmarks(
             .localCheckpoint(eager=True)
         )
     finally:
-        for df in persisted:
-            df.unpersist()
+        sym_a.unpersist()
+        sym_b.unpersist()
 
 
 def greedy_coloring(

@@ -38,7 +38,7 @@ from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from akka_graph_db_spark.model import (
@@ -495,6 +495,31 @@ def vacuum(root: str, spark: SparkSession | None = None) -> list[int]:
     return removed
 
 
+def _diff_join(
+    o: DataFrame, n: DataFrame, cols: tuple[str, ...]
+) -> tuple[DataFrame, Column]:
+    """Full-outer join of one side (nodes or edges) of two graph
+    versions on id, every column prefixed ``o_``/``n_`` and props
+    carried as the sorted entry array ``_pk`` (map columns have no
+    equality in Spark expressions), plus the predicate "some compared
+    field differs"."""
+    cmp_cols = [c for c in cols if c not in ("id", "props")] + ["_pk"]
+
+    def _pref(df: DataFrame, p: str) -> DataFrame:
+        sel = [F.col(c).alias(f"{p}{c}") for c in cols]
+        sel.append(F.sort_array(F.map_entries("props")).alias(f"{p}_pk"))
+        return df.select(*sel)
+
+    j = _pref(o, "o_").join(
+        _pref(n, "n_"), F.col("o_id") == F.col("n_id"), "full_outer"
+    )
+    changed = reduce(
+        lambda a, b: a | b,
+        [~F.col(f"o_{c}").eqNullSafe(F.col(f"n_{c}")) for c in cmp_cols],
+    )
+    return j, changed
+
+
 def delta_from_graphs(old: PropertyGraph, new: PropertyGraph) -> GraphDelta:
     """Diff two snapshots into the delta transforming ``old`` into ``new``.
 
@@ -518,25 +543,7 @@ def delta_from_graphs(old: PropertyGraph, new: PropertyGraph) -> GraphDelta:
     """
 
     def _diff(o: DataFrame, n: DataFrame, cols: tuple[str, ...]):
-        cmp_cols = [c for c in cols if c not in ("id", "props")] + ["_pk"]
-
-        def _pref(df: DataFrame, p: str) -> DataFrame:
-            sel = [F.col(c).alias(f"{p}{c}") for c in cols]
-            sel.append(
-                F.sort_array(F.map_entries("props")).alias(f"{p}_pk")
-            )
-            return df.select(*sel)
-
-        j = _pref(o, "o_").join(
-            _pref(n, "n_"), F.col("o_id") == F.col("n_id"), "full_outer"
-        )
-        changed = reduce(
-            lambda a, b: a | b,
-            [
-                ~F.col(f"o_{c}").eqNullSafe(F.col(f"n_{c}"))
-                for c in cmp_cols
-            ],
-        )
+        j, changed = _diff_join(o, n, cols)
         # upserts ∪ deletes — everything any consumer reads; O(changes)
         touched = j.where(
             F.col("o_id").isNull() | F.col("n_id").isNull() | changed
@@ -1093,33 +1100,13 @@ def _version_diff_joined(
 ) -> DataFrame:
     """General any-to-any :func:`version_diff`: load both versions
     merge-on-read and full-outer join per side on id."""
-    from functools import reduce
-
     from akka_graph_db_spark.model import EDGE_CORE_COLS, NODE_CORE_COLS
 
     old = load_snapshot(spark, root, version=v_old).core()
     new = load_snapshot(spark, root, version=v_new).core()
 
     def _d(o: DataFrame, n: DataFrame, cols, kind: str) -> DataFrame:
-        cmp_cols = [c for c in cols if c not in ("id", "props")] + ["_pk"]
-
-        def _pref(df: DataFrame, p: str) -> DataFrame:
-            sel = [F.col(c).alias(f"{p}{c}") for c in cols]
-            sel.append(
-                F.sort_array(F.map_entries("props")).alias(f"{p}_pk")
-            )
-            return df.select(*sel)
-
-        j = _pref(o, "o_").join(
-            _pref(n, "n_"), F.col("o_id") == F.col("n_id"), "full_outer"
-        )
-        changed = reduce(
-            lambda a, b: a | b,
-            [
-                ~F.col(f"o_{c}").eqNullSafe(F.col(f"n_{c}"))
-                for c in cmp_cols
-            ],
-        )
+        j, changed = _diff_join(o, n, cols)
         change = (
             F.when(F.col("o_id").isNull(), F.lit("added"))
             .when(F.col("n_id").isNull(), F.lit("removed"))

@@ -1259,6 +1259,156 @@ def test_frontier_loops_match_python_replay(graph, rounds):
     assert {tuple(r) for r in got_lc.collect()} == want_lc
 
 
+def _bfs_layers(nbrs, s, max_depth):
+    """Hop layers of a BFS from ``s`` over ``nbrs``, at most
+    ``max_depth`` hops: layer d holds the nodes first reached at d."""
+    layers, seen = [[s]], {s}
+    while len(layers) <= max_depth:
+        nxt = sorted({w for v in layers[-1] for w in nbrs.get(v, ())} - seen)
+        if not nxt:
+            break
+        layers.append(nxt)
+        seen.update(nxt)
+    return layers
+
+
+def _brandes_replay(nbrs, landmarks, max_depth):
+    """Bounded Brandes from each landmark: per-node betweenness (nodes
+    with a positive score) and per-canonical-edge dependency sums."""
+    node, edge = {}, {}
+    for s in landmarks:
+        layers = _bfs_layers(nbrs, s, max_depth)
+        sigma = {s: 1}
+        for d in range(1, len(layers)):
+            for w in layers[d]:
+                sigma[w] = sum(sigma[v] for v in layers[d - 1] if w in nbrs[v])
+        delta = dict.fromkeys(sigma, 0.0)
+        for d in range(len(layers) - 1, 0, -1):
+            for w in layers[d]:
+                for v in layers[d - 1]:
+                    if w in nbrs[v]:
+                        c = sigma[v] / sigma[w] * (1.0 + delta[w])
+                        delta[v] += c
+                        key = (min(v, w), max(v, w))
+                        edge[key] = edge.get(key, 0.0) + c
+        for v, x in delta.items():
+            if v != s and x > 0:
+                node[v] = node.get(v, 0.0) + x
+    return node, edge
+
+
+def _hits_replay(nodes, arcs, n_iter):
+    """Kleinberg's iteration with L1 normalization after every
+    half-step; a zero total leaves the vector unscaled."""
+
+    def l1(x):
+        tot = sum(x.values()) or 1.0
+        return {v: s / tot for v, s in x.items()}
+
+    hub = dict.fromkeys(nodes, 1.0)
+    for _ in range(n_iter):
+        auth = dict.fromkeys(nodes, 0.0)
+        for a, b in arcs:
+            auth[b] += hub[a]
+        auth = l1(auth)
+        hub = dict.fromkeys(nodes, 0.0)
+        for a, b in arcs:
+            hub[a] += auth[b]
+        hub = l1(hub)
+    return hub, auth
+
+
+@settings(max_examples=3, deadline=None)
+@given(
+    graph=fixed_round_graph_strategy,
+    k=st.integers(1, 4),
+    n_iter=st.integers(1, 4),
+)
+@example(
+    # a 4-cycle 10-20-30-40 (two shortest paths 10 -> 30), a pendant 50,
+    # a self-loop 60, parallel 20->30 and 30->20, isolated 70
+    graph=(
+        7,
+        [(1, 2, None), (2, 3, None), (3, 4, None), (4, 1, None),
+         (4, 5, None), (6, 6, None), (2, 3, None), (3, 2, None)],
+        {1, 3},
+        {},
+    ),
+    k=3,
+    n_iter=3,
+)
+def test_last_frontier_loops_match_python_replay(graph, k, n_iter):
+    """khop_neighbors (directed and undirected), betweenness_landmarks
+    (node and edge level), connected_components_two_phase and hits
+    equal plain-Python replays on random graphs with isolated nodes,
+    self-loops and parallel edges: a k-hop BFS, a bounded Brandes, a
+    union-find and Kleinberg's power iteration (floats to 1e-9
+    relative, the rest exactly)."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from akka_graph_db_spark.operators import analytics
+
+    spark = _SPARK["s"]
+    n, drawn, sources, _ = graph
+    nodes = [10 * i for i in range(1, n + 1)]
+    arcs = [(10 * a, 10 * b) for a, b, _ in drawn]
+    g = PropertyGraph(
+        nodes=spark.createDataFrame(
+            [(v, "n", {}) for v in nodes],
+            "id bigint, label string, props map<string,string>",
+        ),
+        edges=spark.createDataFrame(
+            [(i, "e", a, b, {}) for i, (a, b) in enumerate(arcs)],
+            "id bigint, label string, src bigint, dst bigint,"
+            " props map<string,string>",
+        ),
+    )
+    pairs = g.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+
+    def close(got, want):
+        assert got.keys() == want.keys()
+        for key, x in want.items():
+            assert math.isclose(got[key], x, rel_tol=1e-9), (key, got[key], x)
+
+    for directed in (True, False):
+        out = {}
+        for a, b in arcs + ([] if directed else [(b, a) for a, b in arcs]):
+            out.setdefault(a, set()).add(b)
+        want = {
+            (u, v)
+            for u in out
+            for layer in _bfs_layers(out, u, k)[1:]
+            for v in layer
+        }
+        got = analytics.khop_neighbors(g, k, directed=directed)
+        assert {tuple(r) for r in got.collect()} == want, directed
+
+    # int landmarks: the len(sources) lowest ids with a non-loop edge
+    nbrs = _undirected_neighbours([(a, b, None) for a, b in arcs])
+    landmarks = sorted(nbrs)[: len(sources)]
+    want_node, want_edge = _brandes_replay(nbrs, landmarks, k)
+    bn = analytics.betweenness_landmarks(pairs, len(sources), max_depth=k)
+    close({r.id: r.betweenness for r in bn.collect()}, want_node)
+    be = analytics.betweenness_landmarks(
+        pairs, len(sources), max_depth=k, level="edge"
+    )
+    close({(r.a, r.b): r.edge_betweenness for r in be.collect()}, want_edge)
+
+    comp = analytics.connected_components_two_phase(
+        g.nodes.select("id"), pairs
+    )
+    assert {r.id: r.component for r in comp.collect()} == (
+        _union_find_components(nodes, [(a, b, None) for a, b in arcs])
+    )
+
+    hub, auth = _hits_replay(nodes, arcs, n_iter)
+    got = analytics.hits(g, n_iter=n_iter).collect()
+    close({r.id: r.hub for r in got}, hub)
+    close({r.id: r.authority for r in got}, auth)
+
+
 # -- peeling and fixpoint loops == plain-Python replay ------------------------
 
 

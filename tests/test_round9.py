@@ -431,13 +431,21 @@ def _cached_rdd_ids(spark):
         "maximal_matching",
         "greedy_coloring",
         "greedy_coloring_overrun",
+        "khop_neighbors",
+        "khop_neighbors_past_depth",
+        "betweenness_landmarks",
+        "edge_betweenness_landmarks",
+        "connected_components_two_phase",
+        "hits",
+        "hits_one_iteration",
     ],
 )
 def test_superstep_loops_release_their_caches(spark, call):
     """Every operator on the superstep driver releases what it
     persisted, on every path, including pagerank on an empty graph,
-    which returns before its first round, and the peeling loops that
-    recount or raise once their round budget runs out."""
+    which returns before its first round, the peeling loops that
+    recount or raise once their round budget runs out, a k-hop BFS
+    that runs out of frontier before k, and hits with no loop round."""
     from akka_graph_db_spark.model import PropertyGraph
     from akka_graph_db_spark.operators import analytics as an
 
@@ -469,6 +477,9 @@ def test_superstep_loops_release_their_caches(spark, call):
         [(i, i + 1) for i in range(1, 6)], "a bigint, b bigint"
     )
     dag = graph(range(1, 6), [(1, 2), (2, 3), (1, 3), (3, 4)])
+    path40 = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "a bigint, b bigint"
+    )
     runs = {
         "pagerank": lambda: an.pagerank(g, n_iter=4),
         "pagerank_weighted": lambda: an.pagerank(g, n_iter=4, weight="w"),
@@ -511,6 +522,19 @@ def test_superstep_loops_release_their_caches(spark, call):
         "greedy_coloring_overrun": lambda: an.greedy_coloring(
             pairs, max_rounds=1
         ),
+        "khop_neighbors": lambda: an.khop_neighbors(g, 2),
+        "khop_neighbors_past_depth": lambda: an.khop_neighbors(g, 9),
+        "betweenness_landmarks": lambda: an.betweenness_landmarks(pairs, 2),
+        "edge_betweenness_landmarks": lambda: an.betweenness_landmarks(
+            pairs, 2, level="edge"
+        ),
+        "connected_components_two_phase": lambda: (
+            an.connected_components_two_phase(
+                spark.range(1, 41), path40
+            )
+        ),
+        "hits": lambda: an.hits(g, n_iter=3),
+        "hits_one_iteration": lambda: an.hits(g, n_iter=1),
     }
     raises = {
         "coreness_not_converged": RuntimeError,
@@ -651,6 +675,58 @@ def test_fixed_round_peels_cut_their_lineage(spark, monkeypatch):
         plans.clear()
         assert op(pairs, rounds=8).count() > 0
         assert len(plans) == 8 and plans[-1] <= 8 * plans[0], op.__name__
+
+
+def test_khop_neighbors_cuts_its_lineage(spark, monkeypatch):
+    """k-hop BFS rounds read their state three times (frontier, visited
+    anti-join, union), so without a lineage cut the plan of round r
+    grows as 3^r: on a 40-node path, k = 6 took about 20 s and k = 8
+    ran out of a 2 GB driver heap when the loop kept its own persisted
+    unions. At k = 8 the answer equals a Python BFS and the last
+    round's plan stays within 8x round 1's."""
+    from akka_graph_db_spark.model import PropertyGraph
+    from akka_graph_db_spark.operators import analytics as an
+
+    arcs = [(i, i + 1) for i in range(1, 40)] + [(40, 40), (7, 3)]
+    g = PropertyGraph(
+        nodes=spark.createDataFrame(
+            [(i, "n", {}) for i in range(1, 41)],
+            "id bigint, label string, props map<string,string>",
+        ),
+        edges=spark.createDataFrame(
+            [(k, "e", a, b, {}) for k, (a, b) in enumerate(arcs)],
+            "id bigint, label string, src bigint, dst bigint,"
+            " props map<string,string>",
+        ),
+    )
+    out = {}
+    for a, b in arcs:
+        out.setdefault(a, set()).add(b)
+    want = set()
+    for u in out:
+        seen, layer = {u}, {u}
+        for _ in range(8):
+            layer = {w for v in layer for w in out.get(v, ())} - seen
+            seen |= layer
+        want |= {(u, v) for v in seen - {u}}
+
+    def plan_lines(df):
+        return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
+
+    drive, plans = an._supersteps, []
+
+    def traced(state, step, *args, **kwargs):
+        def traced_step(s):
+            out = step(s)
+            plans.append(plan_lines(out))
+            return out
+
+        return drive(state, traced_step, *args, **kwargs)
+
+    monkeypatch.setattr(an, "_supersteps", traced)
+    got = an.khop_neighbors(g, 8)
+    assert {tuple(r) for r in got.collect()} == want
+    assert len(plans) == 7 and plans[-1] <= 8 * plans[0]
 
 
 def test_bowtie_classes_releases_its_cache(spark):
