@@ -6677,7 +6677,11 @@ def q_ra_link_prediction(spark, sf_dir):
     in exact integer parts-per-million so the ranking is
     partition-order-independent. Same max_degree=100 wedge cap as the
     Jaccard entry (dropped hub centers are exactly the terms RA
-    discounts to ~0); top-20 by (ra_ppm desc, common desc, a, b)."""
+    discounts to ~0); top-20 by (ra_ppm desc, common desc, a, b). Both
+    entries share one common-neighbour substrate: below the 10M-edge
+    gate the broadcast-CSR scorer inside mapInArrow sums each pair's
+    centre weights with no wedge exchange
+    (analytics._lp_intersect_scored), past it one wedge join."""
     return analytics.link_prediction_resource_allocation(
         _coorder_pairs(spark, sf_dir),
         top_k=20,

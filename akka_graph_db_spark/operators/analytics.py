@@ -707,9 +707,10 @@ def _degree_oriented(e: DataFrame) -> DataFrame:
     the wedge join is bounded by O(m^1.5) regardless of degree skew (a hub
     with d spokes contributes 0 wedges instead of d·(d-1)/2).
 
-    Returns (src, dst, sdeg, ddeg) where rank(src) < rank(dst); the deg
-    columns ride along so downstream wedge joins can compare ranks without
-    re-joining degrees.
+    Returns the oriented edges (src, dst), rank(src) < rank(dst), as an
+    eager local checkpoint: every consumer reads the frame more than
+    once, so the degree aggregation and the two orientation joins run
+    exactly once per call.
     """
     deg = (
         e.select(F.col("a").alias("id"))
@@ -735,17 +736,16 @@ def _degree_oriented(e: DataFrame) -> DataFrame:
     return eab.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, F.col("da")).otherwise(F.col("db")).alias("sdeg"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddeg"),
-    )
+    ).localCheckpoint(eager=True)
 
 
-def _oriented_triangles(e: DataFrame) -> DataFrame:
-    """All triangles of a canonical (a<b) edge frame as one row (x, y, z)
-    each, via the edge-iterator algorithm on the degree-oriented graph:
-    for every oriented edge (x, y), the triangles through it are the
-    common ORIENTED out-neighbors z ∈ N+(x) ∩ N+(y); each triangle
-    surfaces exactly once, at its lowest-rank corner x.
+def _oriented_triangles(o: DataFrame) -> DataFrame:
+    """All triangles of a degree-oriented edge frame ``o`` (src, dst),
+    as returned by :func:`_degree_oriented`, as one row (x, y, z) each,
+    via the edge-iterator algorithm: for every oriented edge (x, y), the
+    triangles through it are the common ORIENTED out-neighbors
+    z ∈ N+(x) ∩ N+(y); each triangle surfaces exactly once, at its
+    lowest-rank corner x.
 
     Versus the classic wedge self-join (the round-4 implementation):
     that plan MATERIALIZES every wedge — ~75M shuffled/broadcast-probed
@@ -765,7 +765,6 @@ def _oriented_triangles(e: DataFrame) -> DataFrame:
     the same size gate as link prediction; past it, shuffle joins with
     exchange reuse are the fallback.
     """
-    o = _degree_oriented(e).select("src", "dst").localCheckpoint(eager=True)
     n_edges = o.count()  # checkpoint already materialized — cheap
     adj = o.groupBy("src").agg(F.collect_list("dst").alias("_nbrs"))
     adj_u = adj.select(F.col("src"), F.col("_nbrs").alias("_nu"))
@@ -804,7 +803,7 @@ def triangle_count(
     e = canonical_undirected(edge_pairs).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return (
-            _oriented_triangles(e)
+            _oriented_triangles(_degree_oriented(e))
             .agg(F.count(F.lit(1)).alias("n_triangles"))
             .localCheckpoint(eager=True)
         )
@@ -816,7 +815,7 @@ def node_triangle_counts(edge_pairs: DataFrame) -> DataFrame:
     """Per-node triangle participation counts (id, n_triangles)."""
     e = canonical_undirected(edge_pairs).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        tri = _oriented_triangles(e)
+        tri = _oriented_triangles(_degree_oriented(e))
         per_node = (
             tri.select(F.col("x").alias("id"))
             .unionByName(tri.select(F.col("y").alias("id")))
@@ -1543,7 +1542,7 @@ def ktruss(pairs: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     counts = [e.count()]
 
     def step(surv: DataFrame) -> DataFrame:
-        tri = _oriented_triangles(surv.select("a", "b"))
+        tri = _oriented_triangles(_degree_oriented(surv.select("a", "b")))
         # each (x, y, z) triangle supports its three canonical edges
         sides = [
             tri.select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
@@ -1563,11 +1562,19 @@ def ktruss(pairs: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     return _supersteps(e, step, max_iter, "ktruss", 1, converged)
 
 
+# Size gate of the wedge/triangle family, in symmetric edges (2n for n
+# canonical edges). Byte budget of the CSR link-prediction scorer at the
+# gate, n canonical edges over m <= 2n nodes: every executor holds one
+# broadcast (nodes, indptr, dst, degs, capped, edge_keys, bound) of
+# 8m + 8(m + 1) + 4·2n + 8m + m + 8n = 25m + 16n + 8 bytes, at most
+# ~330 MB at 2n = 10M; the driver holds, on top, the Arrow collect (16n)
+# and the packed sort (16n). Pinned by
+# tests/test_round13.py::test_lp_broadcast_bytes_match_budget.
 _WEDGE_BROADCAST_MAX_EDGES = 10_000_000
 
 # Wedge counts above this shuffle raw packed rows to a width derived
 # from the exact wedge volume before aggregating (see
-# link_prediction_jaccard) — below it the default two-phase agg never
+# _common_neighbour_top_k) — below it the default two-phase agg never
 # builds a map big enough to spill.
 _WEDGE_REPART_MIN_ROWS = 8_000_000
 
@@ -1581,52 +1588,29 @@ _WALK_BROADCAST_MAX_SEEDS = 65_536
 _AUTO_MAX_DEGREE_FLOOR = 64
 
 
-# Test hook: force link_prediction_jaccard onto one execution path
-# ("intersect" | "wedge" | None = size-gated choice). The equality tests
-# in tests/test_round13.py pin the two paths row-identical.
+# Test hook: force both link-prediction operators onto one execution
+# path ("intersect" | "wedge" | None = size-gated choice). The equality
+# tests in tests/test_round13.py and tests/test_property.py pin the two
+# paths row-identical.
 _FORCE_LP_PATH: "str | None" = None
 
 
-def _auto_max_degree_np(degs, q: float = 0.999) -> int:
-    """:func:`_auto_max_degree` over an in-memory numpy degree array —
-    the SAME integer-rank derivation (per-degree histogram → running sum
-    → smallest degree covering ceil(q·n) nodes → floor), so the
-    broadcast-adjacency path below and the wedge path derive identical
-    caps from identical degree multisets (pinned by the path-equality
-    tests)."""
-    import numpy as np
+def _auto_max_degree(hist, q: float = 0.999) -> int:
+    """Derive the wedge cap from a degree HISTOGRAM, an iterable of
+    (degree, count) pairs: the smallest degree d such that
+    >= ceil(q * n_nodes) nodes have degree <= d (the exact q-quantile by
+    integer rank — no float quantile semantics, so a SQL oracle
+    reproduces it bit-for-bit), floored at ``_AUTO_MAX_DEGREE_FLOOR``.
 
-    if len(degs) == 0:
-        return _AUTO_MAX_DEGREE_FLOOR
-    vals, cnts = np.unique(degs, return_counts=True)
-    n_nodes = int(cnts.sum())
-    need = -(-round(q * 1000) * n_nodes // 1000)  # ceil(q*n) in integers
-    cum = np.cumsum(cnts)
-    pos = int(np.searchsorted(cum, need))
-    cap = int(vals[min(pos, len(vals) - 1)])
-    return max(cap, _AUTO_MAX_DEGREE_FLOOR)
-
-
-def _auto_max_degree(deg: DataFrame, q: float = 0.999) -> int:
-    """Derive the wedge cap from the degree HISTOGRAM: the smallest
-    degree d such that >= ceil(q * n_nodes) nodes have degree <= d
-    (the exact q-quantile by integer rank — no float quantile
-    semantics, so a SQL oracle reproduces it bit-for-bit), floored at
-    ``_AUTO_MAX_DEGREE_FLOOR``.
-
-    Cost: one aggregation over the (already tiny) degree frame to the
-    per-degree histogram, collected to the driver — the histogram has
-    one row per DISTINCT degree value (O(10^3..10^4) even on
-    billion-node graphs), so the collect is bounded regardless of
-    graph size. This is the VERDICT r5 #7 auto-tune: the 100x graph
-    gets a cap from its own tail instead of a hand-tuned constant.
+    Both link-prediction paths feed it: the wedge path the collected
+    rows of a groupBy over the degree frame (one row per DISTINCT
+    degree value, O(10^3..10^4) even on billion-node graphs, so the
+    collect is bounded regardless of graph size), the CSR path
+    ``np.unique(degs, return_counts=True)``. This is the VERDICT r5 #7
+    auto-tune: the 100x graph gets a cap from its own tail instead of a
+    hand-tuned constant.
     """
-    hist = sorted(
-        (r["deg"], r["n"])
-        for r in deg.groupBy("deg")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
+    hist = sorted(hist)
     n_nodes = sum(n for _, n in hist)
     if n_nodes == 0:
         return _AUTO_MAX_DEGREE_FLOOR
@@ -1635,50 +1619,56 @@ def _auto_max_degree(deg: DataFrame, q: float = 0.999) -> int:
     # numerator for q values other than the default (ADVICE r6).
     need = -(-round(q * 1000) * n_nodes // 1000)  # ceil(q*n) in integers
     cum = 0
-    cap = hist[-1][0]
     for d, n in hist:
         cum += n
         if cum >= need:
-            cap = d
             break
-    return max(cap, _AUTO_MAX_DEGREE_FLOOR)
+    return max(int(d), _AUTO_MAX_DEGREE_FLOOR)
 
 
 def _lp_intersect_scored(
     e: DataFrame,
     n_edges: int,
+    score: str,
     top_k: int,
     min_common: int,
     max_degree: "int | str | None",
     endpoints_below: "int | None",
 ) -> DataFrame:
-    """Candidate scoring for :func:`link_prediction_jaccard` by
-    broadcast-adjacency intersection inside ``mapInArrow`` (guide
-    §2.3/§4.2, VERDICT r12 next-round #1) — replaces the deg²-row wedge
-    explode + packed-key exchange with NO shuffle at all.
+    """Candidate scoring for both link-prediction operators (see
+    :func:`_common_neighbour_top_k`) by broadcast-adjacency
+    intersection inside ``mapInArrow`` (guide §2.3/§4.2, VERDICT r12
+    next-round #1) — replaces the deg²-row wedge explode + packed-key
+    exchange with NO shuffle at all.
 
-    The canonical edge list (already known to fit the same
-    ``_WEDGE_BROADCAST_MAX_EDGES`` driver gate the wedge path's
-    broadcast join implies) is collected once via Arrow and broadcast as
-    a dense-remapped CSR. Each task owns a slice of the node range and,
+    The canonical edge list (already known to fit the
+    ``_WEDGE_BROADCAST_MAX_EDGES`` gate; its byte budget is written
+    there) is collected once via Arrow and broadcast as a
+    dense-remapped CSR. Each task owns a slice of the node range and,
     for each node u, counts every v > u sharing a CAPPED common neighbor
     by expanding the capped neighbors' adjacency segments and
     run-length-counting one sorted packed-key array — for pair (u, v),
     |N(u) ∩ N(v) ∩ capped| is exactly the number of capped x adjacent to
     both, and every such x is a neighbor of u, so the count completes at
     u's partition with no cross-task merge. Non-adjacency is a
-    searchsorted probe of the canonical edge keys; Jaccard is the same
-    common/(deg_a + deg_b − common) IEEE double; per-task top-k by the
-    final (jaccard desc, common desc, a, b) order keeps the global
-    top-k exact. Work is the same Σ over capped centers of deg² the
-    wedge join pays — moved from a 10⁸-row exchange into vectorized
-    numpy over broadcast arrays.
+    searchsorted probe of the canonical edge keys.
+
+    ``score`` picks what a run of equal keys scores:
+    - ``"jaccard"``: common/(deg_a + deg_b − common), the same IEEE
+      double as the wedge path; the keys sort in place;
+    - ``"ra_ppm"``: every expanded element carries its centre's weight
+      ``1000000 // deg(x)``; the keys sort with their weights (a stable
+      argsort) and each run sums them, exactly the wedge path's BIGINT.
+    Per-task top-k by the final (score desc, common desc, a, b) order
+    keeps the global top-k exact; the rows are (a, b, common, score).
+    Work is the same Σ over capped centers of deg² the wedge join pays —
+    moved from a 10⁸-row exchange into vectorized numpy over broadcast
+    arrays.
 
     Semantics are pinned row-identical to the wedge path (counts, IEEE
-    doubles, ordering) by tests/test_round13.py on both the plain and
-    bipartite (``endpoints_below``) modes and for the auto cap
-    (:func:`_auto_max_degree_np` reproduces the exact integer-rank
-    derivation).
+    doubles, ppm sums, ordering) by tests/test_round13.py and
+    tests/test_property.py on the plain and bipartite
+    (``endpoints_below``) modes and for the auto cap.
     """
     import numpy as np
 
@@ -1706,7 +1696,9 @@ def _lp_intersect_scored(
     indptr = np.zeros(m + 1, np.int64)
     np.cumsum(degs, out=indptr[1:])
     if max_degree == "auto":
-        max_degree = _auto_max_degree_np(degs)
+        max_degree = _auto_max_degree(
+            zip(*np.unique(degs, return_counts=True))
+        )
     capped = (
         degs <= max_degree
         if max_degree is not None
@@ -1722,6 +1714,7 @@ def _lp_intersect_scored(
         (nodes, indptr, dst, degs, capped, edge_keys, bound)
     )
     bip = endpoints_below is not None
+    weighted = score == "ra_ppm"
     k, mc = int(top_k), int(min_common)
 
     def _score(batches):
@@ -1791,55 +1784,294 @@ def _lp_intersect_scored(
                 keys = (us2[mask].astype(np.int64) << 32) + vs[mask]
                 if not len(keys):
                     continue
-                keys.sort()
+                if weighted:
+                    wts = np.repeat(1000000 // degs[xs], cnt_x)[mask]
+                    order = np.argsort(keys, kind="stable")
+                    keys, wts = keys[order], wts[order]
+                else:
+                    keys.sort()
                 is_start = np.empty(len(keys), dtype=bool)
                 is_start[0] = True
                 np.not_equal(keys[1:], keys[:-1], out=is_start[1:])
                 starts_i = np.flatnonzero(is_start)
                 common = np.diff(np.append(starts_i, len(keys)))
-                uk = keys[starts_i]
-                sel = common >= mc
-                uk, common = uk[sel], common[sel]
+                # runs that can still place: >= min_common, non-adjacent
+                run = np.flatnonzero(common >= mc)
+                uk = keys[starts_i[run]]
                 if len(uk) and len(edge_keys):
                     pos = np.minimum(
                         np.searchsorted(edge_keys, uk),
                         len(edge_keys) - 1,
                     )
                     nonadj = edge_keys[pos] != uk
-                    uk, common = uk[nonadj], common[nonadj]
+                    run, uk = run[nonadj], uk[nonadj]
                 if not len(uk):
                     continue
+                common = common[run]
                 ui = (uk >> 32).astype(np.int64)
                 vi = (uk & 0xFFFFFFFF).astype(np.int64)
-                jac = common / (degs[ui] + degs[vi] - common)
-                # top-k needs the full (jac desc, common desc, a, b)
+                if weighted:
+                    val = np.add.reduceat(wts, starts_i)[run]
+                else:
+                    val = common / (degs[ui] + degs[vi] - common)
+                # top-k needs the full (val desc, common desc, a, b)
                 # order only over rows that can still place: keep
-                # jac >= the k-th largest jac (ties included — any row
+                # val >= the k-th largest val (ties included — any row
                 # below it is beaten by k rows outright), then lexsort
                 # the small survivor set instead of every candidate
-                if len(jac) > 4 * k:
-                    thr = np.partition(jac, len(jac) - k)[len(jac) - k]
-                    keep_top = jac >= thr
+                if len(val) > 4 * k:
+                    thr = np.partition(val, len(val) - k)[len(val) - k]
+                    keep_top = val >= thr
                     ui, vi = ui[keep_top], vi[keep_top]
-                    common, jac = common[keep_top], jac[keep_top]
+                    common, val = common[keep_top], val[keep_top]
                 a_out, b_out = nodes[ui], nodes[vi]
-                top = np.lexsort((b_out, a_out, -common, -jac))[:k]
-                outs.append(
-                    (a_out[top], b_out[top], common[top], jac[top])
-                )
+                top = np.lexsort((b_out, a_out, -common, -val))[:k]
+                outs.append((a_out[top], b_out[top], common[top], val[top]))
             if outs:
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate([o[i] for o in outs]))
-                        for i in range(4)
-                    ],
-                    ["a", "b", "common", "jaccard"],
+                    [pa.array(np.concatenate(c)) for c in zip(*outs)],
+                    ["a", "b", "common", score],
                 )
 
     return (
         spark.range(0, bound, 1, spark.sparkContext.defaultParallelism)
         .mapInArrow(
-            _score, "a long, b long, common long, jaccard double"
+            _score,
+            f"a long, b long, common long, {score} "
+            + ("long" if weighted else "double"),
+        )
+    )
+
+
+def _common_neighbour_top_k(
+    pairs: DataFrame,
+    score: str,
+    cols: "tuple[str, ...]",
+    top_k: int,
+    min_common: int,
+    max_degree: "int | str | None",
+    endpoints_below: "int | None" = None,
+) -> DataFrame:
+    """The common-neighbour substrate under both link-prediction
+    operators: the ``top_k`` NON-adjacent pairs with >= ``min_common``
+    common neighbors of degree <= ``max_degree``, by (``score`` desc,
+    common desc, a, b), as the columns ``cols``. ``score`` is
+    ``"jaccard"`` or ``"ra_ppm"`` (each common neighbor z weighs
+    ``1000000 div deg(z)``).
+
+    At most ``_WEDGE_BROADCAST_MAX_EDGES`` symmetric edges, the
+    broadcast-CSR scorer (:func:`_lp_intersect_scored`) runs with no
+    shuffle; past the gate, one wedge count
+    (:func:`_lp_wedge_scored`). ``_FORCE_LP_PATH`` forces either path.
+    orderBy+limit compiles to TakeOrdered (per-partition top-k, no
+    global sort), checkpointed before the persisted inputs are released.
+    """
+    e = canonical_undirected(pairs).persist(StorageLevel.MEMORY_AND_DISK)
+    sym = None
+    try:
+        # materializes the persist either way; the count gates the path
+        n_edges = e.count()
+        use_intersect = 2 * n_edges <= _WEDGE_BROADCAST_MAX_EDGES
+        if _FORCE_LP_PATH is not None:
+            use_intersect = _FORCE_LP_PATH == "intersect"
+        if use_intersect:
+            scored = _lp_intersect_scored(
+                e, n_edges, score, top_k, min_common, max_degree,
+                endpoints_below,
+            )
+        else:
+            sym = e.unionByName(
+                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            scored = _lp_wedge_scored(
+                e, sym, score, min_common, max_degree, endpoints_below
+            )
+        return (
+            scored.orderBy(
+                F.col(score).desc(), F.col("common").desc(), "a", "b"
+            )
+            .limit(top_k)
+            .select(*cols)
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        e.unpersist()
+        if sym is not None:
+            sym.unpersist()
+
+
+def _lp_wedge_scored(
+    e: DataFrame,
+    sym: DataFrame,
+    score: str,
+    min_common: int,
+    max_degree: "int | str | None",
+    endpoints_below: "int | None",
+) -> DataFrame:
+    """Every non-adjacent candidate (a, b, common, ``score``) from one
+    wedge self-join over the persisted symmetric edges ``sym`` (volume
+    Σ over kept centers of deg²), one count per packed pair key (and
+    the centre weights' sum for RA), one anti-join against the edge set
+    and, for Jaccard, one broadcastable degree join."""
+    deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    if max_degree == "auto":
+        # degree-histogram-driven cap: exact p99.9 by integer rank
+        # (floored) — see _auto_max_degree. The derived value then
+        # flows through the exact capped semantics below.
+        max_degree = _auto_max_degree(
+            deg.groupBy("deg").agg(F.count(F.lit(1))).collect()
+        )
+    # wedges centered at x: neighbors (a, b) of x with a < b. The
+    # wedge frame is the volume driver (sum of deg² rows); when ids
+    # fit 31 bits, pack the (u, v) pair into ONE long before the
+    # count shuffle — half the shuffle width, single-column hash key
+    # — and unpack after. (The `label_code << 48` production id
+    # packing exceeds 31 bits, hence the runtime gate; both gate
+    # metrics come off the already-tiny degree frame in one action.)
+    kept_deg = (
+        F.col("deg")
+        if max_degree is None
+        else F.when(F.col("deg") <= max_degree, F.col("deg"))
+    )
+    gate = deg.agg(
+        F.max("a").alias("_mx"),
+        F.sum(kept_deg).alias("_ne"),
+        F.sum(
+            (kept_deg * (kept_deg - 1) / 2).cast("bigint")
+        ).alias("_nw"),
+    ).collect()[0]
+    max_id = gate["_mx"] or 0
+    n_sym = gate["_ne"] or 0
+    n_wedges = gate["_nw"] or 0
+    centers = sym
+    if endpoints_below is not None:
+        # Bipartite-projection mode: only HIGH-band centers can emit
+        # low-band candidate pairs, so drop low-band centers before
+        # the self-join — their wedges would only produce mirror
+        # pairs the output filter discards anyway.
+        centers = centers.where(F.col("a") >= endpoints_below)
+    if max_degree is not None:
+        # Drop hub CENTERS before the self-join — this is what bounds
+        # the wedge volume. AQE broadcasts the (id-only) keep set when
+        # it is small; endpoints u, v stay uncapped.
+        ok = deg.where(F.col("deg") <= max_degree).select("a")
+        centers = centers.join(ok, "a", "left_semi")
+    n1 = centers.select(F.col("a").alias("x"), F.col("b").alias("u"))
+    n2 = centers.select(F.col("a").alias("x"), F.col("b").alias("v"))
+    weighted = score == "ra_ppm"
+    aggs = [F.count(F.lit(1)).alias("common")]
+    if weighted:
+        # the centre's ppm weight joins the per-node degree frame once,
+        # on the adjacency side, instead of the deg²-row wedge frame
+        n2 = n2.join(
+            deg.select(
+                F.col("a").alias("x"), F.expr("1000000 div deg").alias("_w")
+            ),
+            "x",
+        )
+        aggs.append(F.sum("_w").alias("ra_ppm"))
+    w_cols = ["_w"] if weighted else []
+    # Broadcasting one adjacency side turns the wedge join into a
+    # map-side hash join: no sort of the deg²-sized join output
+    # (measured 3x at sf0.1). Size-gated — past the gate the frame
+    # won't fit executor memory and the shuffle join is correct.
+    if n_sym <= _WEDGE_BROADCAST_MAX_EDGES:
+        n2 = F.broadcast(n2)
+    wedges = n1.join(n2, "x").where(F.col("u") < F.col("v"))
+    # The wedge frame explodes an edge-sized input into ~sum C(deg,2)
+    # rows, and counting it with the default two-phase hash agg
+    # builds MAP-side hash tables over tens of millions of
+    # mostly-low-multiplicity pair keys — borderline-heap spills and
+    # 2-4x run-to-run variance (measured 19-24s vs a stable 14s at
+    # sf0.1, 147M wedges). Past the gate, shuffle the RAW packed
+    # rows to a width derived from the EXACT wedge count (already
+    # computed in the gate agg) and aggregate clustered data
+    # locally: a user repartition's shuffle origin blocks AQE
+    # coalescing, each reduce task owns every copy of its keys, and
+    # no oversized partial-agg map ever exists. ~1.5M wedge rows per
+    # task keeps the per-task final-agg map tens of MB.
+    wedge_npart = 0
+    if n_wedges > _WEDGE_REPART_MIN_ROWS:
+        wedge_npart = int(
+            min(
+                1024,
+                max(
+                    e.sparkSession.sparkContext.defaultParallelism,
+                    n_wedges // 1_500_000,
+                ),
+            )
+        )
+    if 0 <= max_id < (1 << 31):
+        # Cast to long BEFORE the shift: on IntegerType the JVM masks
+        # the shift amount to 5 bits, so shiftleft(u, 32) == u — a
+        # silently wrong pack that still passes the value-range gate.
+        packed = wedges.select(
+            (
+                F.shiftleft(F.col("u").cast("long"), 32)
+                + F.col("v").cast("long")
+            ).alias("_uv"),
+            *w_cols,
+        )
+        if wedge_npart:
+            packed = packed.repartition(wedge_npart, "_uv")
+        cn = (
+            packed.groupBy("_uv")
+            .agg(*aggs)
+            .where(F.col("common") >= min_common)
+            .select(
+                F.shiftright("_uv", 32).alias("a"),
+                (
+                    F.col("_uv")
+                    - (F.shiftright("_uv", 32) * F.lit(1 << 32))
+                ).alias("b"),
+                "*",
+            )
+            .drop("_uv")
+        )
+    else:
+        unpacked = wedges.select(
+            F.col("u").alias("a"), F.col("v").alias("b"), *w_cols
+        )
+        if wedge_npart:
+            unpacked = unpacked.repartition(wedge_npart, "a", "b")
+        cn = (
+            unpacked.groupBy("a", "b")
+            .agg(*aggs)
+            .where(F.col("common") >= min_common)
+        )
+    cand = cn.join(e, ["a", "b"], "left_anti")
+    if endpoints_below is not None:
+        # Bipartite-projection mode: with one node class offset into
+        # a high id band, wedges centered on that class produce the
+        # projection's similar pairs and wedges centered on the low
+        # class produce the mirror-image pairs — this keeps only
+        # candidates whose BOTH endpoints sit in the low band, BEFORE
+        # the top-k so the ranking is over the projection alone.
+        cand = cand.where(
+            (F.col("a") < endpoints_below)
+            & (F.col("b") < endpoints_below)
+        )
+    if weighted:
+        return cand
+    # deg has at most n_sym rows — same gate as the adjacency side;
+    # past it the per-node frame can't broadcast and the candidate
+    # set (already wedge-bounded) shuffle-joins instead.
+    da = deg.select(F.col("a"), F.col("deg").alias("_da"))
+    db = deg.select(F.col("a").alias("b"), F.col("deg").alias("_db"))
+    if n_sym <= _WEDGE_BROADCAST_MAX_EDGES:
+        da = F.broadcast(da)
+        db = F.broadcast(db)
+    return (
+        cand.join(da, "a")
+        .join(db, "b")
+        .select(
+            "a",
+            "b",
+            "common",
+            (
+                F.col("common")
+                / (F.col("_da") + F.col("_db") - F.col("common"))
+            ).alias("jaccard"),
         )
     )
 
@@ -1855,7 +2087,8 @@ def link_prediction_jaccard(
     pair frame: for every NON-adjacent node pair with >= ``min_common``
     common neighbors, the common-neighbor count and Jaccard coefficient
     |N(a) ∩ N(b)| / |N(a) ∪ N(b)|; returns the ``top_k`` candidate links
-    by (jaccard desc, common desc, a, b) — a deterministic total order.
+    (a, b, common, jaccard) by (jaccard desc, common desc, a, b) — a
+    deterministic total order.
 
     ``max_degree`` caps the wedge volume — the scale knob for skewed
     graphs. Pass ``"auto"`` to derive the cap from the graph's own
@@ -1880,198 +2113,14 @@ def link_prediction_jaccard(
     centers are dropped before the self-join since their wedges could
     only produce the discarded mirror pairs.
 
-    Shape: below ``_WEDGE_BROADCAST_MAX_EDGES`` canonical edges — the
-    same driver-size gate the broadcast join already implied — the
-    adjacency is collected once and scored by broadcast-CSR intersection
-    inside ``mapInArrow`` (:func:`_lp_intersect_scored`): no wedge
-    exchange at all, one collect + one shuffle-free scoring pass +
-    TakeOrdered. Past the gate, the original shape: one wedge self-join
-    (volume sum over kept centers of deg²), one broadcastable degree
-    join, one anti-join against the edge set. orderBy+limit compiles to
-    TakeOrdered (per-partition top-k, no global sort).
+    Runs on the common-neighbour substrate
+    (:func:`_common_neighbour_top_k`): broadcast-CSR intersection below
+    the ``_WEDGE_BROADCAST_MAX_EDGES`` gate, one wedge count past it.
     """
-    e = canonical_undirected(pairs).persist(StorageLevel.MEMORY_AND_DISK)
-    sym = None
-    try:
-        # materializes the persist either way; the count gates the path
-        n_edges = e.count()
-        use_intersect = 2 * n_edges <= _WEDGE_BROADCAST_MAX_EDGES
-        if _FORCE_LP_PATH is not None:
-            use_intersect = _FORCE_LP_PATH == "intersect"
-        if use_intersect:
-            scored = _lp_intersect_scored(
-                e, n_edges, top_k, min_common, max_degree,
-                endpoints_below,
-            )
-            return (
-                scored.orderBy(
-                    F.col("jaccard").desc(),
-                    F.col("common").desc(),
-                    "a",
-                    "b",
-                )
-                .limit(top_k)
-                .localCheckpoint(eager=True)
-            )
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        if max_degree == "auto":
-            # degree-histogram-driven cap: exact p99.9 by integer rank
-            # (floored) — see _auto_max_degree. The derived value then
-            # flows through the exact capped semantics below.
-            max_degree = _auto_max_degree(deg)
-        # wedges centered at x: neighbors (a, b) of x with a < b. The
-        # wedge frame is the volume driver (sum of deg² rows); when ids
-        # fit 31 bits, pack the (u, v) pair into ONE long before the
-        # count shuffle — half the shuffle width, single-column hash key
-        # — and unpack after. (The `label_code << 48` production id
-        # packing exceeds 31 bits, hence the runtime gate; both gate
-        # metrics come off the already-tiny degree frame in one action.)
-        kept_deg = (
-            F.col("deg")
-            if max_degree is None
-            else F.when(F.col("deg") <= max_degree, F.col("deg"))
-        )
-        gate = deg.agg(
-            F.max("a").alias("_mx"),
-            F.sum(kept_deg).alias("_ne"),
-            F.sum(
-                (kept_deg * (kept_deg - 1) / 2).cast("bigint")
-            ).alias("_nw"),
-        ).collect()[0]
-        max_id = gate["_mx"] or 0
-        n_sym = gate["_ne"] or 0
-        n_wedges = gate["_nw"] or 0
-        centers = sym
-        if endpoints_below is not None:
-            # Bipartite-projection mode: only HIGH-band centers can emit
-            # low-band candidate pairs, so drop low-band centers before
-            # the self-join — their wedges would only produce mirror
-            # pairs the output filter discards anyway.
-            centers = centers.where(F.col("a") >= endpoints_below)
-        if max_degree is not None:
-            # Drop hub CENTERS before the self-join — this is what bounds
-            # the wedge volume. AQE broadcasts the (id-only) keep set when
-            # it is small; endpoints u, v stay uncapped.
-            ok = deg.where(F.col("deg") <= max_degree).select("a")
-            centers = centers.join(ok, "a", "left_semi")
-        n1 = centers.select(F.col("a").alias("x"), F.col("b").alias("u"))
-        n2 = centers.select(F.col("a").alias("x"), F.col("b").alias("v"))
-        # Broadcasting one adjacency side turns the wedge join into a
-        # map-side hash join: no sort of the deg²-sized join output
-        # (measured 3x at sf0.1). Size-gated — past the gate the frame
-        # won't fit executor memory and the shuffle join is correct.
-        if n_sym <= _WEDGE_BROADCAST_MAX_EDGES:
-            n2 = F.broadcast(n2)
-        wedges = n1.join(n2, "x").where(F.col("u") < F.col("v"))
-        # The wedge frame explodes an edge-sized input into ~sum C(deg,2)
-        # rows, and counting it with the default two-phase hash agg
-        # builds MAP-side hash tables over tens of millions of
-        # mostly-low-multiplicity pair keys — borderline-heap spills and
-        # 2-4x run-to-run variance (measured 19-24s vs a stable 14s at
-        # sf0.1, 147M wedges). Past the gate, shuffle the RAW packed
-        # rows to a width derived from the EXACT wedge count (already
-        # computed in the gate agg) and aggregate clustered data
-        # locally: a user repartition's shuffle origin blocks AQE
-        # coalescing, each reduce task owns every copy of its keys, and
-        # no oversized partial-agg map ever exists. ~1.5M wedge rows per
-        # task keeps the per-task final-agg map tens of MB.
-        wedge_npart = 0
-        if n_wedges > _WEDGE_REPART_MIN_ROWS:
-            wedge_npart = int(
-                min(
-                    1024,
-                    max(
-                        pairs.sparkSession.sparkContext.defaultParallelism,
-                        n_wedges // 1_500_000,
-                    ),
-                )
-            )
-        if 0 <= max_id < (1 << 31):
-            # Cast to long BEFORE the shift: on IntegerType the JVM masks
-            # the shift amount to 5 bits, so shiftleft(u, 32) == u — a
-            # silently wrong pack that still passes the value-range gate.
-            packed = wedges.select(
-                (
-                    F.shiftleft(F.col("u").cast("long"), 32)
-                    + F.col("v").cast("long")
-                ).alias("_uv")
-            )
-            if wedge_npart:
-                packed = packed.repartition(wedge_npart, "_uv")
-            cn = (
-                packed.groupBy("_uv")
-                .agg(F.count(F.lit(1)).alias("common"))
-                .where(F.col("common") >= min_common)
-                .select(
-                    F.shiftright("_uv", 32).alias("a"),
-                    (
-                        F.col("_uv")
-                        - (F.shiftright("_uv", 32) * F.lit(1 << 32))
-                    ).alias("b"),
-                    "common",
-                )
-            )
-        else:
-            unpacked = wedges.select(
-                F.col("u").alias("a"), F.col("v").alias("b")
-            )
-            if wedge_npart:
-                unpacked = unpacked.repartition(wedge_npart, "a", "b")
-            cn = (
-                unpacked.groupBy("a", "b")
-                .agg(F.count(F.lit(1)).alias("common"))
-                .where(F.col("common") >= min_common)
-            )
-        cand = cn.join(e, ["a", "b"], "left_anti")
-        if endpoints_below is not None:
-            # Bipartite-projection mode: with one node class offset into
-            # a high id band, wedges centered on that class produce the
-            # projection's similar pairs and wedges centered on the low
-            # class produce the mirror-image pairs — this keeps only
-            # candidates whose BOTH endpoints sit in the low band, BEFORE
-            # the top-k so the ranking is over the projection alone.
-            cand = cand.where(
-                (F.col("a") < endpoints_below)
-                & (F.col("b") < endpoints_below)
-            )
-        # deg has at most n_sym rows — same gate as the adjacency side;
-        # past it the per-node frame can't broadcast and the candidate
-        # set (already wedge-bounded) shuffle-joins instead.
-        da = deg.select(F.col("a"), F.col("deg").alias("_da"))
-        db = deg.select(F.col("a").alias("b"), F.col("deg").alias("_db"))
-        if n_sym <= _WEDGE_BROADCAST_MAX_EDGES:
-            da = F.broadcast(da)
-            db = F.broadcast(db)
-        scored = (
-            cand.join(da, "a")
-            .join(db, "b")
-            .select(
-                "a",
-                "b",
-                "common",
-                (
-                    F.col("common")
-                    / (F.col("_da") + F.col("_db") - F.col("common"))
-                ).alias("jaccard"),
-            )
-        )
-        return (
-            scored.orderBy(
-                F.col("jaccard").desc(),
-                F.col("common").desc(),
-                "a",
-                "b",
-            )
-            .limit(top_k)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        e.unpersist()
-        if sym is not None:
-            sym.unpersist()
+    return _common_neighbour_top_k(
+        pairs, "jaccard", ("a", "b", "common", "jaccard"), top_k,
+        min_common, max_degree, endpoints_below,
+    )
 
 
 def personalized_pagerank(
@@ -3206,12 +3255,8 @@ def node_four_clique_counts(edge_pairs: DataFrame) -> DataFrame:
         StorageLevel.MEMORY_AND_DISK
     )
     try:
-        o = (
-            _degree_oriented(e)
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        tri = _oriented_triangles(e)
+        o = _degree_oriented(e)
+        tri = _oriented_triangles(o)
         cand = tri.join(
             o.select(F.col("src").alias("z"), F.col("dst").alias("d")),
             "z",
@@ -3396,7 +3441,7 @@ def link_prediction_resource_allocation(
     1/deg(z) — common neighbors weighted INVERSELY by their degree, so a
     shared hub contributes almost nothing (the Adamic-Adar intuition,
     with 1/deg in place of 1/log deg). Returns the ``top_k`` candidates
-    by (ra desc, common desc, a, b).
+    (a, b, ra_ppm, common) by (ra_ppm desc, common desc, a, b).
 
     The per-center weight is computed as the EXACT integer quotient
     ``1000000 div deg(z)`` (parts-per-million) and summed as BIGINT —
@@ -3405,71 +3450,22 @@ def link_prediction_resource_allocation(
     bit-for-bit (1/log deg would be transcendental; 1/deg in fixed
     point is the exactly-verifiable member of the family).
 
-    Same shuffle shape as :func:`link_prediction_jaccard` — one wedge
-    self-join whose volume is Σ_z deg(z)² over kept centers, one
-    groupBy SUM (map-side combinable), one anti-join against the edge
-    set; ``max_degree`` (or ``"auto"`` for the histogram-derived p99.9
-    cap, see :func:`_auto_max_degree`) bounds the wedge volume on
-    skewed graphs. Under a cap, dropped hub centers are exactly the
-    terms RA already discounts to ~0 — the cap and the score agree
-    about which evidence matters, which is why RA caps far more
-    gracefully than raw common-neighbor counts. orderBy+limit compiles
-    to TakeOrdered (per-partition top-k, no global sort).
+    Runs on the same common-neighbour substrate as
+    :func:`link_prediction_jaccard` (:func:`_common_neighbour_top_k`):
+    at most ``_WEDGE_BROADCAST_MAX_EDGES`` symmetric edges, the
+    broadcast-CSR scorer sums each pair's centre weights inside
+    ``mapInArrow`` with no shuffle; past the gate, one wedge self-join
+    sums them per packed pair key. ``max_degree`` (or ``"auto"`` for
+    the histogram-derived p99.9 cap, see :func:`_auto_max_degree`)
+    bounds the wedge volume on skewed graphs. Under a cap, dropped hub
+    centers are exactly the terms RA already discounts to ~0 — the cap
+    and the score agree about which evidence matters, which is why RA
+    caps far more gracefully than raw common-neighbor counts.
     """
-    e = canonical_undirected(pairs).persist(StorageLevel.MEMORY_AND_DISK)
-    sym = None
-    try:
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        if max_degree == "auto":
-            max_degree = _auto_max_degree(deg)
-        centers = sym
-        if max_degree is not None:
-            ok = deg.where(F.col("deg") <= max_degree).select("a")
-            centers = centers.join(ok, "a", "left_semi")
-        # Attach the center's ppm weight BEFORE the wedge join: one
-        # broadcast-size join against the (per-node, bounded) degree
-        # frame instead of a deg²-row join after.
-        cw = centers.join(
-            deg.select(
-                "a", F.expr("1000000 div deg").alias("_w")
-            ),
-            "a",
-        )
-        n1 = cw.select(
-            F.col("a").alias("x"), F.col("b").alias("u"), "_w"
-        )
-        n2 = centers.select(
-            F.col("a").alias("x"), F.col("b").alias("v")
-        )
-        wedges = n1.join(n2, "x").where(F.col("u") < F.col("v"))
-        scored = (
-            wedges.groupBy(
-                F.col("u").alias("a"), F.col("v").alias("b")
-            )
-            .agg(
-                F.sum("_w").cast("bigint").alias("ra_ppm"),
-                F.count(F.lit(1)).alias("common"),
-            )
-            .where(F.col("common") >= min_common)
-        )
-        cand = scored.join(e, ["a", "b"], "left_anti")
-        return (
-            cand.orderBy(
-                F.col("ra_ppm").desc(), F.col("common").desc(), "a", "b"
-            )
-            .limit(top_k)
-            .select(
-                "a", "b", "ra_ppm",
-                F.col("common").cast("bigint").alias("common"),
-            )
-        )
-    finally:
-        if sym is not None:
-            sym.unpersist()
-        e.unpersist()
+    return _common_neighbour_top_k(
+        pairs, "ra_ppm", ("a", "b", "ra_ppm", "common"), top_k,
+        min_common, max_degree,
+    )
 
 
 def degree_anomalies(pairs: DataFrame, top: int = 20) -> DataFrame:
@@ -3711,7 +3707,7 @@ def edge_embeddedness(
     """
     e = canonical_undirected(pairs).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        tri = _oriented_triangles(e)
+        tri = _oriented_triangles(_degree_oriented(e))
         support = (
             tri.select(
                 F.least("x", "y").alias("a"),

@@ -321,7 +321,10 @@ def test_hits_star_closed_form(spark):
 
 def test_auto_max_degree_quantile_and_floor(spark):
     """_auto_max_degree picks the exact integer-rank p99.9 degree
-    (smallest d covering ceil(0.999*n) nodes), floored at 64."""
+    (smallest d covering ceil(0.999*n) nodes), floored at 64, from a
+    (degree, count) histogram — the collected rows of a Spark groupBy
+    and numpy's unique counts derive the same cap."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     # 999 nodes of degree 1000, one hub of degree 5000: p99.9 rank is
@@ -332,14 +335,16 @@ def test_auto_max_degree_quantile_and_floor(spark):
         .otherwise(F.lit(1000))
         .alias("deg"),
     )
-    assert analytics._auto_max_degree(deg) == 1000
+    rows = deg.groupBy("deg").agg(F.count(F.lit(1))).collect()
+    assert analytics._auto_max_degree(rows) == 1000
+    degs = np.array([5000] + [1000] * 999)
+    assert analytics._auto_max_degree(
+        zip(*np.unique(degs, return_counts=True))
+    ) == 1000
     # tiny degrees: the floor wins
-    small = spark.range(100).select(
-        F.col("id").alias("a"), F.lit(3).alias("deg")
-    )
-    assert analytics._auto_max_degree(small) == 64
+    assert analytics._auto_max_degree([(3, 100)]) == 64
     # empty graph: floor
-    assert analytics._auto_max_degree(small.where(F.lit(False))) == 64
+    assert analytics._auto_max_degree([]) == 64
 
 
 def test_link_prediction_auto_matches_explicit_cap(spark):
@@ -403,7 +408,9 @@ def test_link_prediction_auto_cap_excludes_hub_on_power_law(spark):
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    cap = _auto_max_degree(deg)
+    cap = _auto_max_degree(
+        deg.groupBy("deg").agg(F.count(F.lit(1))).collect()
+    )
     assert cap == _AUTO_MAX_DEGREE_FLOOR == 64
     assert cap < 2000  # the hub is excluded as a center
 
@@ -1202,46 +1209,52 @@ def test_hash_projection_embeddings_exact(spark):
             assert got[(v, d)] == (h1, h2), (v, d)
 
 
-def test_link_prediction_resource_allocation_closed_form(spark):
+def test_link_prediction_resource_allocation_closed_form(
+    spark, monkeypatch
+):
     """Square 1-2-3-4-1 plus a pendant 5 on node 1: the non-adjacent
     diagonals (1,3) and (2,4) each have two degree-2... check exact ppm:
     deg(1)=3, deg(2)=deg(3)=deg(4)=2, deg(5)=1. Candidates with >=2
     common neighbors: (1,3) via {2,4} -> 500000+500000; (2,4) via
-    {1,3} -> 333333+500000."""
+    {1,3} -> 333333+500000. Both the CSR and the wedge path."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4), (1, 5)], "a bigint, b bigint"
     )
-    got = {
-        (r["a"], r["b"]): (r["ra_ppm"], r["common"])
-        for r in analytics.link_prediction_resource_allocation(
-            pairs, top_k=10, min_common=2
-        ).collect()
-    }
-    assert got == {(1, 3): (1000000, 2), (2, 4): (833333, 2)}
+    for forced in ("intersect", "wedge"):
+        monkeypatch.setattr(analytics, "_FORCE_LP_PATH", forced)
+        got = {
+            (r["a"], r["b"]): (r["ra_ppm"], r["common"])
+            for r in analytics.link_prediction_resource_allocation(
+                pairs, top_k=10, min_common=2
+            ).collect()
+        }
+        assert got == {(1, 3): (1000000, 2), (2, 4): (833333, 2)}, forced
 
 
-def test_link_prediction_resource_allocation_cap_drops_hub(spark):
+def test_link_prediction_resource_allocation_cap_drops_hub(
+    spark, monkeypatch
+):
     """A hub H adjacent to everything plus a shared low-degree friend:
     with max_degree below the hub's degree, the hub's wedge terms
-    vanish but low-degree evidence survives."""
+    vanish but low-degree evidence survives. Both the CSR and the
+    wedge path."""
     edges = [(9, i) for i in (1, 2, 3, 4)] + [(1, 5), (2, 5)]
     pairs = spark.createDataFrame(edges, "a bigint, b bigint")
-    # uncapped: (1,2) common={9,5}: 1000000//4 + 1000000//2 = 750000
-    unc = {
-        (r["a"], r["b"]): r["ra_ppm"]
-        for r in analytics.link_prediction_resource_allocation(
-            pairs, top_k=10, min_common=1
-        ).collect()
-    }
-    assert unc[(1, 2)] == 750000
-    # cap=3 drops hub 9 (deg 4): (1,2) keeps only z=5 -> 500000
-    cap = {
-        (r["a"], r["b"]): r["ra_ppm"]
-        for r in analytics.link_prediction_resource_allocation(
-            pairs, top_k=10, min_common=1, max_degree=3
-        ).collect()
-    }
-    assert cap[(1, 2)] == 500000
+
+    def ra(**kw):
+        return {
+            (r["a"], r["b"]): r["ra_ppm"]
+            for r in analytics.link_prediction_resource_allocation(
+                pairs, top_k=10, min_common=1, **kw
+            ).collect()
+        }
+
+    for forced in ("intersect", "wedge"):
+        monkeypatch.setattr(analytics, "_FORCE_LP_PATH", forced)
+        # uncapped: (1,2) common={9,5}: 1000000//4 + 1000000//2 = 750000
+        assert ra()[(1, 2)] == 750000, forced
+        # cap=3 drops hub 9 (deg 4): (1,2) keeps only z=5 -> 500000
+        assert ra(max_degree=3)[(1, 2)] == 500000, forced
 
 
 def test_degree_anomalies_median_mad(spark):

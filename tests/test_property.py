@@ -1608,3 +1608,128 @@ def test_peel_loops_match_python_replay(graph, k, rounds):
         pairs, node_df.select("id"), max_rounds=len(nodes) + 1
     )
     assert rows(gc) == want["greedy_coloring"]
+
+
+lp_graph_strategy = st.integers(3, 12).flatmap(
+    lambda n: st.tuples(
+        st.just(n),
+        st.lists(
+            st.tuples(st.integers(1, n), st.integers(1, n)), max_size=24
+        ),
+        # hub 100 adjacent to nodes 1..h; pendants 200, 201, ... each
+        # on one drawn node
+        st.integers(0, n),
+        st.lists(st.integers(1, n), max_size=3),
+    )
+)
+
+
+def _lp_replay(nbrs, score, top_k, min_common, cap, below):
+    """Plain-Python common-neighbour link prediction: every centre x of
+    degree <= cap (and >= ``below`` in bipartite mode) credits each
+    pair of its neighbors u < v (both < ``below``) with 1 common
+    neighbor and 1000000 // deg(x) ppm; non-adjacent pairs with
+    >= min_common ranked by (score desc, common desc, a, b)."""
+    deg = {v: len(ns) for v, ns in nbrs.items()}
+    if cap == "auto":
+        # smallest degree covering ceil(0.999 * n) nodes, floored at 64
+        degs = sorted(deg.values())
+        need = -(-999 * len(degs) // 1000)
+        cap = max(degs[need - 1] if degs else 0, 64)
+    acc = {}
+    for x, ns in nbrs.items():
+        if (cap is not None and deg[x] > cap) or (
+            below is not None and x < below
+        ):
+            continue
+        for u in ns:
+            for v in ns:
+                if u < v and (below is None or v < below):
+                    c, w = acc.get((u, v), (0, 0))
+                    acc[(u, v)] = (c + 1, w + 1000000 // deg[x])
+    rows = []
+    for (u, v), (c, w) in acc.items():
+        if c < min_common or v in nbrs[u]:
+            continue
+        if score == "jaccard":
+            rows.append((u, v, c, c / (deg[u] + deg[v] - c)))
+        else:
+            rows.append((u, v, w, c))
+    if score == "jaccard":
+        rows.sort(key=lambda r: (-r[3], -r[2], r[0], r[1]))
+    else:
+        rows.sort(key=lambda r: (-r[2], -r[3], r[0], r[1]))
+    return rows[:top_k]
+
+
+# twelve operator calls per example, about 12 s each on 4 cores
+@settings(max_examples=3, deadline=None)
+@given(
+    graph=lp_graph_strategy,
+    cap=st.integers(1, 4),
+    below=st.integers(2, 12),
+    min_common=st.integers(1, 2),
+    top_k=st.sampled_from([2, 50]),
+)
+@example(
+    # triangle 1-2-3 and square 3-4-5-6 with a chord, a self-loop, a
+    # reversed duplicate, hub 100 on 1..6 and pendants on 2 and 5
+    graph=(
+        6,
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 3), (4, 6),
+         (2, 2), (2, 1)],
+        6,
+        [2, 5],
+    ),
+    cap=3,
+    below=4,
+    min_common=1,
+    top_k=2,
+)
+def test_link_prediction_paths_match_common_neighbour_replay(
+    graph, cap, below, min_common, top_k
+):
+    """Both link-prediction operators, forced onto the broadcast-CSR
+    path and onto the wedge path, equal a plain-Python common-neighbour
+    replay on random graphs with a hub, pendants, self-loops and
+    duplicate edges: Jaccard with no cap, an int cap, "auto" and
+    ``endpoints_below``; resource allocation with no cap and an int
+    cap. Ties at the top-k cut are common, so ``top_k`` is small too."""
+    from akka_graph_db_spark.operators import analytics
+
+    spark = _SPARK["s"]
+    n, drawn, hub_deg, pendants = graph
+    arcs = list(drawn)
+    arcs += [(100, v) for v in range(1, hub_deg + 1)]
+    arcs += [(200 + i, v) for i, v in enumerate(pendants)]
+    pairs = spark.createDataFrame(arcs, "a bigint, b bigint")
+    nbrs = _undirected_neighbours([(a, b, None) for a, b in arcs])
+    runs = [
+        ("jaccard", None, None),
+        ("jaccard", cap, None),
+        ("jaccard", "auto", None),
+        ("jaccard", None, below),
+        ("ra_ppm", None, None),
+        ("ra_ppm", cap, None),
+    ]
+    try:
+        for score, max_degree, endpoints_below in runs:
+            want = _lp_replay(
+                nbrs, score, top_k, min_common, max_degree, endpoints_below
+            )
+            for forced in ("intersect", "wedge"):
+                analytics._FORCE_LP_PATH = forced
+                if score == "jaccard":
+                    df = analytics.link_prediction_jaccard(
+                        pairs, top_k, min_common, max_degree,
+                        endpoints_below,
+                    )
+                else:
+                    df = analytics.link_prediction_resource_allocation(
+                        pairs, top_k, min_common, max_degree
+                    )
+                got = [tuple(r) for r in df.collect()]
+                assert got == want, (score, max_degree, endpoints_below,
+                                     forced)
+    finally:
+        analytics._FORCE_LP_PATH = None

@@ -8,8 +8,9 @@ Pins the invariants the r13 optimization pass relies on:
 - both signature paths' ``_n`` equals the verify frame's set size;
 - the streaming staging helper writes exactly ``n_files`` contiguous
   slices on the mtime ladder while streaming record batches;
-- link_prediction_jaccard's broadcast-adjacency intersection path is
-  output-identical to the shuffle wedge path it gates over.
+- both link-prediction operators' broadcast-adjacency intersection path
+  is output-identical to the shuffle wedge path it gates over, and its
+  broadcast holds the byte budget written next to the gate.
 """
 
 import os
@@ -208,10 +209,18 @@ def test_stage_slices_match_whole_table(
         _check_stage(tmp, path, n_files, columns, where, repeat)
 
 
-def test_link_prediction_intersect_path_matches_wedge_path(spark):
+@pytest.mark.parametrize(
+    "op, top_k",
+    [
+        ("link_prediction_jaccard", 50),
+        ("link_prediction_resource_allocation", 20),
+    ],
+    ids=["jaccard", "ra"],
+)
+def test_link_prediction_intersect_path_matches_wedge_path(spark, op, top_k):
     """The broadcast-adjacency mapInArrow intersection path must be
     row-identical to the wedge shuffle path on the same input (same
-    counts, same IEEE jaccard doubles, same order)."""
+    counts, same IEEE jaccard doubles or ppm sums, same order)."""
     from akka_graph_db_spark.operators import analytics
 
     import __spark_entry__ as entry
@@ -221,13 +230,43 @@ def test_link_prediction_intersect_path_matches_wedge_path(spark):
     def run(forced):
         analytics._FORCE_LP_PATH = forced
         try:
-            return analytics.link_prediction_jaccard(
-                pairs, top_k=50, min_common=2, max_degree=100
+            return getattr(analytics, op)(
+                pairs, top_k=top_k, min_common=2, max_degree=100
             ).collect()
         finally:
             analytics._FORCE_LP_PATH = None
 
     assert run("intersect") == run("wedge")
+
+
+def test_lp_broadcast_bytes_match_budget(spark, monkeypatch):
+    """The CSR scorer broadcasts 25m + 16n + 8 bytes for n canonical
+    edges over m nodes: the byte budget written next to
+    ``_WEDGE_BROADCAST_MAX_EDGES``."""
+    from akka_graph_db_spark.operators import analytics
+
+    sc = spark.sparkContext
+    captured = []
+    broadcast = sc.broadcast
+
+    def capture(value):
+        captured.append(value)
+        return broadcast(value)
+
+    monkeypatch.setattr(sc, "broadcast", capture)
+    monkeypatch.setattr(analytics, "_FORCE_LP_PATH", "intersect")
+    # a reversed duplicate and a self-loop canonicalize away: n = 7
+    # canonical edges over m = 7 nodes
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 1), (10, 11),
+         (2, 1), (4, 4)],
+        "a bigint, b bigint",
+    )
+    analytics.link_prediction_jaccard(pairs, min_common=1).collect()
+    (value,) = captured
+    *arrays, _bound = value
+    n, m = 7, 7
+    assert sum(x.nbytes for x in arrays) == 25 * m + 16 * n + 8
 
 
 def test_link_prediction_intersect_bipartite_mode(spark):

@@ -35,7 +35,7 @@ AUDITED = [
     ("quantized_topk", "int8-quantized cosine (broadcast queries)"),
     ("range_join_clicks", "bucketed range join (equi, not nested-loop)"),
     ("salted_join_orders", "16-way salted skew join"),
-    ("link_prediction_parts", "wedge join + broadcast degree join"),
+    ("link_prediction_parts", "broadcast-CSR mapInArrow Jaccard scorer"),
     ("length_quantiles", "exact percentile aggregation"),
     ("tpch_q1", "scan-heavy aggregate (date pushdown)"),
     ("tpch_q3", "selective 3-way broadcast join + top-k"),
@@ -82,7 +82,7 @@ AUDITED = [
     ("tpch_q11", "1-row broadcast scalar threshold HAVING"),
     ("tpch_q20", "nested semi-join chain (dominant supplier)"),
     ("tpch_q21", "per-order distinct aggregation (no correlated probes)"),
-    ("link_prediction_auto", "degree-histogram-derived wedge cap"),
+    ("link_prediction_auto", "degree-histogram-derived cap, CSR scorer"),
     ("dedup_policy_sweep", "3 keep policies over one clustering"),
     ("semantic_prune", "cluster-bounded integer-exact cosine prune"),
     ("coreness_parts", "h-index rounds: neighbor join + sorted-list agg"),
@@ -124,7 +124,7 @@ AUDITED = [
     ("fastrp_parts", "integer FastRP (node,dim) supersteps"),
     ("phrase_search", "positional-posting intersection"),
     ("entity_linkage_parts", "blocking-key ER + levenshtein verify"),
-    ("ra_link_prediction", "integer-ppm RA wedge scoring"),
+    ("ra_link_prediction", "broadcast-CSR mapInArrow integer-ppm RA"),
     ("degree_anomalies_parts", "histogram median/MAD outliers"),
     ("rolling_active_users", "broadcast day-spine range join"),
     ("scd2_user_state", "gaps-and-islands SCD2 intervals"),
